@@ -61,6 +61,7 @@ from spark_streaming_spark.operators import udtf_ops as UDTF
 from spark_streaming_spark.operators import windows as WIN
 from spark_streaming_spark.operators import wordcount as W
 from spark_streaming_spark.sources.batch import load_table
+from spark_streaming_spark.streaming.replay import Run
 
 SMOKE_SF_DIR = "/root/testdata/sf0.001"
 
@@ -196,67 +197,25 @@ def _misc_jsonl_sink(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _misc_replay_members():
-    """The three structurally-special streaming singletons (polled
-    fake-Kafka runner, RocksDB-provider wordcount, custom-sink
-    roundtrip) — each a BLOCKING runner with no startable handle, so
-    they co-schedule via :func:`_threaded_group` instead of
-    :func:`_cosched_group`."""
+    """The three structurally-special streaming singletons — each a
+    BLOCKING runner with no startable handle, so the group runs them on
+    threads (:func:`_run_threads`) instead of through replay.run_all,
+    and each keeps its own reason for not sharing a query: the polled
+    fake-Kafka runner (processing-time trigger) watches global query
+    progress, the RocksDB wordcount swaps the session's
+    state-store provider conf for its run, and the custom-sink
+    roundtrip exercises the custom Python writer's blocking two-phase
+    commit end-to-end."""
     return {
-        "kafka_wordcount": _misc_kafka_wordcount,
-        "wordcount_rocksdb": _misc_wordcount_rocksdb,
-        "jsonl_sink": _misc_jsonl_sink,
+        # Kafka wire-path: fake_kafka Python DataSource (exact Kafka
+        # source schema) → decode_kafka → tokenize → count
+        "streaming_kafka_wordcount": _misc_kafka_wordcount,
+        # provider parity: same pipeline, RocksDB state store
+        "streaming_wordcount_rocksdb": _misc_wordcount_rocksdb,
+        # the sink's STREAMING spelling: per-epoch idempotent manifest
+        # accumulation through foreachBatch (round-5 VERDICT #3)
+        "streaming_jsonl_sink": _misc_jsonl_sink,
     }
-
-
-def _threaded_group(spark: SparkSession, sf_dir: str, group: str,
-                    members: dict, want: str) -> DataFrame:
-    """_cosched_group for BLOCKING runners: members are plain
-    ``fn(spark, sf_dir) -> DataFrame`` callables run concurrently on
-    Spark's thread-safe scheduler (overlapping each runner's fixed
-    replay/trigger/commit latency), with the same redeem-once and
-    fail-loudly contract. Provider-context note: the RocksDB member
-    flips the session's state-store provider around its query start; a
-    sibling starting in that window may also get RocksDB — harmless BY
-    THE ENTRY'S OWN CONTRACT (provider choice must never change
-    results; that invariance is what the rocksdb entry proves)."""
-    from concurrent.futures import ThreadPoolExecutor
-
-    key = (group, sf_dir, spark.sparkContext.applicationId)
-    got = _COSCHED_RESULTS.get(key)
-    if got is None or want in got["redeemed"]:
-        with ThreadPoolExecutor(max_workers=len(members)) as ex:
-            futs = {n: ex.submit(fn, spark, sf_dir)
-                    for n, fn in members.items()}
-            results, err = {}, None
-            for n, f in futs.items():
-                try:
-                    results[n] = f.result(timeout=600)
-                except Exception as e:  # noqa: BLE001 — drain the rest
-                    if err is None:
-                        err = e
-        if err is not None:
-            raise err
-        got = {"results": results, "redeemed": set()}
-        _COSCHED_RESULTS[key] = got
-    got["redeemed"].add(want)
-    return got["results"][want]
-
-
-def _q_streaming_kafka_wordcount(spark: SparkSession,
-                                 sf_dir: str) -> DataFrame:
-    return _threaded_group(spark, sf_dir, "misc_replays",
-                           _misc_replay_members(), "kafka_wordcount")
-
-
-def _q_streaming_wordcount_rocksdb(spark: SparkSession,
-                                   sf_dir: str) -> DataFrame:
-    return _threaded_group(spark, sf_dir, "misc_replays",
-                           _misc_replay_members(), "wordcount_rocksdb")
-
-
-def _q_streaming_jsonl_sink(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return _threaded_group(spark, sf_dir, "misc_replays",
-                           _misc_replay_members(), "jsonl_sink")
 
 
 def _q_sql_cosine_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -425,36 +384,6 @@ def _q_part_cheapest_hops(spark: SparkSession, sf_dir: str) -> DataFrame:
     return GRKm.cheapest_hops(edges, seeds, n_rounds=3)
 
 
-def _q_streaming_events_asof_status(spark: SparkSession,
-                                    sf_dir: str) -> DataFrame:
-    """The as-of-time enrichment SERVED continuously: each micro-batch
-    of facts stream-static hash-joins the prebuilt SCD2 history (the
-    dimension artifact a pipeline publishes, localCheckpointed once) on
-    the business key + interval residual. Stateless per batch → append
-    mode; the union of appended batches equals the batch join — shared
-    oracle."""
-    return _cosched_group(spark, sf_dir, "rs_events",
-                          _rs_events_members(), "events_asof")
-
-
-def _start_foreach_sink(stream_df: DataFrame, batch_fn, read_fn):
-    """Start a foreachBatch versioned-publish sink and hand back the
-    co-schedulable _SinkRun handle (the _fold_starter protocol, for
-    members whose chunk source / sink wiring is bespoke)."""
-    from spark_streaming_spark.streaming import replay
-
-    ckpt = replay.scratch_dir("spark_ckpt_")
-    q = (
-        stream_df.writeStream
-        .foreachBatch(batch_fn)
-        .outputMode("append")
-        .option("checkpointLocation", ckpt)
-        .trigger(availableNow=True)
-        .start()
-    )
-    return _SinkRun(q, read_fn, ckpt)
-
-
 def _merge_fold_members():
     """Co-scheduled group for the versioned-publish MERGE sinks (SCD1 /
     SCD2 / CDC feed / changing-history as-of / KMV registers): each
@@ -481,7 +410,7 @@ def _merge_fold_members():
         state_dir = _scratch("scd1_state_")
         stream = replay.stream_from_dir(spark, chunk_dir,
                                         files_per_trigger=2)
-        return _start_foreach_sink(
+        return replay.start_foreach(
             stream,
             scd1_merge_sink(spark, cust, "c_custkey", state_dir),
             lambda: _read_current_state(spark, state_dir))
@@ -491,7 +420,7 @@ def _merge_fold_members():
         state_dir = _scratch("scd2_state_")
         stream = replay.stream_from_dir(spark, chunk_dir,
                                         files_per_trigger=2)
-        return _start_foreach_sink(
+        return replay.start_foreach(
             stream.select("user_id", "ts", "event_type"),
             scd2_merge_sink(spark, "user_id", "ts", ["event_type"],
                             state_dir),
@@ -503,7 +432,7 @@ def _merge_fold_members():
         log_dir = _scratch("cdc_log_")
         stream = replay.stream_from_dir(spark, chunk_dir,
                                         files_per_trigger=1)
-        return _start_foreach_sink(
+        return replay.start_foreach(
             stream.select("user_id", "ts", "event_id", "event_type"),
             cdc_feed_sink(spark, state_dir, log_dir),
             lambda: spark.read.parquet(os.path.join(log_dir, "epoch_*")))
@@ -514,7 +443,7 @@ def _merge_fold_members():
         log_dir = _scratch("scd2_asof_log_")
         stream = replay.stream_from_dir(spark, chunk_dir,
                                         files_per_trigger=1)
-        return _start_foreach_sink(
+        return replay.start_foreach(
             stream.select("event_id", "user_id", "ts", "event_type",
                           "value"),
             scd2_asof_enrich_sink(
@@ -528,7 +457,7 @@ def _merge_fold_members():
         state_dir = _scratch("kmv_state_")
         stream = replay.stream_from_dir(spark, chunk_dir,
                                         files_per_trigger=2)
-        return _start_foreach_sink(
+        return replay.start_foreach(
             stream.select("l_returnflag", "l_quantity",
                           "l_orderkey", "l_linenumber"),
             kmv_sketch_sink(spark, "l_returnflag", "l_quantity",
@@ -550,7 +479,7 @@ def _merge_fold_members():
         state_dir = _scratch("benford_state_")
         stream = replay.stream_from_dir(spark, chunk_dir,
                                         files_per_trigger=2)
-        return _start_foreach_sink(
+        return replay.start_foreach(
             stream.select("o_totalprice"),
             counts_fold_sink(
                 spark,
@@ -571,7 +500,7 @@ def _merge_fold_members():
         state_dir = _scratch("fkaudit_state_")
         stream = replay.stream_from_dir(spark, chunk_dir,
                                         files_per_trigger=2)
-        return _start_foreach_sink(
+        return replay.start_foreach(
             stream.select("o_custkey"),
             counts_fold_sink(
                 spark,
@@ -593,7 +522,7 @@ def _merge_fold_members():
         state_dir = _scratch("ols_state_")
         stream = replay.stream_from_dir(spark, chunk_dir,
                                         files_per_trigger=2)
-        return _start_foreach_sink(
+        return replay.start_foreach(
             stream.select("l_extendedprice", "l_quantity", "l_discount"),
             counts_fold_sink(
                 spark, RG.ols_moments, ["k"],
@@ -608,7 +537,7 @@ def _merge_fold_members():
         state_dir = _scratch("gini_state_")
         stream = replay.stream_from_dir(spark, chunk_dir,
                                         files_per_trigger=2)
-        return _start_foreach_sink(
+        return replay.start_foreach(
             stream.select("o_custkey", "o_totalprice"),
             counts_fold_sink(spark, RK.customer_cents, ["cust"],
                              ["cents"], state_dir),
@@ -624,7 +553,7 @@ def _merge_fold_members():
         state_dir = _scratch("hhi_state_")
         stream = replay.stream_from_dir(spark, chunk_dir,
                                         files_per_trigger=2)
-        return _start_foreach_sink(
+        return replay.start_foreach(
             stream.select("o_custkey", "o_totalprice"),
             counts_fold_sink(
                 spark, lambda b: A.market_cents(cust, b, nat),
@@ -650,7 +579,7 @@ def _merge_fold_members():
                              F.col("l_partkey").alias("part"))
                     .agg(F.count("*").cast("long").alias("w")))
 
-        return _start_foreach_sink(
+        return replay.start_foreach(
             stream.select("l_orderkey", "l_partkey"),
             counts_fold_sink(spark, batch_edges, ["cust", "part"],
                              ["w"], state_dir),
@@ -664,7 +593,7 @@ def _merge_fold_members():
         state_dir = _scratch("km_state_")
         stream = replay.stream_from_dir(spark, chunk_dir,
                                         files_per_trigger=2)
-        return _start_foreach_sink(
+        return replay.start_foreach(
             stream.select("o_custkey", "o_orderdate"),
             counts_fold_sink(
                 spark, SV.order_day_pairs, ["cust", "day"], ["cnt"],
@@ -682,7 +611,7 @@ def _merge_fold_members():
         state_dir = _scratch("fuzzy_state_")
         stream = replay.stream_from_dir(spark, chunk_dir,
                                         files_per_trigger=2)
-        return _start_foreach_sink(
+        return replay.start_foreach(
             stream.select("c_name"),
             counts_fold_sink(
                 spark,
@@ -701,7 +630,7 @@ def _merge_fold_members():
         state_dir = _scratch("shiplat_state_")
         stream = replay.stream_from_dir(spark, chunk_dir,
                                         files_per_trigger=2)
-        return _start_foreach_sink(
+        return replay.start_foreach(
             stream.select("l_orderkey", "l_shipdate"),
             counts_fold_sink(
                 spark, lambda b: TS.ship_gap_counts(b, od),
@@ -717,7 +646,7 @@ def _merge_fold_members():
         state_dir = _scratch("transit_state_")
         stream = replay.stream_from_dir(spark, chunk_dir,
                                         files_per_trigger=2)
-        return _start_foreach_sink(
+        return replay.start_foreach(
             stream.select("l_orderkey", "l_shipdate"),
             counts_fold_sink(
                 spark, lambda b: TS.transit_daily_deltas(b, od),
@@ -725,96 +654,121 @@ def _merge_fold_members():
             lambda: _read_current_state(spark, state_dir))
 
     return {
-        "scd1": (scd1_start, None),
-        "scd2": (scd2_start, None),
-        "cdc": (cdc_start, None),
-        "scd2_asof": (scd2_asof_start, None),
-        "kmv": (kmv_start, kmv_post),
-        "benford": (benford_start, benford_post),
+        # The SAME merge maintained CONTINUOUSLY: the update stream arrives
+        # in micro-batches and the foreachBatch SCD1 sink
+        # (streaming/pipelines.scd1_merge_sink — the reference's
+        # PersistWordCount MySQL-upsert pattern, generalized to whole-row
+        # type-1 merges with atomic versioned publishes) folds each batch
+        # into the accumulated table. Update keys are unique, so the final
+        # state equals the one-shot batch merge — shared oracle.
+        "streaming_scd1_merge": (scd1_start, None),
+        # The SCD2 history maintained CONTINUOUSLY: the change feed arrives
+        # in event-time-ordered micro-batches (a live feed's delivery order
+        # — scd2_merge's forward contract) and the foreachBatch SCD2 sink
+        # (streaming/pipelines.scd2_merge_sink) folds each batch into the
+        # versioned state with atomic CURRENT-marker publishes. Final state
+        # equals the one-shot rebuild — shared oracle.
+        "streaming_scd2_merge": (scd2_start, None),
+        # Change-data-feed production: three fixed-cutoff micro-batches fold
+        # into the per-user state while the sink emits each epoch's I/U rows
+        # (streaming/pipelines.cdc_feed_sink). The returned feed is the
+        # accumulated log; the oracle reconstructs every epoch's diff from
+        # snapshots at the same cutoffs (state fold is associative, so
+        # folded state ≡ one-shot snapshot per boundary).
+        # the change feed PRODUCED continuously: per-epoch I/U rows
+        # from consecutive folded-state versions (Delta-CDF analog)
+        "streaming_cdc_feed": (cdc_start, None),
+        # As-of enrichment against a CHANGING SCD2 history: three fixed-
+        # cutoff micro-batches each fold their dimension changes into the
+        # versioned history and THEN as-of join their facts against the
+        # just-updated state (streaming/pipelines.scd2_asof_enrich_sink) —
+        # epoch n's facts pick up versions created IN epoch n, which the
+        # frozen-artifact spelling (`streaming_events_asof_status`) cannot.
+        # The accumulated per-epoch feed — epoch column included — equals
+        # the batch as-of join with epoch derived from the fact timestamp,
+        # so the whole feed is hash-checked by one SQL oracle (per-epoch
+        # verified, like `streaming_cdc_feed`).
+        # as-of enrichment against a CHANGING history: fold dim changes
+        # into SCD2 state, then join the same epoch's facts against the
+        # just-updated versions (per-epoch hash-verified feed)
+        "streaming_scd2_asof_feed": (scd2_asof_start, None),
+        # The KMV quantile sketch maintained CONTINUOUSLY: lineitem arrives
+        # in micro-batches, each folding its bottom-k registers into the
+        # per-group state (streaming/pipelines.kmv_sketch_sink). The merge
+        # is exact, so the final registers — and hence the quantile
+        # estimates — equal the one-shot batch sketch: shared oracle with
+        # `kmv_quantity_quantiles`.
+        "streaming_kmv_quantiles": (kmv_start, kmv_post),
+        # The Benford audit maintained CONTINUOUSLY: per-digit counts are
+        # additive under corpus partition, so each micro-batch of orders
+        # folds its 9-row digit summary into state (the generic
+        # counts_fold_sink) and the conformance ppm table is computed at
+        # read — the always-on amount-quality monitor. Fold exact ⇒ shares
+        # the batch oracle verbatim.
+        "streaming_benford": (benford_start, benford_post),
         # FK audit maintained CONTINUOUSLY: child-key counts are
         # additive, the parent side is static — fold counts per batch,
         # audit at read; shares the batch edge's oracle shape
-        "fkaudit": (fkaudit_start, fkaudit_post),
+        "streaming_referential_audit": (fkaudit_start, fkaudit_post),
         # Kaplan-Meier maintained CONTINUOUSLY: the (cust, day) pair
         # set is a union-semilattice (per-batch pair counts fold to the
         # one-shot distinct set), subjects + product-limit tail at
         # read — shares kaplan_meier_repurchase's exact oracle
-        "km_days": (km_start, km_post),
+        "streaming_kaplan_meier": (km_start, km_post),
         # the OLS model re-fit CONTINUOUSLY: the 10-cell exact moment
         # row is additive, so each micro-batch folds its moments and
         # the Cramer tail re-solves at read — online training with a
         # constant-size state; shares ols_price_model's exact oracle
-        "ols_moments": (ols_start,
-                        lambda df, s, d: RG.ols_from_moments(df)),
+        "streaming_ols_refit": (
+            ols_start, lambda df, s, d: RG.ols_from_moments(df)),
         # HITS maintained CONTINUOUSLY: bipartite edge weights are
         # additive counts (stream-static join + fold, the
         # streaming_textrank discipline), iterations at read over the
         # folded totals; shares hits_scores' exact oracle
-        "hits_edges": (hits_start,
-                       lambda df, s, d: GRK.hits_from_edges(df)),
-        # Gini maintained CONTINUOUSLY: per-customer cents are
-        # additive; the global-rank identity tail runs at read
-        "gini_cents": (gini_start,
-                       lambda df, s, d: RK.gini_from_customer_cents(df)),
-        # HHI maintained CONTINUOUSLY: per-nation cents are additive
-        # (stream-static broadcast dims per batch); cleared-denominator
-        # tail at read
-        "hhi_cents": (hhi_start,
-                      lambda df, s, d: A.hhi_from_market_cents(df)),
+        "streaming_hits": (
+            hits_start, lambda df, s, d: GRK.hits_from_edges(df)),
+        # the in-transit concurrency monitor maintained CONTINUOUSLY:
+        # sweep-line boundary deltas are additive counts, so per-batch
+        # delta tables fold cell-wise to the one-shot table; the spine
+        # + running-sum + monthly-peak tail runs at read — shares
+        # transit_concurrency_peaks' exact oracle
+        "streaming_transit_peaks": (
+            transit_start,
+            lambda df, s, d: TS.transit_peaks_from_deltas(df)),
+        # the latency SLA maintained CONTINUOUSLY: the (month, gap)
+        # histogram is additive, rank selection over the folded
+        # bounded histogram at read — shares ship_latency_percentiles'
+        # exact oracle
+        "streaming_ship_latency": (
+            shiplat_start,
+            lambda df, s, d: TS.ship_latency_from_gap_counts(df)),
         # the SymSpell variant index maintained CONTINUOUSLY:
         # batch-disjoint name sets fold by union to the one-shot
         # deletion-neighborhood index; the candidate join + levenshtein
         # verify run at read — shares fuzzy_customer_pairs' oracle
-        "fuzzy_variants": (
+        "streaming_fuzzy_pairs": (
             fuzzy_start,
             lambda df, s, d: DD.fuzzy_pairs_from_variants(
                 df.select("name", "v"))),
         # ALIAS member: linkage decisions read off the SAME folded
         # variant index (weighting tail over the static attribute
         # table at read); shares record_linkage_scores' oracle
-        "fuzzy_linkage": (
-            "fuzzy_variants",
+        "streaming_record_linkage": (
+            "streaming_fuzzy_pairs",
             lambda df, s, d: DD.linkage_scores_from_pairs(
                 DD.fuzzy_pairs_from_variants(df.select("name", "v")),
                 load_table(s, d, "customer"))),
-        # the in-transit concurrency monitor maintained CONTINUOUSLY:
-        # sweep-line boundary deltas are additive counts, so per-batch
-        # delta tables fold cell-wise to the one-shot table; the spine
-        # + running-sum + monthly-peak tail runs at read — shares
-        # transit_concurrency_peaks' exact oracle
-        "transit_deltas": (transit_start,
-                           lambda df, s, d:
-                           TS.transit_peaks_from_deltas(df)),
-        # the latency SLA maintained CONTINUOUSLY: the (month, gap)
-        # histogram is additive, rank selection over the folded
-        # bounded histogram at read — shares ship_latency_percentiles'
-        # exact oracle
-        "ship_latency": (shiplat_start,
-                         lambda df, s, d:
-                         TS.ship_latency_from_gap_counts(df)),
+        # Gini maintained CONTINUOUSLY: per-customer cents are
+        # additive; the global-rank identity tail runs at read — shares
+        # the batch gini oracle exactly
+        "streaming_gini": (
+            gini_start, lambda df, s, d: RK.gini_from_customer_cents(df)),
+        # HHI maintained CONTINUOUSLY: per-nation cents are additive
+        # (stream-static broadcast dims per batch); cleared-denominator
+        # tail at read — shares the batch HHI oracle exactly
+        "streaming_hhi": (
+            hhi_start, lambda df, s, d: A.hhi_from_market_cents(df)),
     }
-
-
-def _q_streaming_scd2_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The SCD2 history maintained CONTINUOUSLY: the change feed arrives
-    in event-time-ordered micro-batches (a live feed's delivery order —
-    scd2_merge's forward contract) and the foreachBatch SCD2 sink
-    (streaming/pipelines.scd2_merge_sink) folds each batch into the
-    versioned state with atomic CURRENT-marker publishes. Final state
-    equals the one-shot rebuild — shared oracle."""
-    return _cosched_group(spark, sf_dir, "merge_folds",
-                          _merge_fold_members(), "scd2")
-
-
-def _q_streaming_benford(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The Benford audit maintained CONTINUOUSLY: per-digit counts are
-    additive under corpus partition, so each micro-batch of orders
-    folds its 9-row digit summary into state (the generic
-    counts_fold_sink) and the conformance ppm table is computed at
-    read — the always-on amount-quality monitor. Fold exact ⇒ shares
-    the batch oracle verbatim."""
-    return _cosched_group(spark, sf_dir, "merge_folds",
-                          _merge_fold_members(), "benford")
 
 
 def _cutoff_chunked_events(spark: SparkSession, sf_dir: str) -> str:
@@ -835,55 +789,6 @@ def _cutoff_chunked_events(spark: SparkSession, sf_dir: str) -> str:
             ev, ["2024-01-11", "2024-01-21"])
         _ORDERED_CHUNK_CACHE[key] = _publish_chunks(d, final)
     return _ORDERED_CHUNK_CACHE[key]
-
-
-def _q_streaming_scd2_asof_feed(spark: SparkSession,
-                                sf_dir: str) -> DataFrame:
-    """As-of enrichment against a CHANGING SCD2 history: three fixed-
-    cutoff micro-batches each fold their dimension changes into the
-    versioned history and THEN as-of join their facts against the
-    just-updated state (streaming/pipelines.scd2_asof_enrich_sink) —
-    epoch n's facts pick up versions created IN epoch n, which the
-    frozen-artifact spelling (`streaming_events_asof_status`) cannot.
-    The accumulated per-epoch feed — epoch column included — equals the
-    batch as-of join with epoch derived from the fact timestamp, so the
-    whole feed is hash-checked by one SQL oracle (per-epoch verified,
-    like `streaming_cdc_feed`)."""
-    return _cosched_group(spark, sf_dir, "merge_folds",
-                          _merge_fold_members(), "scd2_asof")
-
-
-def _q_streaming_cdc_feed(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Change-data-feed production: three fixed-cutoff micro-batches
-    fold into the per-user state while the sink emits each epoch's
-    I/U rows (streaming/pipelines.cdc_feed_sink). The returned feed is
-    the accumulated log; the oracle reconstructs every epoch's diff
-    from snapshots at the same cutoffs (state fold is associative, so
-    folded state ≡ one-shot snapshot per boundary)."""
-    return _cosched_group(spark, sf_dir, "merge_folds",
-                          _merge_fold_members(), "cdc")
-
-
-def _q_streaming_dynamic_sessions(spark: SparkSession,
-                                  sf_dir: str) -> DataFrame:
-    """Dynamic-gap session windows on the stream: the same per-event
-    gap expression inside the streaming session aggregate; ordered
-    replay + sentinel finalize every session, so the appended output
-    equals the batch dynamic_session_windows — shared oracle."""
-    return _cosched_group(spark, sf_dir, "ord_events", _ord_members(),
-                          "dynamic_sessions")
-
-
-def _q_streaming_scd1_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The SAME merge maintained CONTINUOUSLY: the update stream arrives
-    in micro-batches and the foreachBatch SCD1 sink
-    (streaming/pipelines.scd1_merge_sink — the reference's
-    PersistWordCount MySQL-upsert pattern, generalized to whole-row
-    type-1 merges with atomic versioned publishes) folds each batch into
-    the accumulated table. Update keys are unique, so the final state
-    equals the one-shot batch merge — shared oracle."""
-    return _cosched_group(spark, sf_dir, "merge_folds",
-                          _merge_fold_members(), "scd1")
 
 
 def _run_streamed(spark: SparkSession, sf_dir: str, table: str, transform,
@@ -1086,87 +991,6 @@ def _read_current_state(spark: SparkSession, state_dir: str) -> DataFrame:
             os.path.join(state_dir, fh.read().strip()))
 
 
-def _fold_starter(table: str, select_fn, sink_factory, read_factory,
-                  prefix: str):
-    """Co-schedulable starter for the versioned-publish fold sinks:
-    ``select_fn(stream) -> stream_df`` projects the micro-batch input,
-    ``sink_factory(spark, state_dir) -> foreachBatch fn`` builds the
-    fold, ``read_factory(spark, state_dir)() -> DataFrame`` loads the
-    final state once the query drains."""
-    def start(spark: SparkSession, sf_dir: str):
-        import atexit
-        import shutil
-
-        from spark_streaming_spark.streaming import replay
-
-        chunk_dir = _chunked_table(spark, sf_dir, table, 3)
-        state_dir = replay.scratch_dir(prefix)
-        atexit.register(shutil.rmtree, state_dir, ignore_errors=True)
-        ckpt = replay.scratch_dir("spark_ckpt_")
-        stream = replay.stream_from_dir(spark, chunk_dir,
-                                        files_per_trigger=2)
-        q = (
-            select_fn(stream)
-            .writeStream
-            .foreachBatch(sink_factory(spark, state_dir))
-            .outputMode("append")
-            .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-            .start()
-        )
-        return _SinkRun(q, read_factory(spark, state_dir), ckpt)
-    return start
-
-
-def _foreach_starter(table: str, batch_fn_factory):
-    """Co-schedulable starter over replay.start_foreach_to_parquet:
-    ``batch_fn_factory(spark, sf_dir)`` builds the per-batch function
-    (letting it prebuild broadcast artifacts first)."""
-    def start(spark: SparkSession, sf_dir: str):
-        from spark_streaming_spark.streaming import replay
-
-        fn = batch_fn_factory(spark, sf_dir)
-        chunk_dir = _chunked_table(spark, sf_dir, table, 3)
-        stream = replay.stream_from_dir(spark, chunk_dir,
-                                        files_per_trigger=2)
-        return replay.start_foreach_to_parquet(stream, fn,
-                                               state_partitions=4)
-    return start
-
-
-class _MergedRun:
-    """start/finish handle for :func:`_merged_fold_starter`: ONE
-    streaming query hosting every sibling per-batch sink; ``finish``
-    awaits it and returns {member: DataFrame} via each member's own
-    read_fn."""
-
-    def __init__(self, q, read_fns, ckpt):
-        self.q = q
-        self.read_fns = read_fns
-        self.ckpt = ckpt
-
-    def abort(self) -> None:
-        import shutil
-
-        try:
-            self.q.stop()
-        except Exception:  # noqa: BLE001 — cleanup must not mask the cause
-            pass
-        shutil.rmtree(self.ckpt, ignore_errors=True)
-
-    def finish(self, timeout_sec: int = 300) -> dict:
-        import shutil
-
-        try:
-            if not self.q.awaitTermination(timeout_sec):
-                raise TimeoutError(
-                    f"merged fold replay did not finish in {timeout_sec}s")
-        finally:
-            self.q.stop()
-            shutil.rmtree(self.ckpt, ignore_errors=True)
-        return {n: fn() for n, fn in self.read_fns.items()}
-
-
 def _merged_fold_starter(table: str, subs_factory):
     """ONE availableNow streaming query hosting EVERY sibling fold /
     per-batch sink of a co-scheduled group (r15, VERDICT r14 "Next
@@ -1183,7 +1007,7 @@ def _merged_fold_starter(table: str, subs_factory):
     on a small driver thread pool per epoch (guide §2.6) so their jobs
     overlap on the shared scheduler just as the N concurrent queries'
     did; one failed sink fails the query, and with it the whole group,
-    loudly (the run_many_to_parquet coupling discipline). The batch is
+    loudly (the replay.run_all coupling discipline). The batch is
     localCheckpointed once per epoch so the chunk is scanned/decoded
     once, not once per member — at cluster scale this is the real win:
     N sinks over ONE source scan per trigger.
@@ -1192,7 +1016,8 @@ def _merged_fold_starter(table: str, subs_factory):
     with ``batch_op(batch_df, epoch_id)`` the member's per-epoch sink
     and ``read_fn()`` its final-state loader. The handle's ``finish``
     returns {name: DataFrame}; group members alias the anchor and
-    extract their own frame."""
+    extract their own frame. One query hosts every sink, so its await
+    budget is one sink's budget times their count."""
     def start(spark: SparkSession, sf_dir: str):
         from concurrent.futures import ThreadPoolExecutor
 
@@ -1200,11 +1025,10 @@ def _merged_fold_starter(table: str, subs_factory):
 
         subs = subs_factory(spark, sf_dir)
         chunk_dir = _chunked_table(spark, sf_dir, table, 3)
-        ckpt = replay.scratch_dir("spark_ckpt_")
         stream = replay.stream_from_dir(spark, chunk_dir,
                                         files_per_trigger=2)
 
-        def run_all(batch_df: DataFrame, epoch_id: int) -> None:
+        def run_subs(batch_df: DataFrame, epoch_id: int) -> None:
             shared = batch_df.localCheckpoint(eager=True)
             with ThreadPoolExecutor(
                     max_workers=min(16, len(subs))) as ex:
@@ -1213,22 +1037,18 @@ def _merged_fold_starter(table: str, subs_factory):
                 for f in futs:
                     f.result()  # re-raise the first failure
 
-        q = (
-            stream.writeStream
-            .foreachBatch(run_all)
-            .outputMode("append")
-            .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-            .start()
-        )
-        return _MergedRun(q, {n: r for n, (_op, r) in subs.items()}, ckpt)
+        run = replay.start_foreach(
+            stream, run_subs,
+            lambda: {n: read() for n, (_op, read) in subs.items()})
+        run.budget_s = replay.SINK_BUDGET_S * len(subs)
+        return run
     return start
 
 
 def _sink_sub(spark, sink_factory, prefix, select_fn):
     """A versioned-publish sink member of a merged replay: own state
-    dir, own publish protocol, same fold as its standalone
-    _fold_starter spelling. ``sink_factory(spark, state_dir)`` builds
+    dir, own publish protocol, same fold as a standalone fold-sink
+    query. ``sink_factory(spark, state_dir)`` builds
     the foreachBatch fn (counts_fold_sink / theta_sketch_sink / ...)."""
     import atexit
     import shutil
@@ -1256,27 +1076,11 @@ def _fold_sub(spark, batch_counts, keys, sums, prefix, select_fn,
 
 def _foreach_sub(spark, batch_fn):
     """A per-batch-accumulation member of a merged replay: the
-    epoch-partitioned idempotent parquet sink of
-    replay.start_foreach_to_parquet, hosted in the shared query."""
-    import atexit
-    import shutil
-
+    epoch-partitioned idempotent parquet sink
+    (replay.epoch_parquet_sink), hosted in the shared query."""
     from spark_streaming_spark.streaming import replay
 
-    out = replay.scratch_dir("spark_stream_out_")
-    atexit.register(shutil.rmtree, out, ignore_errors=True)
-
-    def op(batch_df: DataFrame, epoch_id: int) -> None:
-        (
-            batch_fn(batch_df)
-            .withColumn("epoch_id", F.lit(epoch_id))
-            .write.mode("overwrite")
-            .option("partitionOverwriteMode", "dynamic")
-            .partitionBy("epoch_id")
-            .parquet(out)
-        )
-
-    return op, (lambda: spark.read.parquet(out).drop("epoch_id"))
+    return replay.epoch_parquet_sink(spark, batch_fn)
 
 
 def _rs_starter(table: str, transform_factory, output_mode: str = "complete",
@@ -1334,26 +1138,72 @@ def _rs_events_members():
         "events", lambda s, d: sliding_hot_words, "update",
         last_epoch_keys=["w_start", "w_end", "event_type"])
     return {
-        "pivot": (_rs_starter("events",
-                              lambda s, d: pivot_counts_stream, "update",
-                              last_epoch_keys=["user_id"]), None),
-        "sliding": (sliding_spec, None),
-        "top3": (sliding_spec,
-                 lambda df, s, d: WIN.rank_top_k(df, 3)),
-        "blacklist": (_rs_starter("events", bl_factory, "append"), None),
-        "conversions": (_rs_starter(
+        # The as-of-time enrichment SERVED continuously: each micro-batch of
+        # facts stream-static hash-joins the prebuilt SCD2 history (the
+        # dimension artifact a pipeline publishes, localCheckpointed once)
+        # on the business key + interval residual. Stateless per batch →
+        # append mode; the union of appended batches equals the batch join —
+        # shared oracle.
+        "streaming_events_asof_status": (
+            _rs_starter("events", asof_factory, "append"), None),
+        # Pivot maintained on a stream: one state row of per-type counters
+        # per user. UPDATE mode — each trigger emits only users whose
+        # counters changed (complete mode re-emits every user ever seen per
+        # trigger: O(total state) sink traffic, unusable at billions of keys
+        # — round-3 VERDICT #2); the final state is recovered by the
+        # last-epoch-wins merge over the epoch-partitioned idempotent sink
+        # and equals the batch event_type_pivot (shared oracle).
+        # pivot on a stream: fixed-category conditional agg (the .pivot()
+        # API needs the key set up front and is not streamable)
+        "streaming_pivot_counts": (_rs_starter(
+            "events", lambda s, d: pivot_counts_stream, "update",
+            last_epoch_keys=["user_id"]), None),
+        "streaming_blacklist_filter": (
+            _rs_starter("events", bl_factory, "append"), None),
+        # Sliding-window counts in UPDATE mode + last-epoch-wins: complete
+        # mode re-emits EVERY window ever opened per trigger — O(stream
+        # lifetime) sink traffic on an unbounded stream (the r3 pivot
+        # argument, VERDICT #2, applies to time windows just as much as to
+        # user keys).
+        "streaming_sliding_counts": (sliding_spec, None),
+        # Top3HotProduct end-to-end as a stream: sliding-window agg in the
+        # streaming plan, partitioned top-k OUTSIDE it (rank over a
+        # streaming aggregate isn't a legal streaming plan — SURVEY.md
+        # §3.3/§4.3(2)). UPDATE mode + last-epoch-wins recovers the final
+        # per-window counts (changed-keys-only sink traffic — ranking the
+        # full window state inside foreachBatch on EVERY trigger, the old
+        # complete-mode spelling, is O(all windows ever) per trigger); the
+        # rank then runs ONCE over the recovered state. Same oracle as the
+        # batch hot_words_per_window top-3.
+        "streaming_top3_per_window": (
+            sliding_spec, lambda df, s, d: WIN.rank_top_k(df, 3)),
+        # Stream-stream interval self-join (click→purchase funnel): the
+        # capability the DStream reference could not express. Replayed
+        # without watermark so every match is retained (bounded input);
+        # production passes watermark= to bound state.
+        "streaming_click_purchase_join": (_rs_starter(
             "events", lambda s, d: CV.click_purchase_conversions,
             "append"), None),
-        "events_asof": (_rs_starter("events", asof_factory, "append"),
-                        None),
-        "daily_rollup": (_rs_starter(
+        # the continuous aggregate maintained CONTINUOUSLY: the same
+        # daily_event_rollup operator run as a streaming aggregation —
+        # the state store does the incremental maintenance; the final
+        # state equals the batch rollup (shared oracle)
+        # update mode + last-epoch-wins: per-trigger output is bounded
+        # by touched (day, type) cells, not every day ever seen
+        "streaming_daily_rollup": (_rs_starter(
             "events", lambda s, d: RAx.daily_event_rollup, "update",
             last_epoch_keys=["day", "event_type"]), None),
-        "histogram": (_rs_starter(
+        # the fixed-grid histogram maintained CONTINUOUSLY: same operator
+        # fn as a streaming aggregation on a derived (computed-bucket)
+        # key; final state equals the batch grid (shared oracle)
+        "streaming_histogram": (_rs_starter(
             "events", lambda s, d: ANx.event_value_histogram, "update",
             last_epoch_keys=["event_type", "bucket"]), None),
-        "value_tiers": (_rs_starter("events", tiers_factory,
-                                    "complete"), None),
+        # the SAME lookup per micro-batch: stream-static broadcast of
+        # the exploded tier grid into each trigger's equi join, counts
+        # finalized in complete mode — shared oracle
+        "streaming_value_tiers": (
+            _rs_starter("events", tiers_factory, "complete"), None),
     }
 
 
@@ -1362,10 +1212,19 @@ def _rs_docs_members():
     from spark_streaming_spark.streaming.pipelines import wordcount_stream
 
     return {
-        "wordcount": (_rs_starter(
+        # Running word count in UPDATE mode: per-trigger changed-word deltas
+        # + last-epoch-wins merge == the cumulative batch counts (same scale
+        # rationale as streaming_pivot_counts).
+        "streaming_wordcount": (_rs_starter(
             "documents", lambda s, d: wordcount_stream, "update",
             last_epoch_keys=["word"]), None),
-        "quality_filter": (_rs_starter(
+        # Corpus-prep quality rules applied INSIDE a stream: the same
+        # pipeline.quality_filter projection runs per micro-batch (append
+        # mode, stateless map — the shape of a continuously-ingesting corpus
+        # pipeline). Streamed output == batch output, so the entry shares
+        # the batch rule semantics; oracle = quality_filter SQL restricted
+        # to kept docs.
+        "streaming_quality_filter": (_rs_starter(
             "documents",
             lambda s, d: (lambda st:
                           PLo.quality_filter(st).filter(F.col("keep"))),
@@ -1400,8 +1259,6 @@ def _ord_members():
             .agg(F.max("ts")).first()[0]
         return df.filter(F.col("w_start") <= max_ts)
 
-    gap = (F.when(F.col("event_type") == "purchase",
-                  F.lit("2 minutes")).otherwise(F.lit("5 minutes")))
     def transitions_start(spark, sf_dir):
         import atexit
         import shutil
@@ -1413,25 +1270,17 @@ def _ord_members():
         chunk_dir = _ordered_chunked_events(spark, sf_dir)
         state_dir = replay.scratch_dir("trans_state_")
         atexit.register(shutil.rmtree, state_dir, ignore_errors=True)
-        ckpt = replay.scratch_dir("spark_ckpt_")
         stream = replay.stream_from_dir(spark, chunk_dir,
                                         files_per_trigger=2)
-        q = (
-            stream.filter(F.col("user_id") >= 0)
-            .select("user_id", "ts", "event_id", "event_type")
-            .writeStream
-            .foreachBatch(transition_fold_sink(spark, state_dir))
-            .outputMode("append")
-            .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-            .start()
-        )
 
         def read():
             with open(os.path.join(state_dir, "CURRENT")) as fh:
                 return spark.read.parquet(os.path.join(
                     state_dir, fh.read().strip(), "pairs"))
-        return _SinkRun(q, read, ckpt)
+        return replay.start_foreach(
+            stream.filter(F.col("user_id") >= 0)
+            .select("user_id", "ts", "event_id", "event_type"),
+            transition_fold_sink(spark, state_dir), read)
 
     def transitions_post(df, spark, sf_dir):
         totals = df.groupBy("from_type").agg(
@@ -1442,14 +1291,47 @@ def _ord_members():
             .alias("p_ppm"))
 
     return {
-        "transitions": (transitions_start, transitions_post),
-        "sessions": (_ord_starter(session_stream), drop_sentinels),
-        "dynamic_sessions": (
-            _ord_starter(lambda st: session_stream(st, gap=gap)),
+        # Append-mode event-time session windows: every session emitted
+        # exactly once as the watermark passes it; ordered replay + sentinel
+        # make the finalized stream output equal the batch session_windows
+        # oracle. Sentinel sessions are dropped in the post step, on the
+        # finalized batch result — inside the streaming plan the filter
+        # would push below the watermark.
+        "streaming_session_windows": (
+            _ord_starter(session_stream), drop_sentinels),
+        # Dynamic-gap session windows on the stream: the same per-event gap
+        # expression inside the streaming session aggregate; ordered replay
+        # + sentinel finalize every session, so the appended output equals
+        # the batch dynamic_session_windows — shared oracle.
+        "streaming_dynamic_sessions": (
+            _ord_starter(lambda st: session_stream(st, gap=F.when(
+                F.col("event_type") == "purchase", F.lit("2 minutes"))
+                .otherwise(F.lit("5 minutes")))),
             drop_sentinels),
-        "two_level": (_ord_starter(two_level_agg_stream), two_level_post),
-        "band_cooccurrence": (
+        # Chained stateful operators in one streaming query (two streaming
+        # aggregations back to back — SPARK-42105): level-1 tumbling counts
+        # per (window, type) feed a level-2 per-window rollup inside the
+        # SAME query. Ordered replay + sentinel finalize both levels;
+        # sentinel windows (past all real data) are dropped from the
+        # finalized batch result by the max-real-ts bound.
+        "streaming_two_level_agg": (
+            _ord_starter(two_level_agg_stream), two_level_post),
+        # The keyless band join as a STREAM-STREAM self-join: grid cells are
+        # the equality key Structured Streaming requires, the event-time
+        # range bound lets the watermark evict cell state (asof.
+        # band_cooccurrence_stream). Ordered replay keeps late-row filtering
+        # vacuous (watermark 4s > eps 2s covers the cross-batch boundary),
+        # so the inner-join append output equals the batch band join —
+        # shared oracle.
+        "streaming_band_cooccurrence": (
             _ord_starter(band_cooccurrence_stream), None),
+        # the transition counts maintained CONTINUOUSLY with
+        # cross-batch stitching (per-user last-event state pairs a
+        # batch's first event with the previous batch's last; ordered
+        # replay enforced by a loud per-epoch guard) — shares the batch
+        # oracle
+        "streaming_transition_matrix": (
+            transitions_start, transitions_post),
     }
 
 
@@ -1461,9 +1343,9 @@ def _doc_fold_members():
     every member rides ONE merged availableNow query
     (:func:`_merged_fold_starter`) — same chunks, same epochs, same
     per-member folds/state dirs/read tails; the anchor member
-    (``spacesaving_lang``) carries the merged starter and every other
-    member is an alias extracting its own frame from the shared
-    {name: DataFrame} result."""
+    (``streaming_spacesaving_per_lang``) carries the merged starter and
+    every other member is an alias extracting its own frame from the
+    shared {name: DataFrame} result."""
 
     def subs_factory(spark, sf_dir):
         def fold(batch_counts, keys, sums, prefix, select=None):
@@ -1563,68 +1445,154 @@ def _doc_fold_members():
             return lambda d, s, sd: d[name]
         return lambda d, s, sd: post(d[name], s, sd)
 
+    # ANCHOR member: carries the one merged replay for the group; every
+    # other member is an alias reading its own frame off the anchor's run
+    anchor = "streaming_spacesaving_per_lang"
     return {
-        # ANCHOR member: carries the one merged replay for the group
-        "spacesaving_lang": (
+        # The corpus-drift monitor maintained CONTINUOUSLY: documents arrive
+        # in micro-batches, each folding its per-token shard counts into the
+        # accumulated state (pipelines.counts_fold_sink — the
+        # stateful-wordcount shape generalized). The count table is ADDITIVE
+        # under corpus partition, so the final state — and the TV statistic
+        # computed from it — equals the one-shot batch answer: shared oracle
+        # with `token_drift_tv`.
+        "streaming_token_drift": (
+            anchor,
+            own("token_drift",
+                lambda df, s, d: TX.token_drift_tv(None, counts=df))),
+        # Tokenizer application AT INGEST — the 100 TB deployment shape for
+        # a learned BPE: train ONCE on the reference corpus (the same
+        # 8-merge artifact bpe_train_merges builds, 6-merge prefix),
+        # broadcast the merge list as a PLAN CONSTANT, and segment every
+        # arriving micro- batch map-only (operators/bpe.bpe_segment — zero
+        # shuffles per batch beyond the per-doc stats agg). Each document
+        # lives in exactly one micro-batch, so the additive fold
+        # (pipelines.counts_fold_sink keyed by doc_id) reproduces the
+        # one-shot per-doc stats table verbatim: shared oracle with
+        # `bpe_segment_stats` (the unrolled-rounds bpe_segment_sql twin).
+        "streaming_bpe_segment": (anchor, own("bpe_segment")),
+        # the per-language fertility read off the SAME folded per-doc
+        # segment stats (additive; tokenizer-equity eval maintained
+        # continuously)
+        # — shares bpe_fertility_by_lang's oracle verbatim
+        "streaming_bpe_fertility": (
+            anchor,
+            own("bpe_segment",
+                lambda df, s, d: BPE.fertility_from_segments(
+                    df, load_table(s, d, "documents")))),
+        # The heavy-hitter summary maintained CONTINUOUSLY (the reference's
+        # WindowHotWord surface with bounded output): documents arrive in
+        # micro-batches, each folding its exact per-word counter table into
+        # the accumulated state (pipelines.counts_fold_sink — counter tables
+        # are ADDITIVE under corpus partition), and the Misra-Gries prune
+        # runs once on the final state. Shard-and-merge ≡ one-shot holds
+        # EXACTLY for this additive path (test-pinned in
+        # tests/test_sketch.py), so the streamed summary shares
+        # `spacesaving_hot_words`' oracle verbatim. At 100 TB the read-side
+        # state can fold through sketch.mg_merge at a larger m instead,
+        # trading exact equality for the pinned N/m bound.
+        "streaming_spacesaving_hot_words": (
+            anchor,
+            own("spacesaving",
+                lambda df, s, d: SKC.mg_prune(df, "word", 20))),
+        # the grouped counter table folded per micro-batch (additive),
+        # grouped prune at read — shares the batch oracle
+        "streaming_spacesaving_per_lang": (
             merged,
             own("spacesaving_lang",
                 lambda df, s, d: SKC.mg_prune_grouped(df, "lang", "word",
                                                       10))),
-        "token_drift": (
-            "spacesaving_lang",
-            own("token_drift",
-                lambda df, s, d: TX.token_drift_tv(None, counts=df))),
-        # vocabulary-richness estimate maintained CONTINUOUSLY: token
-        # counts are additive, Chao1's count-of-counts tail runs at
-        # read; shares vocab_chao1's exact oracle
-        "vocab_counts": (
-            "spacesaving_lang",
-            own("vocab_counts",
-                lambda df, s, d: TX.chao1_from_token_counts(df))),
+        # Winnowed fingerprint INDEX built continuously (the MOSS index as a
+        # stream): documents arrive as micro-batches and each batch winnows
+        # map-only (operators/textstats.winnow_fingerprints — zero shuffle
+        # per batch, so the streaming plan is scan-speed too). Selection is
+        # per-document, every doc appears in exactly one micro-batch, so the
+        # union of per-batch outputs equals one-shot batch winnowing —
+        # shared oracle.
+        "streaming_winnow": (anchor, own("winnow")),
+        # Model-based filtering INSIDE a stream: each micro-batch of
+        # documents is scored by the linear quality classifier
+        # (operators/classify.quality_logits — the weights ride in the plan,
+        # so per-trigger work is map-side after the per-doc BoW groupBy).
+        # Documents arrive whole (one row each), so per-batch scoring equals
+        # one-shot scoring — union of batches shares the quality_classifier
+        # oracle. The continuously-scoring corpus gate a training-data
+        # ingest pipeline runs.
+        "streaming_quality_classifier": (anchor, own("quality_classifier")),
+        # The corpus-prep chain (dedup anti-join → quality gate → mixture
+        # rebalance) run CONTINUOUSLY: each micro-batch of arriving
+        # documents passes through pipeline.corpus_prep_apply against
+        # PREBUILT artifacts — the dedup drop set and the (tiny,
+        # localCheckpointed) mixture rate table derived once from the full
+        # gated corpus. Every per-document decision (anti-join membership,
+        # rule gate, rate hash filter) depends only on that document and the
+        # broadcast artifacts, so the union of per-batch outputs equals the
+        # one-shot batch result — the entry shares corpus_prep_pipeline's
+        # end-to-end oracle (round-5 VERDICT #8: proves the full prep chain
+        # runs per micro-batch, not just in a one-shot plan).
+        "streaming_corpus_prep": (anchor, own("corpus_prep")),
         # TextRank maintained CONTINUOUSLY: window-2 pair counts are
         # additive, so the fold reaches the one-shot edge table and the
         # min_w floor + rank iteration run at read over TOTALS
-        "textrank": (
-            "spacesaving_lang",
+        "streaming_textrank": (
+            anchor,
             own("textrank", lambda df, s, d: TX.textrank_from_edges(df))),
         # eval-budget allocation maintained CONTINUOUSLY: per-lang
         # counts are additive, Hamilton apportionment runs at read
-        "stratum_alloc": (
-            "spacesaving_lang",
+        "streaming_stratum_allocation": (
+            anchor,
             own("stratum_alloc",
                 lambda df, s, d: SMP.allocation_from_counts(df))),
         # the temperature-mixture read off the SAME folded per-lang
         # count state (counts additive; both Hamilton apportionments
         # run at read)
-        "temp_mixture": (
-            "spacesaving_lang",
+        # — shares temperature_mixture's oracle verbatim
+        "streaming_temperature_mixture": (
+            anchor,
             own("stratum_alloc",
                 lambda df, s, d: SMP.temperature_mixture_from_counts(df))),
-        "spacesaving": (
-            "spacesaving_lang",
-            own("spacesaving",
-                lambda df, s, d: SKC.mg_prune(df, "word", 20))),
+        # lang-id ROUTING at ingest: batch-disjoint docs and a fixed
+        # trained artifact, so the union of per-batch predictions
+        # equals the one-shot langid_scores — shared oracle
+        # — the corpus-routing-at-ingest shape
+        "streaming_langid_scores": (anchor, own("langid")),
+        # the held-out confusion-matrix eval off the SAME accumulated
+        # at-ingest predictions (batch-disjoint docs; the odd-half
+        # restriction applies at read)
+        # — shares langid_confusion's oracle verbatim
+        "streaming_langid_confusion": (
+            anchor,
+            own("langid",
+                lambda df, s, d: LID.confusion_from_scores(
+                    df, load_table(s, d, "documents")))),
         # readability gate maintained CONTINUOUSLY: per-lang word /
         # sentence / syllable totals are additive, the Flesch-Kincaid
         # rational tail runs at read; shares readability_by_lang's
         # exact oracle
-        "readability": (
-            "spacesaving_lang",
+        "streaming_readability": (
+            anchor,
             own("readability",
                 lambda df, s, d: TX.readability_from_counts(df))),
+        # vocabulary-richness estimate maintained CONTINUOUSLY: token
+        # counts are additive, Chao1's count-of-counts tail runs at
+        # read; shares vocab_chao1's exact oracle
+        "streaming_chao1": (
+            anchor,
+            own("vocab_counts",
+                lambda df, s, d: TX.chao1_from_token_counts(df))),
         # classifier eval maintained CONTINUOUSLY: per-logit-value
         # label counts are additive (logits are per-doc and the
         # weights are plan constants), so the fold reaches the
         # one-shot (v, ca, cb) table and the Mann-Whitney-identity
         # AUC tail runs at read; shares quality_auc's exact oracle
-        "auc_counts": (
-            "spacesaving_lang",
+        "streaming_quality_auc": (
+            anchor,
             own("auc_counts",
                 lambda df, s, d: PF.auc_from_value_counts(df))),
         # the PR-curve operating points read off the SAME folded count
         # state; shares classifier_pr_curve's oracle
-        "pr_curve": (
-            "spacesaving_lang",
+        "streaming_pr_curve": (
+            anchor,
             own("auc_counts",
                 lambda df, s, d: CLF.pr_from_value_counts(df))),
         # stupid-backoff LM gate maintained CONTINUOUSLY: the padded
@@ -1632,16 +1600,21 @@ def _doc_fold_members():
         # the fold reaches the one-shot model table; marginals +
         # scoring of the full corpus run at read (the re-fit-at-read
         # twin discipline); shares lm_perplexity_gate's exact oracle
-        "lm_counts": (
-            "spacesaving_lang",
+        "streaming_lm_gate": (
+            anchor,
             own("lm_counts",
                 lambda df, s, d: LM.lm_gate_from_counts(
                     load_table(s, d, "documents"), df))),
+        # repetition gate INSIDE the stream: per-doc stats, docs are
+        # batch-disjoint, so the union of per-batch reports equals the
+        # one-shot report — shared oracle (the quality_classifier
+        # accumulation discipline)
+        "streaming_gopher_repetition": (anchor, own("gopher_rep")),
         # the per-source league table read off the SAME folded
         # count-table model (one streamed state, two readers);
         # shares lm_gate_by_source's oracle
-        "lm_by_source": (
-            "spacesaving_lang",
+        "streaming_lm_by_source": (
+            anchor,
             own("lm_counts",
                 lambda df, s, d: LM.lm_source_report_from_counts(
                     load_table(s, d, "documents"), df))),
@@ -1651,41 +1624,11 @@ def _doc_fold_members():
         # artifact; log-ratio weights + full-corpus scoring + the
         # resample draw run at read (the re-fit-at-read twin
         # discipline); shares dsir_importance_weights' exact oracle
-        "dsir_buckets": (
-            "spacesaving_lang",
+        "streaming_dsir_weights": (
+            anchor,
             own("dsir_buckets",
                 lambda df, s, d: DS.dsir_weights_from_totals(
                     load_table(s, d, "documents"), df))),
-        "bpe_segment": ("spacesaving_lang", own("bpe_segment")),
-        # the per-language fertility read off the SAME folded per-doc
-        # segment stats (additive; tokenizer-equity eval maintained
-        # continuously)
-        "bpe_fertility": (
-            "spacesaving_lang",
-            own("bpe_segment",
-                lambda df, s, d: BPE.fertility_from_segments(
-                    df, load_table(s, d, "documents")))),
-        "winnow": ("spacesaving_lang", own("winnow")),
-        "quality_classifier": ("spacesaving_lang",
-                               own("quality_classifier")),
-        # repetition gate INSIDE the stream: per-doc stats, docs are
-        # batch-disjoint, so the union of per-batch reports equals the
-        # one-shot report — shared oracle (the quality_classifier
-        # accumulation discipline)
-        "gopher_rep": ("spacesaving_lang", own("gopher_rep")),
-        "corpus_prep": ("spacesaving_lang", own("corpus_prep")),
-        # lang-id ROUTING at ingest: batch-disjoint docs and a fixed
-        # trained artifact, so the union of per-batch predictions
-        # equals the one-shot langid_scores — shared oracle
-        "langid": ("spacesaving_lang", own("langid")),
-        # the held-out confusion-matrix eval off the SAME accumulated
-        # at-ingest predictions (batch-disjoint docs; the odd-half
-        # restriction applies at read)
-        "langid_confusion": (
-            "spacesaving_lang",
-            own("langid",
-                lambda df, s, d: LID.confusion_from_scores(
-                    df, load_table(s, d, "documents")))),
     }
 
 
@@ -1693,10 +1636,11 @@ def _event_fold_members():
     """Co-scheduled group over the events 3-chunk replay: the streamed
     sketch/state entries. r15 (VERDICT r14 #3): the five
     versioned-publish FOLD members ride one merged availableNow query
-    (:func:`_merged_fold_starter`, anchor ``theta``) — same chunks,
-    same epochs, same per-member folds/state dirs/read tails; the
-    three update-mode members (windowed_hll / hll_distinct /
-    stateful_totals) keep their own genuine streaming-state queries
+    (:func:`_merged_fold_starter`, anchor ``streaming_theta_overlap``)
+    — same chunks, same epochs, same per-member folds/state dirs/read
+    tails; the three update-mode members (streaming_windowed_hll /
+    streaming_hll_distinct / streaming_stateful_totals) keep their own
+    genuine streaming-state queries
     (they demonstrate the state store, not a foreachBatch fold) and
     still co-schedule alongside."""
     from spark_streaming_spark.streaming import replay
@@ -1781,285 +1725,134 @@ def _event_fold_members():
             .select("key", "n")  # n exact; total is float-order-dependent
         )
 
+    # ANCHOR member: carries the merged fold replay for the group
+    anchor = "streaming_theta_overlap"
     return {
-        # ANCHOR member: carries the merged fold replay for the group
-        "theta": (merged,
-                  own("theta",
-                      lambda df, s, d: SKC.theta_overlap_from_registers(
-                          df, k=64))),
+        # Custom keyed state via applyInPandasWithState (the general
+        # updateStateByKey replacement, SURVEY.md §2.11): per-event_type
+        # running (sum, count) across micro-batches. Update mode emits one
+        # row per touched key per trigger; the final state per key is the
+        # row with the max n (n is monotone), recovered with a window — and
+        # because the final n per key is exactly the key's event COUNT (an
+        # integer the state transition can't perturb), the entry carries a
+        # full DuckDB oracle despite the custom Python state machine in the
+        # middle: the oracle re-derives what the state must CONVERGE to.
+        # (`total` is a float running sum — arrival-order-dependent in the
+        # last ulps — so it stays out of the compared output;
+        # tests/test_skew_stateful.py pins it with tolerance.)
+        "streaming_stateful_totals": (totals_start, totals_post),
+        # Sketch PER TIME WINDOW in a stream: distinct users per (day,
+        # event_type) as HLL registers keyed by the window — the state store
+        # holds ≤ m register rows per open window (constant per window at
+        # any traffic), where exact distinct-per-window state is O(users).
+        # The daily-unique-visitors dashboard at 100 TB. Registers recovered
+        # via last-epoch-wins, estimator applied once; shared batch oracle.
+        "streaming_windowed_hll": (
+            whll_start,
+            lambda df, s, d: SKC.hll_estimate(df, ["day", "event_type"])),
+        # The Theta bottom-k distinct sketch maintained CONTINUOUSLY: events
+        # arrive in micro-batches, each folding its per-group registers into
+        # the accumulated state (streaming/pipelines.theta_sketch_sink). The
+        # merge is exact (bottom-k of a distinct union), so the final
+        # registers — and every pairwise intersection/union estimate —
+        # equal the one-shot batch sketch: shared oracle with
+        # `theta_audience_overlap`.
+        "streaming_theta_overlap": (
+            merged,
+            own("theta",
+                lambda df, s, d: SKC.theta_overlap_from_registers(
+                    df, k=64))),
+        # The Count-Min grid maintained CONTINUOUSLY: events arrive in
+        # micro-batches, each batch's grid folds by CELL-WISE ADDITION — the
+        # CM merge — through the generic additive-state sink
+        # (pipelines.counts_fold_sink with batch_counts = countmin_build).
+        # Addition over a corpus partition reproduces the one-shot grid, so
+        # the streamed sketch shares `countmin_user_sketch`'s oracle.
+        "streaming_cm_sketch": (anchor, own("cm_sketch")),
+        # The HLL register table maintained as STREAMING STATE: the
+        # update-mode max() agg on (event_type, bucket) is the register
+        # merge (sketch.hll_registers docstring), so the state store holds ≤
+        # m rows per group at any stream length — the sketch property, live.
+        # Final registers recovered by last-epoch-wins, estimator applied
+        # once batch-side; equals the one-shot hll_distinct (shared oracle).
+        "streaming_hll_distinct": (
+            hll_start, lambda df, s, d: SKC.hll_estimate(df, "event_type")),
         # any-gap precedence support maintained CONTINUOUSLY: the
         # (user, type, first, last) sufficient stats are min/max
         # semilattice merges, so the fold reaches the one-shot stats
         # table and the support tail shares the batch oracle
-        "sequences": ("theta",
-                      own("sequences",
-                          lambda df, s, d: AN.sequences_from_stats(df))),
-        "cm_sketch": ("theta", own("cm_sketch")),
-        "windowed_hll": (whll_start,
-                         lambda df, s, d: SKC.hll_estimate(
-                             df, ["day", "event_type"])),
-        "hll_distinct": (hll_start,
-                         lambda df, s, d: SKC.hll_estimate(
-                             df, "event_type")),
-        "stateful_totals": (totals_start, totals_post),
+        "streaming_event_sequences": (
+            anchor,
+            own("sequences", lambda df, s, d: AN.sequences_from_stats(df))),
         # the rolling-corr monitor maintained CONTINUOUSLY: the daily
         # (x, y) series is exactly additive under event partition, so
         # the fold's final state reaches the one-shot series and the
         # window + frozen-IEEE tail share rolling_daily_corr's oracle
-        "rolling_corr": ("theta",
-                         own("rolling_corr",
-                             lambda df, s, d: TS.rolling_corr_from_daily(
-                                 df))),
+        "streaming_rolling_corr": (
+            anchor,
+            own("rolling_corr",
+                lambda df, s, d: TS.rolling_corr_from_daily(df))),
         # the seasonality probe read off the SAME folded daily series
-        # as the rolling-corr monitor; shares daily_value_acf's oracle
-        "acf": ("theta",
-                own("rolling_corr", lambda df, s, d: TS.acf_from_daily(df))),
+        # as the rolling-corr monitor (alias member — no second
+        # streaming query); shares daily_value_acf's oracle
+        "streaming_acf": (
+            anchor,
+            own("rolling_corr", lambda df, s, d: TS.acf_from_daily(df))),
         # the KS gate maintained continuously: per-cent cohort counts
         # are additive, fold reaches the one-shot count table, decision
         # tail at read — shares ks_value_shift's exact oracle
-        "ks": ("theta",
-               own("ks", lambda df, s, d: PF.ks_from_value_counts(df))),
-        # the rank-sum gate read off the SAME folded count state;
-        # shares mann_whitney_value_shift's exact oracle
-        "mw": ("theta",
-               own("ks",
-                   lambda df, s, d: PF.mann_whitney_from_value_counts(df))),
+        "streaming_ks_value_shift": (
+            anchor,
+            own("ks", lambda df, s, d: PF.ks_from_value_counts(df))),
+        # the rank-sum gate read off the SAME folded count state (one
+        # fold serves both gates); shares mann_whitney_value_shift's
+        # exact oracle
+        "streaming_mann_whitney": (
+            anchor,
+            own("ks",
+                lambda df, s, d: PF.mann_whitney_from_value_counts(df))),
         # Spearman off the SAME folded daily series; shares
         # spearman_daily's exact oracle
-        "spearman": ("theta",
-                     own("rolling_corr",
-                         lambda df, s, d: TS.spearman_from_daily(df))),
+        "streaming_spearman": (
+            anchor,
+            own("rolling_corr",
+                lambda df, s, d: TS.spearman_from_daily(df))),
         # Theil-Sen off the SAME folded daily series; shares
         # theil_sen_daily's exact oracle
-        "theil_sen": ("theta",
-                      own("rolling_corr",
-                          lambda df, s, d: TS.theil_sen_from_daily(df))),
+        "streaming_theil_sen": (
+            anchor,
+            own("rolling_corr",
+                lambda df, s, d: TS.theil_sen_from_daily(df))),
         # Kendall tau-b off the SAME folded daily series; shares
         # kendall_tau_daily's exact oracle
-        "kendall": ("theta",
-                    own("rolling_corr",
-                        lambda df, s, d: TS.kendall_from_daily(df))),
+        "streaming_kendall": (
+            anchor,
+            own("rolling_corr",
+                lambda df, s, d: TS.kendall_from_daily(df))),
         # Fano dispersion off the SAME folded daily series; shares
         # fano_daily's exact oracle
-        "fano": ("theta",
-                 own("rolling_corr",
-                     lambda df, s, d: TS.fano_from_daily(df))),
+        "streaming_fano": (
+            anchor,
+            own("rolling_corr", lambda df, s, d: TS.fano_from_daily(df))),
         # Cliff's-delta effect size off the SAME folded cohort count
         # state as the KS/Mann-Whitney gates; shares
         # cliffs_delta_value_shift's exact oracle
-        "cliffs": ("theta",
-                   own("ks",
-                       lambda df, s, d: PF.cliffs_delta_from_value_counts(
-                           df))),
+        "streaming_cliffs_delta": (
+            anchor,
+            own("ks",
+                lambda df, s, d: PF.cliffs_delta_from_value_counts(df))),
         # jackknife LOO variance off the SAME folded daily series;
         # shares jackknife_daily_mean's exact oracle
-        "jackknife": ("theta",
-                      own("rolling_corr",
-                          lambda df, s, d: TS.jackknife_from_daily(df))),
+        "streaming_jackknife": (
+            anchor,
+            own("rolling_corr",
+                lambda df, s, d: TS.jackknife_from_daily(df))),
         # Holt linear-trend forecast off the SAME folded daily series;
         # shares holt_linear_forecast's exact oracle
-        "holt": ("theta",
-                 own("rolling_corr",
-                     lambda df, s, d: TS.holt_from_daily(df))),
+        "streaming_holt": (
+            anchor,
+            own("rolling_corr", lambda df, s, d: TS.holt_from_daily(df))),
     }
-
-
-def _q_streaming_sessions(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Append-mode event-time session windows: every session emitted
-    exactly once as the watermark passes it; ordered replay + sentinel
-    make the finalized stream output equal the batch session_windows
-    oracle."""
-    # sentinel sessions are dropped in the post step, on the finalized
-    # batch result — inside the streaming plan the filter would push
-    # below the watermark. Co-scheduled with the other default-ordered
-    # replay entries (VERDICT r8 #3).
-    return _cosched_group(spark, sf_dir, "ord_events", _ord_members(),
-                          "sessions")
-
-
-# --- Co-scheduled replay groups (VERDICT r8 #3) -----------------------------
-#
-# Each streamed entry pays ~0.35 s of fixed harness cost PER MICRO-BATCH
-# (offset/commit log, incremental planning, sink commit) plus query
-# start/stop — measured ~0.9-2 s per entry even for trivial transforms.
-# Structured Streaming runs CONCURRENT queries on one session's
-# scheduler, so sibling entries that the bench/driver executes in the
-# same process can overlap that fixed cost: the FIRST member of a group
-# starts every member's query, awaits them together, and caches each
-# member's finished result; the other members return their cached
-# result directly. Every member still executes its own full streaming
-# computation — the cache holds exactly what the entry would have
-# produced alone (per-entry wall time just concentrates on whichever
-# member runs first). Failure coupling is deliberate: one failed
-# sibling fails the group loudly rather than caching a partial family.
-
-_COSCHED_RESULTS: dict = {}
-
-
-def _cosched_group(spark: SparkSession, sf_dir: str, group: str,
-                   members: dict, want: str) -> DataFrame:
-    """``members``: name -> (starter, post). ``starter(spark, sf_dir)``
-    starts the member's streaming query and returns a handle with
-    ``.finish(timeout) -> DataFrame`` (replay._ParquetRun or _SinkRun);
-    ``post(df, spark, sf_dir)`` finalizes the cached raw result into the
-    entry's output (applied per call — cheap, deterministic).
-
-    ALIAS members: a starter given as a STRING names another member
-    whose raw result this member shares — no second streaming query is
-    started; only the post differs (e.g. the top-2 PCA read off the
-    same folded moment state as the top-1 read). The alias still
-    redeems independently, so the redeem-once bench accounting holds."""
-    key = (group, sf_dir, spark.sparkContext.applicationId)
-    got = _COSCHED_RESULTS.get(key)
-    # REDEEM-ONCE: each member may consume a cached group run exactly
-    # once; invoking the same member again (bench's second interleaved
-    # pass) re-runs the whole group fresh. Without this, pass 2 would
-    # return instantly from cache and the min-of-2 bench would report
-    # ~0 for every member — hiding the group's true cost. With it, the
-    # group's cost lands on the SAME leader in both passes (queries()
-    # iteration order is deterministic), so per-query mins and the
-    # family total stay honest.
-    if got is None or want in got["redeemed"]:
-        handles = {}
-        try:
-            for n, (starter, _post) in members.items():
-                if isinstance(starter, str):
-                    continue  # alias member: shares another's raw result
-                handles[n] = starter(spark, sf_dir)
-        except Exception:
-            # a starter failed mid-fan-out: stop the already-started
-            # siblings (and drop their checkpoints) before re-raising —
-            # the start loop mirrors the finish-all-then-raise
-            # discipline the await loop below already has
-            for h in handles.values():
-                h.abort()
-            raise
-        results, err = {}, None
-        for n, h in handles.items():
-            try:
-                results[n] = h.finish(300)
-            except Exception as e:  # noqa: BLE001 — finish/stop the rest
-                if err is None:
-                    err = e
-        if err is not None:
-            raise err
-        for n, (starter, _post) in members.items():
-            if isinstance(starter, str):
-                results[n] = results[starter]
-        got = {"results": results, "redeemed": set()}
-        _COSCHED_RESULTS[key] = got
-    got["redeemed"].add(want)
-    starter_post = members[want][1]
-    df = got["results"][want]
-    return starter_post(df, spark, sf_dir) if starter_post else df
-
-
-# entry name -> co-scheduled replay group. THE self-describing record
-# of the co-scheduling structure (r9 verdict nit #1): after grouping, a
-# group LEADER's bench time includes its whole group and the members
-# report ~0, so per-query comparisons across rounds must operate on
-# family subtotals — bench.py stamps this map into BENCH_DETAIL
-# (`group` per row) and the summary line (`family_subtotals`) so a
-# reader never has to cross-reference the _cosched_group call sites.
-# Guard-tested against the member dicts in tests/test_correctness.py.
-_COSCHED_ENTRY_GROUPS = {
-    "streaming_click_attribution_outer": "attr_modes",
-    "streaming_click_attribution_full": "attr_modes",
-    "streaming_click_attribution_right": "attr_modes",
-    "streaming_session_windows": "ord_events",
-    "streaming_dynamic_sessions": "ord_events",
-    "streaming_two_level_agg": "ord_events",
-    "streaming_band_cooccurrence": "ord_events",
-    "streaming_transition_matrix": "ord_events",
-    "streaming_token_drift": "doc_folds",
-    "streaming_bpe_segment": "doc_folds",
-    "streaming_bpe_fertility": "doc_folds",
-    "streaming_spacesaving_hot_words": "doc_folds",
-    "streaming_spacesaving_per_lang": "doc_folds",
-    "streaming_winnow": "doc_folds",
-    "streaming_quality_classifier": "doc_folds",
-    "streaming_corpus_prep": "doc_folds",
-    "streaming_stateful_totals": "event_folds",
-    "streaming_windowed_hll": "event_folds",
-    "streaming_theta_overlap": "event_folds",
-    "streaming_cm_sketch": "event_folds",
-    "streaming_hll_distinct": "event_folds",
-    "streaming_centroid_ingest": "emb_folds",
-    "streaming_ivf_search": "emb_folds",
-    "streaming_pca_loadings": "emb_folds",
-    "streaming_pca_top2": "emb_folds",
-    "streaming_kmeans_centroids": "emb_folds",
-    "streaming_events_asof_status": "rs_events",
-    "streaming_pivot_counts": "rs_events",
-    "streaming_blacklist_filter": "rs_events",
-    "streaming_sliding_counts": "rs_events",
-    "streaming_top3_per_window": "rs_events",
-    "streaming_click_purchase_join": "rs_events",
-    "streaming_daily_rollup": "rs_events",
-    "streaming_histogram": "rs_events",
-    "streaming_value_tiers": "rs_events",
-    "streaming_wordcount": "rs_documents",
-    "streaming_quality_filter": "rs_documents",
-    "streaming_scd1_merge": "merge_folds",
-    "streaming_scd2_merge": "merge_folds",
-    "streaming_cdc_feed": "merge_folds",
-    "streaming_scd2_asof_feed": "merge_folds",
-    "streaming_kmv_quantiles": "merge_folds",
-    "streaming_benford": "merge_folds",
-    "streaming_referential_audit": "merge_folds",
-    "streaming_textrank": "doc_folds",
-    "streaming_stratum_allocation": "doc_folds",
-    "streaming_temperature_mixture": "doc_folds",
-    "streaming_event_sequences": "event_folds",
-    "streaming_kafka_wordcount": "misc_replays",
-    "streaming_wordcount_rocksdb": "misc_replays",
-    "streaming_jsonl_sink": "misc_replays",
-    "streaming_dedup": "dedup_replays",
-    "streaming_dedup_watermark": "dedup_replays",
-    "streaming_incremental_dedup": "dedup_replays",
-    "streaming_langid_scores": "doc_folds",
-    "streaming_langid_confusion": "doc_folds",
-    "streaming_rolling_corr": "event_folds",
-    "streaming_acf": "event_folds",
-    "streaming_ks_value_shift": "event_folds",
-    "streaming_mann_whitney": "event_folds",
-    "streaming_spearman": "event_folds",
-    "streaming_kaplan_meier": "merge_folds",
-    "streaming_ols_refit": "merge_folds",
-    "streaming_hits": "merge_folds",
-    "streaming_theil_sen": "event_folds",
-    "streaming_kendall": "event_folds",
-    "streaming_transit_peaks": "merge_folds",
-    "streaming_ship_latency": "merge_folds",
-    "streaming_readability": "doc_folds",
-    "streaming_fuzzy_pairs": "merge_folds",
-    "streaming_record_linkage": "merge_folds",
-    "streaming_fano": "event_folds",
-    "streaming_gini": "merge_folds",
-    "streaming_hhi": "merge_folds",
-    "streaming_chao1": "doc_folds",
-    "streaming_cliffs_delta": "event_folds",
-    "streaming_jackknife": "event_folds",
-    "streaming_holt": "event_folds",
-    "streaming_quality_auc": "doc_folds",
-    "streaming_pr_curve": "doc_folds",
-    "streaming_lm_gate": "doc_folds",
-    "streaming_gopher_repetition": "doc_folds",
-    "streaming_lm_by_source": "doc_folds",
-    "streaming_dsir_weights": "doc_folds",
-}
-# Deliberately SOLO streamed entries (each has a reason co-scheduling
-# would break or blur what it proves): streaming_kafka_wordcount (the
-# polled processing-time runner watches global query progress),
-# streaming_wordcount_rocksdb (swaps the session's state-store provider
-# conf for its run), streaming_jsonl_sink (exercises the custom Python
-# writer's blocking two-phase commit end-to-end).
-
-
-def cosched_groups() -> dict[str, str]:
-    """entry name -> co-scheduled replay group, for bench reporting and
-    any reader computing honest family subtotals."""
-    return dict(_COSCHED_ENTRY_GROUPS)
 
 
 # BATCH artifact-sharing families: entries that serve from one memoized
@@ -2153,41 +1946,6 @@ def batch_families() -> dict[str, str]:
     return dict(_BATCH_FAMILIES)
 
 
-class _SinkRun:
-    """start/finish handle for entries whose sink is a custom
-    foreachBatch fold (state-dir publish): ``finish`` awaits the query,
-    then calls ``read_fn()`` to load the final state."""
-
-    def __init__(self, q, read_fn, ckpt):
-        self.q = q
-        self.read_fn = read_fn
-        self.ckpt = ckpt
-
-    def abort(self) -> None:
-        """Stop the query and drop its checkpoint without reading the
-        state — the unwind path when a sibling starter failed. Never
-        raises (best-effort cleanup)."""
-        import shutil
-
-        try:
-            self.q.stop()
-        except Exception:  # noqa: BLE001 — cleanup must not mask the cause
-            pass
-        shutil.rmtree(self.ckpt, ignore_errors=True)
-
-    def finish(self, timeout_sec: int = 300) -> DataFrame:
-        import shutil
-
-        try:
-            if not self.q.awaitTermination(timeout_sec):
-                raise TimeoutError(
-                    f"co-scheduled sink did not finish in {timeout_sec}s")
-        finally:
-            self.q.stop()
-            shutil.rmtree(self.ckpt, ignore_errors=True)
-        return self.read_fn()
-
-
 def _attr_starter(how: str):
     def start(spark: SparkSession, sf_dir: str):
         from spark_streaming_spark.streaming import replay
@@ -2205,86 +1963,46 @@ def _attr_starter(how: str):
     return start
 
 
-_ATTR_POST = lambda df, s, d: df.filter(F.col("user_id") >= 0)  # noqa: E731
-_ATTR_MEMBERS = {
-    "left_outer": (_attr_starter("left_outer"), _ATTR_POST),
-    "full_outer": (_attr_starter("full_outer"), _ATTR_POST),
-    "right_outer": (_attr_starter("right_outer"), _ATTR_POST),
-}
-
-
-def _q_streaming_click_attr_outer(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Stream-stream LEFT OUTER interval join — the strictest streaming
-    join mode (watermarks on BOTH sides + event-time bounds required; an
-    outer row emits only when the watermark proves no match can still
-    arrive, i.e. state eviction IS result emission). Ordered replay +
-    sentinel advance the watermark past every click's horizon, so the
-    finalized append output equals the batch left-outer answer (shared
-    oracle). Sentinels are TYPED (one click + one purchase row per
-    sentinel chunk): the branch filters push below the watermark node,
-    so only same-typed rows advance each branch's watermark — see
-    _ordered_chunked_events."""
-    return _cosched_group(spark, sf_dir, "attr_modes", _ATTR_MEMBERS,
-                          "left_outer")
-
-
-def _q_streaming_click_attr_full(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Stream-stream FULL OUTER interval join — completes the streaming
-    join-mode matrix over the left-outer machinery (typed sentinels,
-    ordered replay): matched pairs + dead clicks + organic purchases,
-    each unmatched row emitted exactly once when the watermark proves no
-    partner can still arrive. Finalized append output equals the batch
-    full-outer answer (shared oracle). Sentinel rows (negative coalesced
-    user_id — both sentinel clicks AND sentinel purchases survive a full
-    outer join) are dropped from the finalized batch result."""
-    return _cosched_group(spark, sf_dir, "attr_modes", _ATTR_MEMBERS,
-                          "full_outer")
-
-
-def _q_streaming_click_attr_right(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Stream-stream RIGHT OUTER interval join — the last cell of the
-    streaming join-mode matrix (inner r2, left r3, full r4; VERDICT r4
-    next-round #6), reusing the full-outer machinery unchanged: typed
-    sentinels (one click + one purchase per sentinel chunk so both
-    branch watermarks advance), ordered replay, watermark-proved
-    emission. Organic purchases (no qualifying click) emit exactly one
-    null-extended row when the click-side watermark passes their
-    interval; finalized append output equals the batch right-outer
-    answer (shared oracle). Sentinel rows carry negative coalesced
-    user_id and are dropped from the finalized result."""
-    return _cosched_group(spark, sf_dir, "attr_modes", _ATTR_MEMBERS,
-                          "right_outer")
-
-
-def _q_streaming_two_level(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Chained stateful operators in one streaming query (two streaming
-    aggregations back to back — SPARK-42105): level-1 tumbling counts
-    per (window, type) feed a level-2 per-window rollup inside the SAME
-    query. Ordered replay + sentinel finalize both levels; sentinel
-    windows (past all real data) are dropped from the finalized batch
-    result by the max-real-ts bound."""
-    return _cosched_group(spark, sf_dir, "ord_events", _ord_members(),
-                          "two_level")
-
-
-def _q_streaming_pivot(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Pivot maintained on a stream: one state row of per-type counters
-    per user. UPDATE mode — each trigger emits only users whose counters
-    changed (complete mode re-emits every user ever seen per trigger:
-    O(total state) sink traffic, unusable at billions of keys — round-3
-    VERDICT #2); the final state is recovered by the last-epoch-wins
-    merge over the epoch-partitioned idempotent sink and equals the
-    batch event_type_pivot (shared oracle)."""
-    return _cosched_group(spark, sf_dir, "rs_events",
-                          _rs_events_members(), "pivot")
-
-
-def _q_streaming_wordcount(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Running word count in UPDATE mode: per-trigger changed-word deltas
-    + last-epoch-wins merge == the cumulative batch counts (same scale
-    rationale as _q_streaming_pivot)."""
-    return _cosched_group(spark, sf_dir, "rs_documents",
-                          _rs_docs_members(), "wordcount")
+def _attr_members():
+    drop_sentinels = lambda df, s, d: df.filter(  # noqa: E731
+        F.col("user_id") >= 0)
+    return {
+        # Stream-stream LEFT OUTER interval join — the strictest streaming
+        # join mode (watermarks on BOTH sides + event-time bounds required;
+        # an outer row emits only when the watermark proves no match can
+        # still arrive, i.e. state eviction IS result emission). Ordered
+        # replay + sentinel advance the watermark past every click's
+        # horizon, so the finalized append output equals the batch
+        # left-outer answer (shared oracle). Sentinels are TYPED (one click
+        # + one purchase row per sentinel chunk): the branch filters push
+        # below the watermark node, so only same-typed rows advance each
+        # branch's watermark — see _ordered_chunked_events.
+        "streaming_click_attribution_outer": (
+            _attr_starter("left_outer"), drop_sentinels),
+        # Stream-stream FULL OUTER interval join — completes the streaming
+        # join-mode matrix over the left-outer machinery (typed sentinels,
+        # ordered replay): matched pairs + dead clicks + organic purchases,
+        # each unmatched row emitted exactly once when the watermark proves
+        # no partner can still arrive. Finalized append output equals the
+        # batch full-outer answer (shared oracle). Sentinel rows (negative
+        # coalesced user_id — both sentinel clicks AND sentinel purchases
+        # survive a full outer join) are dropped from the finalized batch
+        # result.
+        "streaming_click_attribution_full": (
+            _attr_starter("full_outer"), drop_sentinels),
+        # Stream-stream RIGHT OUTER interval join — the last cell of the
+        # streaming join-mode matrix (inner r2, left r3, full r4; VERDICT r4
+        # next-round #6), reusing the full-outer machinery unchanged: typed
+        # sentinels (one click + one purchase per sentinel chunk so both
+        # branch watermarks advance), ordered replay, watermark-proved
+        # emission. Organic purchases (no qualifying click) emit exactly one
+        # null-extended row when the click-side watermark passes their
+        # interval; finalized append output equals the batch right-outer
+        # answer (shared oracle). Sentinel rows carry negative coalesced
+        # user_id and are dropped from the finalized result.
+        "streaming_click_attribution_right": (
+            _attr_starter("right_outer"), drop_sentinels),
+    }
 
 
 def _misc_wordcount_rocksdb(spark: SparkSession,
@@ -2301,63 +2019,6 @@ def _misc_wordcount_rocksdb(spark: SparkSession,
     with state_store_provider(spark, "rocksdb"):
         return _run_streamed(spark, sf_dir, "documents", wordcount_stream,
                              "update", last_epoch_keys=["word"])
-
-
-def _q_streaming_blacklist(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return _cosched_group(spark, sf_dir, "rs_events",
-                          _rs_events_members(), "blacklist")
-
-
-def _q_streaming_sliding(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Sliding-window counts in UPDATE mode + last-epoch-wins: complete
-    mode re-emits EVERY window ever opened per trigger — O(stream
-    lifetime) sink traffic on an unbounded stream (the r3 pivot
-    argument, VERDICT #2, applies to time windows just as much as to
-    user keys)."""
-    return _cosched_group(spark, sf_dir, "rs_events",
-                          _rs_events_members(), "sliding")
-
-
-def _q_streaming_top3(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Top3HotProduct end-to-end as a stream: sliding-window agg in the
-    streaming plan, partitioned top-k OUTSIDE it (rank over a streaming
-    aggregate isn't a legal streaming plan — SURVEY.md §3.3/§4.3(2)).
-    UPDATE mode + last-epoch-wins recovers the final per-window counts
-    (changed-keys-only sink traffic — ranking the full window state
-    inside foreachBatch on EVERY trigger, the old complete-mode
-    spelling, is O(all windows ever) per trigger); the rank then runs
-    ONCE over the recovered state. Same oracle as the batch
-    hot_words_per_window top-3."""
-    return _cosched_group(spark, sf_dir, "rs_events",
-                          _rs_events_members(), "top3")
-
-
-def _q_streaming_stateful_totals(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Custom keyed state via applyInPandasWithState (the general
-    updateStateByKey replacement, SURVEY.md §2.11): per-event_type running
-    (sum, count) across micro-batches. Update mode emits one row per
-    touched key per trigger; the final state per key is the row with the
-    max n (n is monotone), recovered with a window — and because the
-    final n per key is exactly the key's event COUNT (an integer the
-    state transition can't perturb), the entry carries a full DuckDB
-    oracle despite the custom Python state machine in the middle: the
-    oracle re-derives what the state must CONVERGE to. (`total` is a
-    float running sum — arrival-order-dependent in the last ulps — so
-    it stays out of the compared output; tests/test_skew_stateful.py
-    pins it with tolerance.)"""
-    return _cosched_group(spark, sf_dir, "event_folds",
-                          _event_fold_members(), "stateful_totals")
-
-
-def _q_streaming_quality_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Corpus-prep quality rules applied INSIDE a stream: the same
-    pipeline.quality_filter projection runs per micro-batch (append
-    mode, stateless map — the shape of a continuously-ingesting corpus
-    pipeline). Streamed output == batch output, so the entry shares the
-    batch rule semantics; oracle = quality_filter SQL restricted to
-    kept docs."""
-    return _cosched_group(spark, sf_dir, "rs_documents",
-                          _rs_docs_members(), "quality_filter")
 
 
 def _dedup_replay_members():
@@ -2414,73 +2075,48 @@ def _dedup_replay_members():
             state_partitions=4)
 
     return {
-        "dedup": (dedup_start, None),
-        "dedup_watermark": (
+        # Streaming exact dedup across micro-batches: the input is the
+        # events table DOUBLED (union with itself), chunked so the two
+        # copies of a row land in different triggers; dropDuplicates'
+        # seen-key state must still collapse them to exactly the original
+        # table — the cross-batch semantics updateStateByKey-era code
+        # couldn't express. Replay has no watermark (bounded input);
+        # production passes (ts, delay) to bound seen-key state.
+        #
+        # The doubled input is immutable per sf_dir, so it rides the
+        # persistent chunk cache like every other replay input (it was the
+        # one entry re-chunking on every call — ~0.7 s of per-run harness
+        # cost for no signal). 1 file/trigger here, not _run_streamed's 2:
+        # round-robin chunking separates most duplicate copies, and three
+        # triggers keep copies landing in DIFFERENT batches — the
+        # cross-batch seen-key eviction this entry exists to prove.
+        "streaming_dedup": (dedup_start, None),
+        # Streaming dedup with BOUNDED seen-key state
+        # (dropDuplicatesWithinWatermark — pipelines.
+        # dedup_stream_within_watermark): the duplicate model is an
+        # at-least-once RETRANSMISSION 3 s after the original, well inside
+        # the 10 s dedup window. Event-time-ordered replay keeps arrivals
+        # monotone, so every retransmit either meets its original's live
+        # state (same or later batch) or is itself dropped as late — both
+        # mean deduped — while originals are never late (range chunks are
+        # non-overlapping in ts). Output drops ts so the appended rows are
+        # identical whichever copy won an intra-batch race; equals the
+        # original events — shared streaming_dedup oracle.
+        "streaming_dedup_watermark": (
             dedup_wm_start,
             lambda df, s, d: df.select("event_id", "user_id",
                                        "event_type")),
-        "incremental_dedup": (incr_start, None),
+        # Incremental dedup run CONTINUOUSLY: each micro-batch of incoming
+        # docs is deduped against the static corpus index inside
+        # foreachBatch (operators/dedup.incremental_minhash_dedup), results
+        # appended. The per-batch answers are disjoint (each new doc appears
+        # in exactly one batch; the corpus side is fixed), so their union
+        # equals the one-shot batch-vs-corpus answer — shared oracle. This
+        # is the streaming face of daily-production dedup: the corpus index
+        # is the stream-static side, per-trigger cost is O(batch +
+        # collisions).
+        "streaming_incremental_dedup": (incr_start, None),
     }
-
-
-def _q_streaming_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Streaming exact dedup across micro-batches: the input is the
-    events table DOUBLED (union with itself), chunked so the two copies
-    of a row land in different triggers; dropDuplicates' seen-key state
-    must still collapse them to exactly the original table — the
-    cross-batch semantics updateStateByKey-era code couldn't express.
-    Replay has no watermark (bounded input); production passes
-    (ts, delay) to bound seen-key state.
-
-    The doubled input is immutable per sf_dir, so it rides the
-    persistent chunk cache like every other replay input (it was the
-    one entry re-chunking on every call — ~0.7 s of per-run harness
-    cost for no signal). 1 file/trigger here, not _run_streamed's 2:
-    round-robin chunking separates most duplicate copies, and three
-    triggers keep copies landing in DIFFERENT batches — the cross-batch
-    seen-key eviction this entry exists to prove."""
-    return _cosched_group(spark, sf_dir, "dedup_replays",
-                          _dedup_replay_members(), "dedup")
-
-
-def _q_streaming_dedup_watermark(spark: SparkSession,
-                                 sf_dir: str) -> DataFrame:
-    """Streaming dedup with BOUNDED seen-key state
-    (dropDuplicatesWithinWatermark — pipelines.
-    dedup_stream_within_watermark): the duplicate model is an
-    at-least-once RETRANSMISSION 3 s after the original, well inside the
-    10 s dedup window. Event-time-ordered replay keeps arrivals
-    monotone, so every retransmit either meets its original's live
-    state (same or later batch) or is itself dropped as late — both
-    mean deduped — while originals are never late (range chunks are
-    non-overlapping in ts). Output drops ts so the appended rows are
-    identical whichever copy won an intra-batch race; equals the
-    original events — shared streaming_dedup oracle."""
-    return _cosched_group(spark, sf_dir, "dedup_replays",
-                          _dedup_replay_members(), "dedup_watermark")
-
-
-def _q_streaming_conversions(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Stream-stream interval self-join (click→purchase funnel): the
-    capability the DStream reference could not express. Replayed without
-    watermark so every match is retained (bounded input); production
-    passes watermark= to bound state."""
-    return _cosched_group(spark, sf_dir, "rs_events",
-                          _rs_events_members(), "conversions")
-
-
-def _q_streaming_incremental_dedup(spark: SparkSession,
-                                   sf_dir: str) -> DataFrame:
-    """Incremental dedup run CONTINUOUSLY: each micro-batch of incoming
-    docs is deduped against the static corpus index inside foreachBatch
-    (operators/dedup.incremental_minhash_dedup), results appended. The
-    per-batch answers are disjoint (each new doc appears in exactly one
-    batch; the corpus side is fixed), so their union equals the one-shot
-    batch-vs-corpus answer — shared oracle. This is the streaming face
-    of daily-production dedup: the corpus index is the stream-static
-    side, per-trigger cost is O(batch + collisions)."""
-    return _cosched_group(spark, sf_dir, "dedup_replays",
-                          _dedup_replay_members(), "incremental_dedup")
 
 
 def _misc_kafka_wordcount(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -2513,96 +2149,6 @@ def _misc_kafka_wordcount(spark: SparkSession, sf_dir: str) -> DataFrame:
         counts, target_input_rows=n, output_mode="complete",
         state_partitions=4,
     )
-
-
-def _q_streaming_windowed_hll(spark: SparkSession,
-                              sf_dir: str) -> DataFrame:
-    """Sketch PER TIME WINDOW in a stream: distinct users per (day,
-    event_type) as HLL registers keyed by the window — the state store
-    holds ≤ m register rows per open window (constant per window at any
-    traffic), where exact distinct-per-window state is O(users). The
-    daily-unique-visitors dashboard at 100 TB. Registers recovered via
-    last-epoch-wins, estimator applied once; shared batch oracle."""
-    return _cosched_group(spark, sf_dir, "event_folds",
-                          _event_fold_members(), "windowed_hll")
-
-
-def _q_streaming_kmv_quantiles(spark: SparkSession,
-                               sf_dir: str) -> DataFrame:
-    """The KMV quantile sketch maintained CONTINUOUSLY: lineitem arrives
-    in micro-batches, each folding its bottom-k registers into the
-    per-group state (streaming/pipelines.kmv_sketch_sink). The merge is
-    exact, so the final registers — and hence the quantile estimates —
-    equal the one-shot batch sketch: shared oracle with
-    `kmv_quantity_quantiles`."""
-    return _cosched_group(spark, sf_dir, "merge_folds",
-                          _merge_fold_members(), "kmv")
-
-
-def _q_streaming_theta_overlap(spark: SparkSession,
-                               sf_dir: str) -> DataFrame:
-    """The Theta bottom-k distinct sketch maintained CONTINUOUSLY:
-    events arrive in micro-batches, each folding its per-group registers
-    into the accumulated state (streaming/pipelines.theta_sketch_sink).
-    The merge is exact (bottom-k of a distinct union), so the final
-    registers — and every pairwise intersection/union estimate — equal
-    the one-shot batch sketch: shared oracle with
-    `theta_audience_overlap`."""
-    return _cosched_group(spark, sf_dir, "event_folds",
-                          _event_fold_members(), "theta")
-
-
-def _q_streaming_token_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The corpus-drift monitor maintained CONTINUOUSLY: documents
-    arrive in micro-batches, each folding its per-token shard counts
-    into the accumulated state (pipelines.counts_fold_sink — the
-    stateful-wordcount shape generalized). The count table is ADDITIVE
-    under corpus partition, so the final state — and the TV statistic
-    computed from it — equals the one-shot batch answer: shared oracle
-    with `token_drift_tv`."""
-    return _cosched_group(spark, sf_dir, "doc_folds",
-                          _doc_fold_members(), "token_drift")
-
-
-def _q_streaming_bpe_segment(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Tokenizer application AT INGEST — the 100 TB deployment shape for
-    a learned BPE: train ONCE on the reference corpus (the same 8-merge
-    artifact bpe_train_merges builds, 6-merge prefix), broadcast the
-    merge list as a PLAN CONSTANT, and segment every arriving micro-
-    batch map-only (operators/bpe.bpe_segment — zero shuffles per batch
-    beyond the per-doc stats agg). Each document lives in exactly one
-    micro-batch, so the additive fold (pipelines.counts_fold_sink keyed
-    by doc_id) reproduces the one-shot per-doc stats table verbatim:
-    shared oracle with `bpe_segment_stats` (the unrolled-rounds
-    bpe_segment_sql twin)."""
-    return _cosched_group(spark, sf_dir, "doc_folds",
-                          _doc_fold_members(), "bpe_segment")
-
-
-def _q_streaming_spacesaving(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The heavy-hitter summary maintained CONTINUOUSLY (the reference's
-    WindowHotWord surface with bounded output): documents arrive in
-    micro-batches, each folding its exact per-word counter table into
-    the accumulated state (pipelines.counts_fold_sink — counter tables
-    are ADDITIVE under corpus partition), and the Misra-Gries prune runs
-    once on the final state. Shard-and-merge ≡ one-shot holds EXACTLY
-    for this additive path (test-pinned in tests/test_sketch.py), so the
-    streamed summary shares `spacesaving_hot_words`' oracle verbatim.
-    At 100 TB the read-side state can fold through sketch.mg_merge at a
-    larger m instead, trading exact equality for the pinned N/m bound."""
-    return _cosched_group(spark, sf_dir, "doc_folds",
-                          _doc_fold_members(), "spacesaving")
-
-
-def _q_streaming_cm_sketch(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The Count-Min grid maintained CONTINUOUSLY: events arrive in
-    micro-batches, each batch's grid folds by CELL-WISE ADDITION — the
-    CM merge — through the generic additive-state sink
-    (pipelines.counts_fold_sink with batch_counts = countmin_build).
-    Addition over a corpus partition reproduces the one-shot grid, so
-    the streamed sketch shares `countmin_user_sketch`'s oracle."""
-    return _cosched_group(spark, sf_dir, "event_folds",
-                          _event_fold_members(), "cm_sketch")
 
 
 def _q_cm_user_estimates(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -2712,61 +2258,6 @@ def _q_kmv_quantity_quantiles(spark: SparkSession, sf_dir: str) -> DataFrame:
     }).withColumnRenamed("grp", "l_returnflag")
 
 
-def _q_streaming_hll_distinct(spark: SparkSession,
-                              sf_dir: str) -> DataFrame:
-    """The HLL register table maintained as STREAMING STATE: the
-    update-mode max() agg on (event_type, bucket) is the register merge
-    (sketch.hll_registers docstring), so the state store holds ≤ m rows
-    per group at any stream length — the sketch property, live. Final
-    registers recovered by last-epoch-wins, estimator applied once
-    batch-side; equals the one-shot hll_distinct (shared oracle)."""
-    return _cosched_group(spark, sf_dir, "event_folds",
-                          _event_fold_members(), "hll_distinct")
-
-
-def _q_streaming_band_cooccurrence(spark: SparkSession,
-                                   sf_dir: str) -> DataFrame:
-    """The keyless band join as a STREAM-STREAM self-join: grid cells
-    are the equality key Structured Streaming requires, the event-time
-    range bound lets the watermark evict cell state (asof.
-    band_cooccurrence_stream). Ordered replay keeps late-row filtering
-    vacuous (watermark 4s > eps 2s covers the cross-batch boundary), so
-    the inner-join append output equals the batch band join — shared
-    oracle."""
-    return _cosched_group(spark, sf_dir, "ord_events", _ord_members(),
-                          "band_cooccurrence")
-
-
-def _q_streaming_quality_classifier(spark: SparkSession,
-                                    sf_dir: str) -> DataFrame:
-    """Model-based filtering INSIDE a stream: each micro-batch of
-    documents is scored by the linear quality classifier
-    (operators/classify.quality_logits — the weights ride in the plan,
-    so per-trigger work is map-side after the per-doc BoW groupBy).
-    Documents arrive whole (one row each), so per-batch scoring equals
-    one-shot scoring — union of batches shares the quality_classifier
-    oracle. The continuously-scoring corpus gate a training-data ingest
-    pipeline runs."""
-    return _cosched_group(spark, sf_dir, "doc_folds",
-                          _doc_fold_members(), "quality_classifier")
-
-
-def _q_streaming_corpus_prep(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The corpus-prep chain (dedup anti-join → quality gate → mixture
-    rebalance) run CONTINUOUSLY: each micro-batch of arriving documents
-    passes through pipeline.corpus_prep_apply against PREBUILT artifacts
-    — the dedup drop set and the (tiny, localCheckpointed) mixture rate
-    table derived once from the full gated corpus. Every per-document
-    decision (anti-join membership, rule gate, rate hash filter) depends
-    only on that document and the broadcast artifacts, so the union of
-    per-batch outputs equals the one-shot batch result — the entry
-    shares corpus_prep_pipeline's end-to-end oracle (round-5 VERDICT
-    #8: proves the full prep chain runs per micro-batch, not just in a
-    one-shot plan)."""
-    return _cosched_group(spark, sf_dir, "doc_folds",
-                          _doc_fold_members(), "corpus_prep")
-
-
 def _kmeans_refit_from_moments(mom: DataFrame, spark: SparkSession,
                                sf_dir: str) -> DataFrame:
     """Read-side tail of ``streaming_kmeans_centroids``: top-2 axes by
@@ -2791,8 +2282,9 @@ def _emb_fold_members():
     """Co-scheduled group over the embeddings 3-chunk replay: the
     vector-index ingest and serving entries. r15 (VERDICT r14 #3): all
     three sinks ride one merged availableNow query
-    (:func:`_merged_fold_starter`, anchor ``centroid_ingest``) — same
-    chunks, same epochs, same per-member folds/sinks/read tails."""
+    (:func:`_merged_fold_starter`, anchor
+    ``streaming_centroid_ingest``) — same chunks, same epochs, same
+    per-member folds/sinks/read tails."""
     def subs_factory(spark, sf_dir):
         emb = load_table(spark, sf_dir, "embeddings")
         carr = SIM.centroid_table(emb)
@@ -2819,58 +2311,53 @@ def _emb_fold_members():
             return lambda d, s, sd: d[name]
         return lambda d, s, sd: post(d[name], s, sd)
 
+    # ANCHOR member: carries the merged replay for the group
+    anchor = "streaming_centroid_ingest"
     return {
-        # ANCHOR member: carries the merged replay for the group
-        "centroid_ingest": (merged, own("centroid_ingest")),
-        "ivf_serve": ("centroid_ingest", own("ivf_serve")),
-        "pca": ("centroid_ingest",
-                own("pca",
-                    lambda df, s, d: PCA.pca_top_component_from_moments(
-                        df))),
+        # Continuously-maintained vector index INGEST: embeddings arrive as
+        # micro-batches and each batch is cell-assigned map-side against the
+        # broadcast trained-quantizer artifact (similarity.centroid_table —
+        # fit once at index-build time, served per trigger; the IVF
+        # build/serve separation run as a stream). Every vector appears in
+        # exactly one micro-batch and the artifact is fixed, so the union of
+        # per-batch assignments equals the one-shot batch centroid_assign —
+        # shared oracle.
+        "streaming_centroid_ingest": (merged, own("centroid_ingest")),
+        # ANN SERVING at ingest: query micro-batches search the static
+        # deterministic IVF index (built once, broadcast artifacts);
+        # queries are batch-disjoint so the union of per-batch top-k
+        # equals the one-shot multi-query search — shared oracle
+        "streaming_ivf_search": (anchor, own("ivf_serve")),
+        # distributed PCA maintained CONTINUOUSLY: each embedding
+        # micro-batch folds its exact second-moment table into the
+        # accumulated state (pipelines.counts_fold_sink — the moments
+        # are cell-wise ADDITIVE under corpus partition), and the
+        # corpus-independent power iteration runs once on the final
+        # state. The fold reaches the one-shot statistics bit-for-bit,
+        # so the streamed loadings share embedding_pca_loadings' oracle
+        # verbatim (the streaming_token_drift discipline)
+        "streaming_pca_loadings": (
+            anchor,
+            own("pca",
+                lambda df, s, d: PCA.pca_top_component_from_moments(df))),
         # the top-2 projected-deflation read off the SAME folded moment
         # state — the fold runs once, both component reads share it
-        # (VERDICT r10 #6)
-        "pca_top2": ("centroid_ingest",
-                     own("pca",
-                         lambda df, s, d:
-                         PCA.pca_top_components_from_moments(
-                             df, n_components=2))),
+        # (VERDICT r10 #6); matches embedding_pca_top2 exactly and
+        # shares its oracle
+        "streaming_pca_top2": (
+            anchor,
+            own("pca",
+                lambda df, s, d: PCA.pca_top_components_from_moments(
+                    df, n_components=2))),
         # deterministic Lloyd k-means RE-FIT AT READ off the same
         # folded moment state (the streaming_pca_top2 discipline, r11
         # verdict item 6): axes from the folded moments, one projection
         # scan, then the fixed-round fit — folded moments ≡ batch
         # moments, so axes, plane, and centroids are bit-identical and
         # the batch kmeans_pca_centroids oracle is shared verbatim
-        "kmeans_centroids": (
-            "centroid_ingest",
-            own("pca", _kmeans_refit_from_moments)),
+        "streaming_kmeans_centroids": (
+            anchor, own("pca", _kmeans_refit_from_moments)),
     }
-
-
-def _q_streaming_centroid_ingest(spark: SparkSession,
-                                 sf_dir: str) -> DataFrame:
-    """Continuously-maintained vector index INGEST: embeddings arrive as
-    micro-batches and each batch is cell-assigned map-side against the
-    broadcast trained-quantizer artifact (similarity.centroid_table —
-    fit once at index-build time, served per trigger; the IVF
-    build/serve separation run as a stream). Every vector appears in
-    exactly one micro-batch and the artifact is fixed, so the union of
-    per-batch assignments equals the one-shot batch centroid_assign —
-    shared oracle."""
-    return _cosched_group(spark, sf_dir, "emb_folds",
-                          _emb_fold_members(), "centroid_ingest")
-
-
-def _q_streaming_winnow(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Winnowed fingerprint INDEX built continuously (the MOSS index as
-    a stream): documents arrive as micro-batches and each batch winnows
-    map-only (operators/textstats.winnow_fingerprints — zero shuffle
-    per batch, so the streaming plan is scan-speed too). Selection is
-    per-document, every doc appears in exactly one micro-batch, so the
-    union of per-batch outputs equals one-shot batch winnowing — shared
-    oracle."""
-    return _cosched_group(spark, sf_dir, "doc_folds",
-                          _doc_fold_members(), "winnow")
 
 
 def _zorder_key_events(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -2887,6 +2374,157 @@ def _zorder_key_events(spark: SparkSession, sf_dir: str) -> DataFrame:
             .replace("//", " div ")
         ).cast("long").alias("zkey"),
     )
+
+
+# --- Co-scheduled replay groups (VERDICT r8 #3) -----------------------------
+#
+# Each streamed entry pays ~0.35 s of fixed harness cost PER MICRO-BATCH
+# (offset/commit log, incremental planning, sink commit) plus query
+# start/stop — measured ~0.9-2 s per entry even for trivial transforms.
+# Structured Streaming runs CONCURRENT queries on one session's
+# scheduler, so sibling entries that the bench/driver executes in the
+# same process can overlap that fixed cost: the FIRST member of a group
+# starts every member's query, awaits them together, and caches each
+# member's finished result; the other members return their cached
+# result directly. Every member still executes its own full streaming
+# computation — the cache holds exactly what the entry would have
+# produced alone (per-entry wall time just concentrates on whichever
+# member runs first). Failure coupling is deliberate: one failed
+# sibling fails the group loudly rather than caching a partial family.
+#
+# Every group entry is a bounded multi-batch replay whose result must
+# equal its batch oracle (stream/batch equivalence). _COSCHED_TABLE is
+# the one record of the structure: group -> members function, each
+# returning {entry name: (starter, post)}. The queries() registrations
+# of the group entries and cosched_groups() are both derived from it.
+
+_COSCHED_RESULTS: dict = {}
+# former names of the one replay handle, which the benchmark harness
+# still wraps by name
+_SinkRun = _MergedRun = Run
+
+
+def _redeem(spark: SparkSession, sf_dir: str, group: str, want: str,
+            run_group) -> DataFrame:
+    """``want``'s raw result from the cached run of ``group``, running
+    it first through ``run_group() -> {entry: raw result}`` when needed.
+
+    REDEEM-ONCE: each member may consume a cached group run exactly
+    once; invoking the same member again (bench's second interleaved
+    pass) re-runs the whole group fresh. Without this, pass 2 would
+    return instantly from cache and the min-of-2 bench would report ~0
+    for every member — hiding the group's true cost. With it, the
+    group's cost lands on the SAME leader in both passes (queries()
+    iteration order is deterministic), so per-query mins and the family
+    total stay honest."""
+    key = (group, sf_dir, spark.sparkContext.applicationId)
+    got = _COSCHED_RESULTS.get(key)
+    if got is None or want in got["redeemed"]:
+        got = {"results": run_group(), "redeemed": set()}
+        _COSCHED_RESULTS[key] = got
+    got["redeemed"].add(want)
+    return got["results"][want]
+
+
+def _run_handles(spark: SparkSession, sf_dir: str, members: dict) -> dict:
+    """Run a group of query-starting members through
+    :func:`replay.run_all`: ``starter(spark, sf_dir)`` starts the
+    member's streaming query and returns its :class:`replay.Run`.
+
+    ALIAS members: a starter given as a STRING names another member
+    whose raw result this member shares — no second streaming query is
+    started; only the post differs (e.g. the top-2 PCA read off the
+    same folded moment state as the top-1 read). The alias still
+    redeems independently, so the redeem-once bench accounting holds."""
+    import functools
+
+    from spark_streaming_spark.streaming import replay
+
+    results = replay.run_all({
+        n: functools.partial(starter, spark, sf_dir)
+        for n, (starter, _post) in members.items()
+        if not isinstance(starter, str)})
+    for n, (starter, _post) in members.items():
+        if isinstance(starter, str):
+            results[n] = results[starter]
+    return results
+
+
+def _run_threads(spark: SparkSession, sf_dir: str, members: dict) -> dict:
+    """Run a group of BLOCKING runners: members are plain
+    ``fn(spark, sf_dir) -> DataFrame`` callables run concurrently on
+    Spark's thread-safe scheduler (overlapping each runner's fixed
+    replay/trigger/commit latency), with the same fail-loudly contract
+    as :func:`replay.run_all`. Provider-context note: the RocksDB member
+    flips the session's state-store provider around its query start; a
+    sibling starting in that window may also get RocksDB — harmless BY
+    THE ENTRY'S OWN CONTRACT (provider choice must never change
+    results; that invariance is what the rocksdb entry proves)."""
+    from concurrent.futures import ThreadPoolExecutor
+
+    with ThreadPoolExecutor(max_workers=len(members)) as ex:
+        futs = {n: ex.submit(fn, spark, sf_dir)
+                for n, fn in members.items()}
+        results, err = {}, None
+        for n, f in futs.items():
+            try:
+                results[n] = f.result(timeout=600)
+            except Exception as e:  # noqa: BLE001 — drain the rest
+                if err is None:
+                    err = e
+    if err is not None:
+        raise err
+    return results
+
+
+def _cosched_group(spark: SparkSession, sf_dir: str, group: str,
+                   members: dict, want: str) -> DataFrame:
+    """Entry ``want`` of co-scheduled ``group``. ``members`` maps entry
+    name -> (starter, post) (see :func:`_run_handles`), where
+    ``post(df, spark, sf_dir)`` finalizes the cached raw result into the
+    entry's output (applied per call — cheap, deterministic); or entry
+    name -> blocking runner (see :func:`_run_threads`)."""
+    if all(callable(m) for m in members.values()):
+        return _redeem(spark, sf_dir, group, want,
+                       lambda: _run_threads(spark, sf_dir, members))
+    df = _redeem(spark, sf_dir, group, want,
+                 lambda: _run_handles(spark, sf_dir, members))
+    post = members[want][1]
+    return post(df, spark, sf_dir) if post else df
+
+
+_COSCHED_TABLE = {
+    "attr_modes": _attr_members,
+    "ord_events": _ord_members,
+    "doc_folds": _doc_fold_members,
+    "event_folds": _event_fold_members,
+    "emb_folds": _emb_fold_members,
+    "rs_events": _rs_events_members,
+    "rs_documents": _rs_docs_members,
+    "merge_folds": _merge_fold_members,
+    "misc_replays": _misc_replay_members,
+    "dedup_replays": _dedup_replay_members,
+}
+
+
+def cosched_groups() -> dict[str, str]:
+    """entry name -> co-scheduled replay group, derived from
+    _COSCHED_TABLE, for bench reporting and any reader computing honest
+    family subtotals: a group LEADER's bench time includes its whole
+    group and the members report ~0, so per-query comparisons across
+    rounds must operate on family subtotals (bench.py stamps this map
+    into BENCH_DETAIL and the summary line)."""
+    return {n: g for g, members in _COSCHED_TABLE.items()
+            for n in members()}
+
+
+def _group_queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
+    """The queries() registration of every co-scheduled group entry."""
+    return {
+        n: lambda s, d, g=g, n=n: _cosched_group(
+            s, d, g, _COSCHED_TABLE[g](), n)
+        for n, g in cosched_groups().items()
+    }
 
 
 # The driver's correctness harness verifies the FIRST 50 queries() entries
@@ -3088,11 +2726,6 @@ def _base_queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         # per-user (first, last) sufficient stats -> map-side type pairs
         "frequent_event_sequences": lambda s, d: AN.frequent_event_sequences(
             load_table(s, d, "events")),
-        # the transition counts maintained CONTINUOUSLY with
-        # cross-batch stitching (per-user last-event state pairs a
-        # batch's first event with the previous batch's last; ordered
-        # replay enforced by a loud per-epoch guard) — shares the batch
-        # oracle; rides the ordered-events co-scheduled group
         # the equilibrium readout of the chain: stationary distribution
         # by unrolled left power iteration with L1 renormalization
         # (analytic.stationary_distribution - the PCA iteration
@@ -3124,24 +2757,18 @@ def _base_queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         # magnitude thresholds (Romano et al. 2006)
         "cliffs_delta_value_shift": lambda s, d: PF.cliffs_delta_value_shift(
             load_table(s, d, "events")),
-        "streaming_cliffs_delta": lambda s, d: _cosched_group(
-            s, d, "event_folds", _event_fold_members(), "cliffs"),
         # leave-one-day-out jackknife variance/SE of the mean daily
         # revenue: the deterministic resampling uncertainty estimate
         # (bootstrap randomness is banned) — cleared-denominator exact
         # integers, one IEEE divide + sqrt
         "jackknife_daily_mean": lambda s, d: TS.jackknife_daily_mean(
             load_table(s, d, "events")),
-        "streaming_jackknife": lambda s, d: _cosched_group(
-            s, d, "event_folds", _event_fold_members(), "jackknife"),
         # Holt double-exponential-smoothing forecast of the daily
         # revenue: pinned rational alpha=1/2, beta=1/4, every step one
         # pmod floor division — exact BIGINT recursion, h-step
         # forecasts hash-exact
         "holt_linear_forecast": lambda s, d: TS.holt_linear_forecast(
             load_table(s, d, "events")),
-        "streaming_holt": lambda s, d: _cosched_group(
-            s, d, "event_folds", _event_fold_members(), "holt"),
         # HITS hubs/authorities on the customer->part purchase
         # bipartite graph (Kleinberg 1999): corank-quantized
         # contributions, max-normalization (order-independent), rounds
@@ -3196,27 +2823,11 @@ def _base_queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
                 "acctbal_band",
                 F.expr("CAST(FLOOR(c_acctbal / 1000) AS BIGINT)")),
             ["c_nationkey", "acctbal_band"], "c_mktsegment"),
-        # run CONTINUOUSLY: per-batch daily series folded additively
-        # (event_folds group), window + IEEE tail at read
-        "streaming_rolling_corr": lambda s, d: _cosched_group(
-            s, d, "event_folds", _event_fold_members(), "rolling_corr"),
-        # the ACF probe read off the SAME folded daily series (alias
-        # member — no second streaming query); shared exact oracle
-        "streaming_acf": lambda s, d: _cosched_group(
-            s, d, "event_folds", _event_fold_members(), "acf"),
-        # the KS gate maintained continuously off folded per-cent
-        # cohort counts; shared exact oracle
-        "streaming_ks_value_shift": lambda s, d: _cosched_group(
-            s, d, "event_folds", _event_fold_members(), "ks"),
         # Mann-Whitney rank-sum gate between the same two cohorts:
         # exact doubled-rank integers over the shared count table,
         # single-sourced IEEE z string (profile._MW_Z)
         "mann_whitney_value_shift": lambda s, d: PF.mann_whitney_value_shift(
             load_table(s, d, "events")),
-        # ...and read CONTINUOUSLY off the same folded KS count state
-        # (alias member — one fold serves both gates)
-        "streaming_mann_whitney": lambda s, d: _cosched_group(
-            s, d, "event_folds", _event_fold_members(), "mw"),
         # Theil-Sen robust daily trend: lower-median of pairwise
         # rational slopes over the calendar-bounded series (no negative
         # integer division — Spark div truncates, DuckDB // floors)
@@ -3228,10 +2839,6 @@ def _base_queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         # frozen-IEEE tail
         "kendall_tau_daily": lambda s, d: TS.kendall_tau_daily(
             load_table(s, d, "events")),
-        # Kendall tau-b off the SAME folded daily series (alias
-        # member); shared exact oracle
-        "streaming_kendall": lambda s, d: _cosched_group(
-            s, d, "event_folds", _event_fold_members(), "kendall"),
         # peak simultaneously-open line items (ordered, not yet
         # shipped) per month: the sweep-line interval-concurrency query
         # — boundary deltas (one shuffle), calendar-day spine, one
@@ -3239,20 +2846,11 @@ def _base_queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "transit_concurrency_peaks": lambda s, d:
             TS.transit_concurrency_peaks(load_table(s, d, "lineitem"),
                                          load_table(s, d, "orders")),
-        # the concurrency monitor maintained continuously off the
-        # folded delta table; shared exact oracle
-        "streaming_transit_peaks": lambda s, d: _cosched_group(
-            s, d, "merge_folds", _merge_fold_members(),
-            "transit_deltas"),
         # Flesch-Kincaid readability gate per language: one regexp
         # scan per doc (words / sentence marks / vowel-run syllables),
         # per-lang totals, one exact-decimal rational grade
         "readability_by_lang": lambda s, d: TX.readability_by_lang(
             load_table(s, d, "documents")),
-        # the readability gate maintained continuously off the folded
-        # per-lang totals; shared exact oracle
-        "streaming_readability": lambda s, d: _cosched_group(
-            s, d, "doc_folds", _doc_fold_members(), "readability"),
         # SymSpell deletion-neighborhood fuzzy join: every customer
         # name pair within Levenshtein distance 1, via a COMPLETE
         # variant equi-join instead of the oracle's O(n²) cross join
@@ -3263,31 +2861,15 @@ def _base_queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         # integer-cents balance band, hash-exact decisions
         "record_linkage_scores": lambda s, d: DD.record_linkage_scores(
             load_table(s, d, "customer"), cache_key=d),
-        # the variant index maintained continuously; shared oracle
-        "streaming_fuzzy_pairs": lambda s, d: _cosched_group(
-            s, d, "merge_folds", _merge_fold_members(),
-            "fuzzy_variants"),
-        # linkage decisions maintained continuously off the SAME
-        # folded variant index (alias member); shared oracle
-        "streaming_record_linkage": lambda s, d: _cosched_group(
-            s, d, "merge_folds", _merge_fold_members(),
-            "fuzzy_linkage"),
         # order-to-ship latency SLA: exact rank-selected p50/p95 day
         # gaps per ship-month (never an interpolated float percentile)
         "ship_latency_percentiles": lambda s, d:
             TS.ship_latency_percentiles(load_table(s, d, "lineitem"),
                                         load_table(s, d, "orders")),
-        # the SLA maintained continuously off the folded histogram
-        "streaming_ship_latency": lambda s, d: _cosched_group(
-            s, d, "merge_folds", _merge_fold_members(),
-            "ship_latency"),
         # Fano dispersion of the daily arrival counts: burstiness in
         # exact ppm (variance-to-mean, cleared denominators)
         "fano_daily": lambda s, d: TS.fano_daily(
             load_table(s, d, "events")),
-        # Fano maintained continuously off the folded daily series
-        "streaming_fano": lambda s, d: _cosched_group(
-            s, d, "event_folds", _event_fold_members(), "fano"),
         # DBSCAN over the quantized exact-PCA plane: complete 3x3
         # grid-cell blocking (never all-pairs), min-label core
         # components, deterministic min-rule borders; the oracle runs
@@ -3345,33 +2927,6 @@ def _base_queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         # daily table, Pearson tail on the ranks
         "spearman_daily": lambda s, d: TS.spearman_daily(
             load_table(s, d, "events")),
-        # the KM retention curve maintained continuously off the folded
-        # (cust, day) pair set; shared exact oracle
-        "streaming_kaplan_meier": lambda s, d: _cosched_group(
-            s, d, "merge_folds", _merge_fold_members(), "km_days"),
-        # the OLS pricing model RE-FIT continuously off the folded
-        # moment row (online normal-equation training, constant state);
-        # shared exact oracle
-        "streaming_ols_refit": lambda s, d: _cosched_group(
-            s, d, "merge_folds", _merge_fold_members(), "ols_moments"),
-        # HITS maintained continuously off the folded bipartite edge
-        # table; shared exact oracle
-        "streaming_hits": lambda s, d: _cosched_group(
-            s, d, "merge_folds", _merge_fold_members(), "hits_edges"),
-        # Theil-Sen trend off the SAME folded daily series (alias
-        # member); shared exact oracle
-        "streaming_theil_sen": lambda s, d: _cosched_group(
-            s, d, "event_folds", _event_fold_members(), "theil_sen"),
-        # Gini / HHI concentration gates maintained continuously off
-        # folded cents tables; shared exact oracles
-        "streaming_gini": lambda s, d: _cosched_group(
-            s, d, "merge_folds", _merge_fold_members(), "gini_cents"),
-        "streaming_hhi": lambda s, d: _cosched_group(
-            s, d, "merge_folds", _merge_fold_members(), "hhi_cents"),
-        # Chao1 vocabulary richness maintained continuously off the
-        # folded token counts; shared exact oracle
-        "streaming_chao1": lambda s, d: _cosched_group(
-            s, d, "doc_folds", _doc_fold_members(), "vocab_counts"),
         # IVF shortlist x SQ8 integer scoring (the FAISS IVFx,SQ8 pair)
         # — the composed ANN index that hash-checks end to end
         "ivf_sq8_search": lambda s, d: ANN.ivf_sq8_search(
@@ -3380,10 +2935,6 @@ def _base_queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         # q20 = 100*q + 15*sum(top-5 seeds), exact BIGINT re-rank
         "rocchio_sq8_rerank": lambda s, d: SIM.rocchio_sq8_rerank(
             load_table(s, d, "embeddings")),
-        # Spearman read off the SAME folded daily series as the
-        # rolling-corr/ACF monitors (alias member); shared exact oracle
-        "streaming_spearman": lambda s, d: _cosched_group(
-            s, d, "event_folds", _event_fold_members(), "spearman"),
         # the model-eval loop closure: the matrix's argmax row as a
         # next-event predictor, scored per from_type in exact ppm
         "next_event_accuracy": lambda s, d: AN.next_event_accuracy(
@@ -3395,8 +2946,6 @@ def _base_queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
             load_table(s, d, "events")),
         "event_stationary_dist": lambda s, d: AN.stationary_distribution(
             AN.event_transition_matrix(load_table(s, d, "events"))),
-        "streaming_transition_matrix": lambda s, d: _cosched_group(
-            s, d, "ord_events", _ord_members(), "transitions"),
         "event_dow_association": lambda s, d: AN.crosstab_association(
             load_table(s, d, "events")),
         # RFM segmentation on exact DISTRIBUTED global ranks (two-phase
@@ -3451,7 +3000,6 @@ def _base_queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         # after 2 min, everything else after 5 — batch + streamed twins
         "dynamic_session_windows": lambda s, d: WIN.dynamic_session_windows(
             load_table(s, d, "events")),
-        "streaming_dynamic_sessions": _q_streaming_dynamic_sessions,
         # row-level sessionizer: session id ON the event row (lag +
         # running sum — the twin of session_windows' per-session aggs)
         "sessionize": lambda s, d: WIN.sessionize(load_table(s, d, "events")),
@@ -3499,10 +3047,6 @@ def _base_queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
                 load_table(s, d, "documents")
                 .filter(F.col("doc_id") % 10 != 0),
                 cache_key=d)),
-        # the same dedup run CONTINUOUSLY: per-micro-batch foreachBatch
-        # against the static corpus index; union of batches == the
-        # one-shot answer (shared oracle)
-        "streaming_incremental_dedup": _q_streaming_incremental_dedup,
         "dup_components": lambda s, d: DD.dup_components(
             load_table(s, d, "documents"), cache_key=d),
         # banded Hamming LSH is LOSSLESS for n_bands > max_hamming, so
@@ -3585,45 +3129,8 @@ def _base_queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         # redundancy — the semantic tier of the dedup family
         "semantic_dedup": lambda s, d: SIM.semantic_dedup(
             load_table(s, d, "embeddings")),
-        # vector-index ingest as a stream: per-micro-batch assignment
-        # against the broadcast trained-quantizer artifact
-        "streaming_centroid_ingest": _q_streaming_centroid_ingest,
-        # model inference per micro-batch (stream face of the classifier)
-        "streaming_quality_classifier": _q_streaming_quality_classifier,
-        # keyless band join as a stream-stream join (grid cell = key)
-        "streaming_band_cooccurrence": _q_streaming_band_cooccurrence,
         # structured streaming (replayed as bounded multi-batch streams;
         # results must equal the batch oracles — stream/batch equivalence)
-        "streaming_wordcount": _q_streaming_wordcount,
-        # Kafka wire-path: fake_kafka Python DataSource (exact Kafka
-        # source schema) → decode_kafka → tokenize → count
-        "streaming_kafka_wordcount": _q_streaming_kafka_wordcount,
-        # provider parity: same pipeline, RocksDB state store
-        "streaming_wordcount_rocksdb": _q_streaming_wordcount_rocksdb,
-        "streaming_blacklist_filter": _q_streaming_blacklist,
-        "streaming_sliding_counts": _q_streaming_sliding,
-        "streaming_top3_per_window": _q_streaming_top3,
-        "streaming_click_purchase_join": _q_streaming_conversions,
-        "streaming_stateful_totals": _q_streaming_stateful_totals,
-        "streaming_dedup": _q_streaming_dedup,
-        # bounded-state twin: dropDuplicatesWithinWatermark evicts
-        # seen-keys past the dedup window (retransmission model)
-        "streaming_dedup_watermark": _q_streaming_dedup_watermark,
-        "streaming_quality_filter": _q_streaming_quality_filter,
-        "streaming_session_windows": _q_streaming_sessions,
-        # the continuous aggregate maintained CONTINUOUSLY: the same
-        # daily_event_rollup operator run as a streaming aggregation —
-        # the state store does the incremental maintenance; the final
-        # state equals the batch rollup (shared oracle)
-        # update mode + last-epoch-wins: per-trigger output is bounded
-        # by touched (day, type) cells, not every day ever seen
-        "streaming_daily_rollup": lambda s, d: _cosched_group(
-            s, d, "rs_events", _rs_events_members(), "daily_rollup"),
-        # the fixed-grid histogram maintained CONTINUOUSLY: same operator
-        # fn as a streaming aggregation on a derived (computed-bucket)
-        # key; final state equals the batch grid (shared oracle)
-        "streaming_histogram": lambda s, d: _cosched_group(
-            s, d, "rs_events", _rs_events_members(), "histogram"),
         # stream-stream join semantics, batch-planned (same operator fn)
         # funnel latency summary: exact p50/p90 seconds from first
         # click to first subsequent purchase (global-rank values)
@@ -3641,14 +3148,6 @@ def _base_queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
             load_table(s, d, "events"), how="right_outer"),
         "click_attribution_full": lambda s, d: CV.click_purchase_conversions(
             load_table(s, d, "events"), how="full_outer"),
-        "streaming_click_attribution_outer": _q_streaming_click_attr_outer,
-        "streaming_click_attribution_full": _q_streaming_click_attr_full,
-        "streaming_click_attribution_right": _q_streaming_click_attr_right,
-        # chained streaming aggregations (multiple stateful operators)
-        "streaming_two_level_agg": _q_streaming_two_level,
-        # pivot on a stream: fixed-category conditional agg (the .pivot()
-        # API needs the key set up front and is not streamable)
-        "streaming_pivot_counts": _q_streaming_pivot,
         # as-of join (union+window composition, no range-join blowup)
         "asof_click_attribution": lambda s, d: AS.asof_click_attribution(
             load_table(s, d, "events")),
@@ -3688,14 +3187,6 @@ def _base_queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
             [(r.left, r.right) for r in BPE.bpe_train(
                 load_table(s, d, "documents"), n_merges=8, cache_key=d)
              .orderBy("step").collect()][:6]),
-        # the learned tokenizer applied AT INGEST: merges broadcast as a
-        # plan constant, map-only per micro-batch, per-doc stats folded
-        # additively — shares bpe_segment_stats' unrolled oracle
-        "streaming_bpe_segment": _q_streaming_bpe_segment,
-        # the streamed fertility twin off the same folded segment stats
-        # — shares bpe_fertility_by_lang's oracle verbatim
-        "streaming_bpe_fertility": lambda s, d: _cosched_group(
-            s, d, "doc_folds", _doc_fold_members(), "bpe_fertility"),
         "bpe_token_stats": lambda s, d: TX.bpe_token_stats(load_table(s, d, "documents")),
         # tokenizer-equity eval off the SAME cached merge artifact:
         # subwords per word by language (fertility, Acs 2019) — high-
@@ -3717,16 +3208,6 @@ def _base_queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         # argmax window (score DESC, lang ASC)
         "langid_scores": lambda s, d: LID.langid_scores(
             load_table(s, d, "documents"), cache_key=d),
-        # the router run CONTINUOUSLY: per-micro-batch scoring against
-        # the fixed broadcast weight artifact (doc_folds group) — the
-        # corpus-routing-at-ingest shape; batch-disjoint docs, so the
-        # union of per-batch predictions shares langid_scores' oracle
-        "streaming_langid_scores": lambda s, d: _cosched_group(
-            s, d, "doc_folds", _doc_fold_members(), "langid"),
-        # the eval twin off the same at-ingest prediction stream —
-        # shares langid_confusion's oracle verbatim
-        "streaming_langid_confusion": lambda s, d: _cosched_group(
-            s, d, "doc_folds", _doc_fold_members(), "langid_confusion"),
         # the eval harness: confusion matrix on the held-out odd half.
         # Honest-fixture note: the synthetic documents share ONE
         # 31-word vocabulary across all langs (the lang label is
@@ -3770,10 +3251,6 @@ def _base_queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
             load_table(s, d, "documents")),
         "winnow_overlap": lambda s, d: TX.winnow_overlap(
             load_table(s, d, "documents")),
-        # streamed ingest twin: per-batch map-only winnowing; union of
-        # batches == one-shot (every doc in exactly one batch) — shared
-        # oracle
-        "streaming_winnow": _q_streaming_winnow,
         "vocab_build": lambda s, d: TX.vocab_build(
             load_table(s, d, "documents")),
         # per-doc OOV gate vs the top-20 corpus vocab (broadcast
@@ -3791,10 +3268,6 @@ def _base_queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
             load_table(s, d, "documents")),
         "top_drift_tokens": lambda s, d: TX.top_drift_tokens(
             load_table(s, d, "documents")),
-        # the drift monitor as a STREAM: additive count-table fold per
-        # micro-batch (counts_fold_sink) — final state ≡ one-shot, so
-        # the streamed statistic shares the batch oracle
-        "streaming_token_drift": _q_streaming_token_drift,
         # feature-hashed bag-of-words (hashing trick): text -> fixed-dim
         # sparse vector, the bridge into the ANN stack; long form is the
         # scale-correct sparse spelling
@@ -3834,42 +3307,26 @@ def _base_queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         # per-logit label-count table, one IEEE divide
         "quality_auc": lambda s, d: CLF.quality_auc(
             load_table(s, d, "documents")),
-        "streaming_quality_auc": lambda s, d: _cosched_group(
-            s, d, "doc_folds", _doc_fold_members(), "auc_counts"),
         # precision/recall/F1 at 9 pinned logit thresholds off the
         # SAME count table — floor-ppm, NULL (never 0/0) when no
         # predicted positives
         "classifier_pr_curve": lambda s, d: CLF.classifier_pr_curve(
             load_table(s, d, "documents")),
-        "streaming_pr_curve": lambda s, d: _cosched_group(
-            s, d, "doc_folds", _doc_fold_members(), "pr_curve"),
         # CCNet-style LM quality gate (the generative half next to the
         # discriminative classifier): stupid-backoff over ONE padded
         # trigram count table trained on the en subset, integer
         # floor-ppm scores, mean-DIV gate — no log, no float
         "lm_perplexity_gate": lambda s, d: LM.lm_perplexity_gate(
             load_table(s, d, "documents"), cache_key=d),
-        # the count-table model maintained CONTINUOUSLY off the en
-        # stream; marginals + full-corpus scoring at read; shared
-        # exact oracle
-        "streaming_lm_gate": lambda s, d: _cosched_group(
-            s, d, "doc_folds", _doc_fold_members(), "lm_counts"),
         # Gopher-style repetition gate: top-token fraction +
         # distinct-bigram ratio in floor-ppm, pinned keep thresholds;
         # bigram side fully map-side (zip_with + array_distinct)
         "gopher_repetition_report": lambda s, d:
             TX.gopher_repetition_report(load_table(s, d, "documents")),
-        # per-batch report accumulation (docs batch-disjoint — union
-        # of batches ≡ one-shot; shared oracle)
-        "streaming_gopher_repetition": lambda s, d: _cosched_group(
-            s, d, "doc_folds", _doc_fold_members(), "gopher_rep"),
         # per-source LM league table: keep-rate + avg score by
         # provider off the same trained count table
         "lm_gate_by_source": lambda s, d: LM.lm_gate_by_source(
             load_table(s, d, "documents"), cache_key=d),
-        # ALIAS reader of the lm_counts fold (one state, two readers)
-        "streaming_lm_by_source": lambda s, d: _cosched_group(
-            s, d, "doc_folds", _doc_fold_members(), "lm_by_source"),
         # DSIR-style hashed n-gram importance weighting (Xie et al.
         # 2023): per-doc log importance ratio of target (en) vs source
         # (full corpus) hashed-bigram distributions through the PINNED
@@ -3880,11 +3337,6 @@ def _base_queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "dsir_importance_weights": lambda s, d:
             DS.dsir_importance_weights(
                 load_table(s, d, "documents"), cache_key=d),
-        # the bucket-total artifact maintained CONTINUOUSLY off the
-        # corpus stream; weights + scoring + draw at read; shared
-        # exact oracle
-        "streaming_dsir_weights": lambda s, d: _cosched_group(
-            s, d, "doc_folds", _doc_fold_members(), "dsir_buckets"),
         # per-source governance league table: volume + rule-gate pass
         # ppm + decimal-exact mean quality + near-dup incidence
         "source_quality_report": lambda s, d: PL.source_quality_report(
@@ -3954,21 +3406,12 @@ def _base_queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
             DD.dedup_keep_best(load_table(s, d, "documents"), cache_key=d),
             target_ppm={"en": 400000, "de": 150000, "es": 150000,
                         "fr": 150000, "zh": 150000}),
-        # the SAME chain as a continuously-running corpus gate: per
-        # micro-batch corpus_prep_apply against prebuilt drop-set and
-        # rate artifacts (round-5 VERDICT #8)
-        "streaming_corpus_prep": _q_streaming_corpus_prep,
         # interval-containment lookup (operators/rangejoin.py): grid
         # blocking turns the keyless [lo, hi) containment join into a
         # broadcast EQUI join — the IP-range/score-tier lookup shape
         # whose naive spelling is a BroadcastNestedLoopJoin
         "value_tier_totals": lambda s, d: RJ.value_tier_totals(
             load_table(s, d, "events"), RJ.value_tiers(s)),
-        # the SAME lookup per micro-batch: stream-static broadcast of
-        # the exploded tier grid into each trigger's equi join, counts
-        # finalized in complete mode — shared oracle
-        "streaming_value_tiers": lambda s, d: _cosched_group(
-            s, d, "rs_events", _rs_events_members(), "value_tiers"),
         # SHUFFLE-grid range join (operators/rangejoin.py range_join):
         # both sides fact-sized, no equi key — intervals replicate into
         # span/B+1 grid cells, points key by their one cell, ordinary
@@ -4200,33 +3643,6 @@ def _base_queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         # ~|Q|*nprobe/n_cells of the corpus, recall_ppm pure integer
         "knn_ivf_graph_det": lambda s, d: ANN.ivf_graph_det(
             load_table(s, d, "embeddings"), cache_key=d),
-        # ANN SERVING at ingest: query micro-batches search the static
-        # deterministic IVF index (built once, broadcast artifacts);
-        # queries are batch-disjoint so the union of per-batch top-k
-        # equals the one-shot multi-query search — shared oracle
-        "streaming_ivf_search": lambda s, d: _cosched_group(
-            s, d, "emb_folds", _emb_fold_members(), "ivf_serve"),
-        # distributed PCA maintained CONTINUOUSLY: each embedding
-        # micro-batch folds its exact second-moment table into the
-        # accumulated state (pipelines.counts_fold_sink — the moments
-        # are cell-wise ADDITIVE under corpus partition), and the
-        # corpus-independent power iteration runs once on the final
-        # state. The fold reaches the one-shot statistics bit-for-bit,
-        # so the streamed loadings share embedding_pca_loadings' oracle
-        # verbatim (the streaming_token_drift discipline)
-        "streaming_pca_loadings": lambda s, d: _cosched_group(
-            s, d, "emb_folds", _emb_fold_members(), "pca"),
-        # the streamed top-2 twin: identical fold, projected-deflation
-        # read extended to the second component — matches
-        # embedding_pca_top2 exactly and shares its oracle
-        "streaming_pca_top2": lambda s, d: _cosched_group(
-            s, d, "emb_folds", _emb_fold_members(), "pca_top2"),
-        # streamed clustering twin (r11 verdict item 6): deterministic
-        # Lloyd k-means RE-FIT AT READ off the same folded moment
-        # state — axes from the fold, one projection scan, fixed-round
-        # fit; shares kmeans_pca_centroids' oracle verbatim
-        "streaming_kmeans_centroids": lambda s, d: _cosched_group(
-            s, d, "emb_folds", _emb_fold_members(), "kmeans_centroids"),
         "ivf_recall_det": lambda s, d: ANN.ivf_recall_det(
             load_table(s, d, "embeddings"), cache_key=d),
         "knn_ivf_det": lambda s, d: ANN.knn_ivf_det(
@@ -4378,9 +3794,6 @@ def _base_queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         # exact heavy hitters, with the exact count and the overestimate
         # alongside — the sketch-error report (est >= exact always)
         "cm_user_estimates": _q_cm_user_estimates,
-        # the CM grid folded per micro-batch (cell-wise addition = the
-        # CM merge) — shares the one-shot grid's oracle
-        "streaming_cm_sketch": _q_streaming_cm_sketch,
         "countmin_user_sketch": lambda s, d: SKC.countmin_build(
             load_table(s, d, "events"), "user_id"),
         # Misra-Gries / SpaceSaving heavy hitters (Metwally 2005;
@@ -4391,21 +3804,12 @@ def _base_queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         # sortByKey+take surface
         "spacesaving_hot_words": lambda s, d: SKC.spacesaving_hot_words(
             load_table(s, d, "documents"), k=20),
-        # the counter table folded per micro-batch (counter addition =
-        # the MG merge pre-prune), pruned once at read — exact-equality
-        # path, shares the one-shot oracle
-        "streaming_spacesaving_hot_words": _q_streaming_spacesaving,
         # per-GROUP heavy hitters (grouped MG prune — WindowGroupLimit
         # keeps k+1 rows per group map-side before the one exchange):
         # the per-tenant frequent-items report, same per-group bound
         "spacesaving_terms_per_lang": lambda s, d:
             SKC.spacesaving_terms_per_lang(
                 load_table(s, d, "documents"), k=10),
-        # the grouped counter table folded per micro-batch (additive),
-        # grouped prune at read — shares the batch oracle; rides the
-        # documents co-scheduled replay group
-        "streaming_spacesaving_per_lang": lambda s, d: _cosched_group(
-            s, d, "doc_folds", _doc_fold_members(), "spacesaving_lang"),
         # engine-exact HLL: the approximate distinct that CAN be
         # hash-checked (md5 hash + integer registers + one shared-literal
         # divide — unlike approx_count_distinct's private seeds)
@@ -4428,26 +3832,16 @@ def _base_queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
                     "#", F.col("user_id").cast("string"),
                     F.to_date("ts").cast("string")).alias("akey")),
             "event_type", "akey", k=64),
-        # streamed ingest twin: per-micro-batch register fold
-        # (pipelines.theta_sketch_sink) — exact merge, shared oracle
-        "streaming_theta_overlap": _q_streaming_theta_overlap,
         # KLL-class bounded-state quantile sketch, engine-exact: KMV
         # bottom-k registers (md5-deterministic "compaction") → exact
         # integer rank pick; hash-checked because the estimates are raw
         # input doubles selected by integer math on both engines
         "kmv_quantity_quantiles": _q_kmv_quantity_quantiles,
-        # the sketch as streaming state: per-batch registers fold by the
-        # exact bottom-k merge; final quantiles == one-shot (shared oracle)
-        "streaming_kmv_quantiles": _q_streaming_kmv_quantiles,
         # quantiles per TIME WINDOW: constant sketch state per day where
         # exact percentiles hold O(rows/window)
         "kmv_daily_value_quantiles": _q_kmv_daily_value_quantiles,
         # the sketch put to work: broadcast per-day p05/p95, map-side clip
         "winsorized_event_values": _q_winsorized_event_values,
-        # the register table as streaming state (update-mode max merge)
-        "streaming_hll_distinct": _q_streaming_hll_distinct,
-        # sketch per time window: HLL registers keyed by (day, type)
-        "streaming_windowed_hll": _q_streaming_windowed_hll,
         # multimodal plumbing (binary payloads + typed metadata)
         "multimodal_meta": lambda s, d: MM.media_metadata(load_table(s, d, "documents")),
         "media_resize_meta": lambda s, d: MM.fake_resize(
@@ -4473,9 +3867,6 @@ def _base_queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         # so a single lost/duplicated/corrupted row anywhere in the
         # write-commit-read path is a driver red row
         "custom_sink_roundtrip": _q_custom_sink_roundtrip,
-        # the sink's STREAMING spelling: per-epoch idempotent manifest
-        # accumulation through foreachBatch (round-5 VERDICT #3)
-        "streaming_jsonl_sink": _q_streaming_jsonl_sink,
         # Arrow-native batch UDF surface (mapInArrow — pyarrow.compute
         # kernels, no pandas hop); shares the pandas_token_counts oracle
         "arrow_token_counts": lambda s, d: G.arrow_token_counts(
@@ -4487,9 +3878,6 @@ def _base_queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         # inserts append, base survives — deterministic update/insert
         # sets derived from customer
         "scd1_customer_merge": lambda s, d: _scd1_customer_merge(s, d),
-        # the same merge maintained continuously (foreachBatch upsert
-        # sink ≡ PersistWordCount's MySQL pattern; shared oracle)
-        "streaming_scd1_merge": _q_streaming_scd1_merge,
         # SCD-type-2 versioned history: full build from the change log,
         # the forward-in-time delta merge (≡ rebuild, hash-checked), and
         # the continuously-folding streamed spelling
@@ -4506,35 +3894,9 @@ def _base_queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
                 "user_id", "ts", ["event_type"]),
             "user_id", "ts"),
         "scd2_status_merge": _q_scd2_status_merge,
-        "streaming_scd2_merge": _q_streaming_scd2_merge,
-        # additive digit-count fold: the Benford amount-quality monitor
-        # run continuously; shares the batch oracle verbatim
-        "streaming_benford": _q_streaming_benford,
-        "streaming_referential_audit": lambda s, d: _cosched_group(
-            s, d, "merge_folds", _merge_fold_members(), "fkaudit"),
-        "streaming_textrank": lambda s, d: _cosched_group(
-            s, d, "doc_folds", _doc_fold_members(), "textrank"),
-        "streaming_event_sequences": lambda s, d: _cosched_group(
-            s, d, "event_folds", _event_fold_members(), "sequences"),
-        "streaming_stratum_allocation": lambda s, d: _cosched_group(
-            s, d, "doc_folds", _doc_fold_members(), "stratum_alloc"),
-        # the tempered-mixture twin off the same folded lang counts —
-        # shares temperature_mixture's oracle verbatim
-        "streaming_temperature_mixture": lambda s, d: _cosched_group(
-            s, d, "doc_folds", _doc_fold_members(), "temp_mixture"),
-        # the as-of lookup served per micro-batch against the published
-        # history artifact (stream-static, stateless, append)
-        "streaming_events_asof_status": _q_streaming_events_asof_status,
         # CDC derivation: diff the day-15 and day-25 per-user state
         # snapshots into an I/U/D change feed (merge.snapshot_diff —
         # one full-outer key join, map-side NULL-safe change test)
-        # the change feed PRODUCED continuously: per-epoch I/U rows
-        # from consecutive folded-state versions (Delta-CDF analog)
-        "streaming_cdc_feed": _q_streaming_cdc_feed,
-        # as-of enrichment against a CHANGING history: fold dim changes
-        # into SCD2 state, then join the same epoch's facts against the
-        # just-updated versions (per-epoch hash-verified feed)
-        "streaming_scd2_asof_feed": _q_streaming_scd2_asof_feed,
         "cdc_user_status": lambda s, d: MG2.snapshot_diff(
             _user_state_at(load_table(s, d, "events"), "2024-01-15"),
             _user_state_at(load_table(s, d, "events"), "2024-01-25"),
@@ -4578,7 +3940,7 @@ def _base_queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "zorder_key_events": lambda s, d: _zorder_key_events(s, d),
         "video_frame_offsets": lambda s, d: MM.frame_offsets(
             MM.to_media_table(load_table(s, d, "documents"))),
-    }
+    } | _group_queries()
 
 
 # --- oracle SQL (DuckDB dialect, same tables as views) ---------------------
@@ -5412,7 +4774,6 @@ GROUP BY e.vec_id"""
     else:
         tail = "SELECT dim, loading FROM loadings"
     return "WITH " + head + "," + ",".join(rounds) + "," + final + "\n" + tail
-
 
 
 def _STATIONARY_SQL(n_iters=8):

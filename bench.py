@@ -90,7 +90,7 @@ def main() -> None:
     # whole group (members redeem the shared run and report ~0), so the
     # honest cross-round comparison unit for these entries is the
     # FAMILY SUBTOTAL — stamped here so every reader has it without
-    # cross-referencing __spark_entry__'s _cosched_group call sites
+    # reading __spark_entry__'s member tables (_COSCHED_TABLE)
     groups = entrymod.cosched_groups()
     # batch artifact-sharing families (shared memoized builds): same
     # subtotal-only comparison rule as the replay groups

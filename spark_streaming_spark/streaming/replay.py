@@ -16,6 +16,7 @@ import atexit
 import os
 import shutil
 import tempfile
+import threading
 import uuid
 from contextlib import contextmanager
 
@@ -55,6 +56,11 @@ _REPLAY_CONFS = {
 }
 
 
+# process-wide: held by _state_partitions from save to restore
+# (re-entrant, so a nested replay start on the same thread is fine)
+_CONF_LOCK = threading.RLock()
+
+
 @contextmanager
 def _state_partitions(spark: SparkSession, n: int | None):
     """Pin the number of state-store partitions (+ the bounded-replay
@@ -65,25 +71,33 @@ def _state_partitions(spark: SparkSession, n: int | None):
     cardinality, NOT to the batch shuffle width. Locally a handful of
     state stores beats 32 (fewer delta files + maintenance tasks per
     micro-batch); on a 1000-executor cluster this is where you'd set
-    O(cores) before ``start()``."""
-    saved: dict[str, str | None] = {}
-    for k, v in _REPLAY_CONFS.items():
+    O(cores) before ``start()``.
+
+    The confs are session-global, and co-scheduled runners start
+    queries from several threads: :data:`_CONF_LOCK` is held from save
+    to restore, so one thread can never save another's replay values
+    as the "original" and restore them for every later query. Callers
+    wrap only the ``start()``, so the queries still overlap their
+    awaits."""
+    with _CONF_LOCK:
+        saved: dict[str, str | None] = {}
+        for k, v in _REPLAY_CONFS.items():
+            try:
+                saved[k] = spark.conf.get(k)
+            except Exception:
+                saved[k] = None
+            spark.conf.set(k, v)
+        if n is not None:
+            saved[_SHUFFLE_KEY] = spark.conf.get(_SHUFFLE_KEY)
+            spark.conf.set(_SHUFFLE_KEY, str(n))
         try:
-            saved[k] = spark.conf.get(k)
-        except Exception:
-            saved[k] = None
-        spark.conf.set(k, v)
-    if n is not None:
-        saved[_SHUFFLE_KEY] = spark.conf.get(_SHUFFLE_KEY)
-        spark.conf.set(_SHUFFLE_KEY, str(n))
-    try:
-        yield
-    finally:
-        for k, v in saved.items():
-            if v is None:
-                spark.conf.unset(k)
-            else:
-                spark.conf.set(k, v)
+            yield
+        finally:
+            for k, v in saved.items():
+                if v is None:
+                    spark.conf.unset(k)
+                else:
+                    spark.conf.set(k, v)
 
 
 def chunk_to_dir(df: DataFrame, n_chunks: int, base_dir: str | None = None) -> str:
@@ -143,17 +157,7 @@ def run_to_memory(stream_df: DataFrame, output_mode: str = "complete",
             .trigger(availableNow=True)
             .start()
         )
-    try:
-        finished = q.awaitTermination(timeout_sec)
-        if not finished:
-            raise TimeoutError(
-                f"stream did not finish within {timeout_sec}s — refusing to "
-                f"return a partial result"
-            )
-    finally:
-        q.stop()
-        shutil.rmtree(ckpt, ignore_errors=True)
-    return spark.table(name)
+    return Run(q, ckpt, lambda: spark.table(name)).finish(timeout_sec)
 
 
 def run_to_parquet(stream_df: DataFrame, output_mode: str = "complete",
@@ -207,64 +211,26 @@ def run_to_parquet(stream_df: DataFrame, output_mode: str = "complete",
     ).finish(timeout_sec)
 
 
-def run_many_to_parquet(jobs: list[dict], timeout_sec: int = 300) -> list[DataFrame]:
-    """Co-schedule SEVERAL independent availableNow replays on the one
-    session and await them together (VERDICT r8 #3): each job is a
-    kwargs dict for :func:`start_to_parquet`. Structured Streaming runs
-    concurrent queries on the shared scheduler, so n sibling replays
-    pay ~one replay's wall clock instead of n — this is what cuts the
-    per-entry harness floor when several streamed entries share a
-    source (the bench/driver runs them in one process and the first
-    sibling primes a result cache for the rest).
-
-    Failure coupling is deliberate: if any sibling fails, the whole
-    group raises — better one loud error than a cached partial family.
-    """
-    handles: list[_ParquetRun] = []
-    try:
-        for j in jobs:
-            handles.append(start_to_parquet(**j))
-    except Exception:
-        # a starter failed mid-fan-out: stop the already-running siblings
-        # (and drop their checkpoints) before re-raising, mirroring the
-        # finish-all-then-raise discipline of the await loop below —
-        # otherwise orphaned queries keep running on the shared session
-        for h in handles:
-            h.abort()
-        raise
-    err = None
-    results: list[DataFrame | None] = []
-    for h in handles:
-        try:
-            results.append(h.finish(timeout_sec))
-        except Exception as e:        # keep finishing/stopping the rest
-            results.append(None)
-            if err is None:
-                err = e
-    if err is not None:
-        raise err
-    return results
+# await budget of one bounded replay sink (see Run)
+SINK_BUDGET_S = 300
 
 
-class _ParquetRun:
-    """In-flight availableNow replay started by :func:`start_to_parquet`:
-    holds the query plus everything :meth:`finish` needs to await it,
-    enforce the final_epoch guard, and read the sink back."""
+class Run:
+    """One in-flight availableNow query — in Structured Streaming terms
+    one incremental plan plus one checkpoint — and the function that
+    reads its result once it has drained. Every bounded replay in the
+    engine (plain parquet replays, fold sinks, merged fold replays)
+    is awaited, read and torn down through this one handle.
 
-    def __init__(self, q, spark, out, mode, schema, had_transform,
-                 last_epoch_keys, keep_epoch, final_epoch, wrote_state,
-                 ckpt):
+    ``budget_s`` is the await budget of :meth:`finish`:
+    :data:`SINK_BUDGET_S` for a query hosting one sink; a starter whose
+    query hosts several sinks scales it by their count."""
+
+    def __init__(self, q, ckpt: str, read):
         self.q = q
-        self.spark = spark
-        self.out = out
-        self.mode = mode
-        self.schema = schema
-        self.had_transform = had_transform
-        self.last_epoch_keys = last_epoch_keys
-        self.keep_epoch = keep_epoch
-        self.final_epoch = final_epoch
-        self.wrote_state = wrote_state
         self.ckpt = ckpt
+        self.read = read
+        self.budget_s = SINK_BUDGET_S
 
     def abort(self) -> None:
         """Stop the query and drop its checkpoint WITHOUT reading a
@@ -276,46 +242,92 @@ class _ParquetRun:
             pass
         shutil.rmtree(self.ckpt, ignore_errors=True)
 
-    def finish(self, timeout_sec: int = 300) -> DataFrame:
+    def finish(self, timeout_sec: float | None = None):
+        budget = self.budget_s if timeout_sec is None else timeout_sec
         try:
-            finished = self.q.awaitTermination(timeout_sec)
-            if not finished:
+            if not self.q.awaitTermination(budget):
                 # stopping here would leave a truncated (append) or stale
-                # (complete) parquet result that reads as if it were final
+                # (complete) result that reads as if it were final
                 raise TimeoutError(
-                    f"stream did not finish within {timeout_sec}s — "
+                    f"stream did not finish within {budget}s — "
                     f"refusing to return a partial result"
                 )
         finally:
             self.q.stop()
             shutil.rmtree(self.ckpt, ignore_errors=True)
-        spark, out = self.spark, self.out
-        if self.mode not in ("append", "update") \
-                and not self.wrote_state["wrote"]:
-            raise RuntimeError(
-                f"final_epoch={self.final_epoch} never fired (replay "
-                f"produced fewer micro-batches than predicted) — no "
-                f"result written"
-            )
-        if self.mode == "foreach":
-            return spark.read.parquet(out).drop("epoch_id")
-        if self.mode == "update":
-            result = spark.read.parquet(out)
-            if self.last_epoch_keys:
-                from pyspark.sql.window import Window as W
+        return self.read()
 
-                w = W.partitionBy(*self.last_epoch_keys).orderBy(
-                    F.col("epoch_id").desc()
-                )
-                result = (
-                    result.withColumn("_rn", F.row_number().over(w))
-                    .filter(F.col("_rn") == 1)
-                    .drop("_rn")
-                )
-            return result if self.keep_epoch else result.drop("epoch_id")
-        if self.had_transform:
-            return spark.read.parquet(out)  # schema set by the transform
-        return spark.read.schema(self.schema).parquet(out)
+
+# the handle's former name, which the benchmark harness still reads
+_ParquetRun = Run
+
+
+def start_foreach(stream_df: DataFrame, batch_fn, read,
+                  output_mode: str = "append") -> Run:
+    """Start ``stream_df`` into the ``foreachBatch`` sink ``batch_fn``
+    under ``trigger(availableNow=True)`` with a throwaway checkpoint,
+    and return the :class:`Run` whose ``finish`` awaits it and then
+    calls ``read()``. Session confs are the caller's: wrap the call in
+    :func:`_state_partitions` when the query needs them."""
+    ckpt = scratch_dir("spark_ckpt_")
+    q = (
+        stream_df.writeStream.foreachBatch(batch_fn)
+        .outputMode(output_mode)
+        .option("checkpointLocation", ckpt)
+        .trigger(availableNow=True)
+        .start()
+    )
+    return Run(q, ckpt, read)
+
+
+def run_all(starts: dict) -> dict:
+    """Co-schedule several availableNow replays on the one session and
+    await them together: ``starts`` maps a name to a zero-argument
+    starter returning a :class:`Run`. Structured Streaming runs
+    concurrent queries on the shared scheduler, so n sibling replays
+    pay ~one replay's wall clock instead of n.
+
+    Failure coupling is deliberate: if a starter raises, the siblings
+    already started are aborted (no orphaned query keeps running on the
+    shared session) and the error re-raises; if a ``finish`` raises,
+    the rest are still finished and stopped, then the first error
+    raises — better one loud error than a cached partial family."""
+    runs: dict[str, Run] = {}
+    try:
+        for name, start in starts.items():
+            runs[name] = start()
+    except Exception:
+        for r in runs.values():
+            r.abort()
+        raise
+    results, err = {}, None
+    for name, r in runs.items():
+        try:
+            results[name] = r.finish()
+        except Exception as e:  # noqa: BLE001 — finish/stop the rest
+            if err is None:
+                err = e
+    if err is not None:
+        raise err
+    return results
+
+
+def _epoch_writer(out: str, batch_fn=None):
+    """foreachBatch body appending each epoch's ``batch_fn(batch)``
+    under its own ``epoch_id`` partition of ``out`` — a dynamic
+    partition overwrite, so a replayed epoch rewrites only itself
+    (idempotent, no cross-epoch loss)."""
+    def write(batch_df: DataFrame, epoch_id: int) -> None:
+        if batch_fn is not None:
+            batch_df = batch_fn(batch_df)
+        (
+            batch_df.withColumn("epoch_id", F.lit(epoch_id))
+            .write.mode("overwrite")
+            .option("partitionOverwriteMode", "dynamic")
+            .partitionBy("epoch_id")
+            .parquet(out)
+        )
+    return write
 
 
 def start_to_parquet(stream_df: DataFrame, output_mode: str = "complete",
@@ -323,80 +335,88 @@ def start_to_parquet(stream_df: DataFrame, output_mode: str = "complete",
                      batch_transform=None,
                      last_epoch_keys: list[str] | None = None,
                      keep_epoch: bool = False,
-                     final_epoch: int | None = None) -> _ParquetRun:
+                     final_epoch: int | None = None) -> Run:
     """Start (without awaiting) the availableNow parquet replay that
     :func:`run_to_parquet` documents — the start half of the start/
-    finish split that lets :func:`run_many_to_parquet` overlap sibling
-    replays. All parameter semantics are run_to_parquet's."""
+    finish split that lets :func:`run_all` overlap sibling replays.
+    All parameter semantics are run_to_parquet's; the mode-specific
+    readback is the handle's read function."""
+    if output_mode == "append" and batch_transform is not None:
+        raise ValueError("batch_transform requires complete/update mode")
     out = scratch_dir("spark_stream_out_")
-    ckpt = scratch_dir("spark_ckpt_")
     atexit.register(shutil.rmtree, out, ignore_errors=True)
     spark = stream_df.sparkSession
+    schema = stream_df.schema
 
-    state = {"wrote": True}
     with _state_partitions(spark, state_partitions):
         if output_mode == "append":
-            if batch_transform is not None:
-                raise ValueError("batch_transform requires complete/update mode")
-            writer = (
+            ckpt = scratch_dir("spark_ckpt_")
+            q = (
                 stream_df.writeStream.format("parquet")
                 .outputMode("append")
                 .option("path", out)
                 .option("checkpointLocation", ckpt)
+                .trigger(availableNow=True)
+                .start()
             )
-        elif output_mode == "update":
+            return Run(q, ckpt, lambda: spark.read.schema(schema).parquet(out))
+
+        if output_mode == "update":
             # update mode emits per-trigger CHANGED rows: keep every
-            # epoch's delta, idempotently — each epoch overwrites only its
-            # own partition directory (replay-safe, no cross-epoch loss)
-            def append_epoch(batch_df: DataFrame, epoch_id: int) -> None:
-                if batch_transform is not None:
-                    batch_df = batch_transform(batch_df)
-                (
-                    batch_df.withColumn("epoch_id", F.lit(epoch_id))
-                    .write.mode("overwrite")
-                    .option("partitionOverwriteMode", "dynamic")
-                    .partitionBy("epoch_id")
-                    .parquet(out)
+            # epoch's delta, each in its own epoch partition
+            def read_update() -> DataFrame:
+                result = spark.read.parquet(out)
+                if last_epoch_keys:
+                    from pyspark.sql.window import Window as W
+
+                    w = W.partitionBy(*last_epoch_keys).orderBy(
+                        F.col("epoch_id").desc()
+                    )
+                    result = (
+                        result.withColumn("_rn", F.row_number().over(w))
+                        .filter(F.col("_rn") == 1)
+                        .drop("_rn")
+                    )
+                return result if keep_epoch else result.drop("epoch_id")
+
+            return start_foreach(stream_df,
+                                 _epoch_writer(out, batch_transform),
+                                 read_update, "update")
+
+        # ``final_epoch`` (complete mode): when the caller knows the
+        # number of micro-batches upfront (a bounded replay does:
+        # ceil(chunks / files_per_trigger)), intermediate epochs run
+        # to a NOOP sink — the plan must still execute (the state
+        # update rides on it; an empty foreachBatch body fails the
+        # query outright, test-pinned) but only the LAST epoch's
+        # snapshot is ever read, so earlier parquet writes + the
+        # batch_transform are pure harness cost. ``wrote`` guards a
+        # mispredicted final epoch: failing loud beats returning an
+        # empty scan as if it were the result.
+        wrote = [final_epoch is None]
+
+        def overwrite_epoch(batch_df: DataFrame, epoch_id: int) -> None:
+            if final_epoch is not None and epoch_id < final_epoch:
+                batch_df.write.format("noop").mode("overwrite").save()
+                return
+            if batch_transform is not None:
+                batch_df = batch_transform(batch_df)
+            batch_df.write.mode("overwrite").parquet(out)
+            wrote[0] = True
+
+        def read_snapshot() -> DataFrame:
+            if not wrote[0]:
+                raise RuntimeError(
+                    f"final_epoch={final_epoch} never fired (replay "
+                    f"produced fewer micro-batches than predicted) — no "
+                    f"result written"
                 )
+            if batch_transform is not None:
+                return spark.read.parquet(out)  # schema set by the transform
+            return spark.read.schema(schema).parquet(out)
 
-            writer = (
-                stream_df.writeStream.foreachBatch(append_epoch)
-                .outputMode("update")
-                .option("checkpointLocation", ckpt)
-            )
-        else:
-            # ``final_epoch`` (complete mode): when the caller knows the
-            # number of micro-batches upfront (a bounded replay does:
-            # ceil(chunks / files_per_trigger)), intermediate epochs run
-            # to a NOOP sink — the plan must still execute (the state
-            # update rides on it; an empty foreachBatch body fails the
-            # query outright, test-pinned) but only the LAST epoch's
-            # snapshot is ever read, so earlier parquet writes + the
-            # batch_transform are pure harness cost. ``wrote`` guards a
-            # mispredicted final epoch: failing loud beats returning an
-            # empty scan as if it were the result.
-            state["wrote"] = final_epoch is None
-
-            def overwrite_epoch(batch_df: DataFrame, epoch_id: int) -> None:
-                if final_epoch is not None and epoch_id < final_epoch:
-                    batch_df.write.format("noop").mode("overwrite").save()
-                    return
-                if batch_transform is not None:
-                    batch_df = batch_transform(batch_df)
-                batch_df.write.mode("overwrite").parquet(out)
-                state["wrote"] = True
-
-            writer = (
-                stream_df.writeStream.foreachBatch(overwrite_epoch)
-                .outputMode(output_mode)
-                .option("checkpointLocation", ckpt)
-            )
-        q = writer.trigger(availableNow=True).start()
-    return _ParquetRun(
-        q, spark, out, output_mode, stream_df.schema,
-        batch_transform is not None, last_epoch_keys, keep_epoch,
-        final_epoch, state, ckpt,
-    )
+        return start_foreach(stream_df, overwrite_epoch, read_snapshot,
+                             output_mode)
 
 
 def run_polled_to_parquet(stream_df: DataFrame, target_input_rows: int,
@@ -459,58 +479,32 @@ def run_polled_to_parquet(stream_df: DataFrame, target_input_rows: int,
     return spark.read.parquet(out)
 
 
-def run_foreach_to_parquet(stream_df: DataFrame, batch_fn,
-                           timeout_sec: int = 300,
-                           state_partitions: int | None = None) -> DataFrame:
-    """Run a bounded stream where each micro-batch is processed by an
-    arbitrary BATCH computation ``batch_fn(batch_df) -> DataFrame`` and
-    the per-batch results are appended under an epoch partition — the
-    foreachBatch escape hatch for logic no streaming plan can host
-    (per-batch joins/aggregations against static tables, model apply,
-    merge-style sinks). Epoch-partitioned dynamic overwrite keeps the
-    append idempotent under replay, exactly like the update-mode sink in
-    :func:`run_to_parquet`. Returns the union of all epochs' results as
-    a batch scan (epoch column dropped)."""
-    return start_foreach_to_parquet(
-        stream_df, batch_fn, state_partitions=state_partitions,
-    ).finish(timeout_sec)
+def epoch_parquet_sink(spark: SparkSession, batch_fn):
+    """``(batch_op, read)`` of the per-batch accumulation sink: each
+    micro-batch is processed by an arbitrary BATCH computation
+    ``batch_fn(batch_df) -> DataFrame`` and the per-batch results are
+    appended under an epoch partition — the foreachBatch escape hatch
+    for logic no streaming plan can host (per-batch joins/aggregations
+    against static tables, model apply, merge-style sinks).
+    Epoch-partitioned dynamic overwrite keeps the append idempotent
+    under replay, exactly like the update-mode sink in
+    :func:`run_to_parquet`. ``read()`` returns the union of all
+    epochs' results as a batch scan (epoch column dropped)."""
+    out = scratch_dir("spark_stream_out_")
+    atexit.register(shutil.rmtree, out, ignore_errors=True)
+    return (_epoch_writer(out, batch_fn),
+            lambda: spark.read.parquet(out).drop("epoch_id"))
 
 
 def start_foreach_to_parquet(stream_df: DataFrame, batch_fn,
-                             state_partitions: int | None = None) -> "_ParquetRun":
-    """Start half of :func:`run_foreach_to_parquet` (the
-    run_many_to_parquet / co-scheduling split): starts the foreachBatch
-    epoch-partitioned sink and returns a handle whose ``finish`` awaits
-    the query and reads back the union of epochs."""
-    out = scratch_dir("spark_stream_out_")
-    ckpt = scratch_dir("spark_ckpt_")
-    atexit.register(shutil.rmtree, out, ignore_errors=True)
+                             state_partitions: int | None = None) -> Run:
+    """Start ``stream_df`` into the :func:`epoch_parquet_sink` of
+    ``batch_fn``; the handle's ``finish`` awaits the query and reads
+    back the union of epochs."""
     spark = stream_df.sparkSession
-
-    def run_batch(batch_df: DataFrame, epoch_id: int) -> None:
-        (
-            batch_fn(batch_df)
-            .withColumn("epoch_id", F.lit(epoch_id))
-            .write.mode("overwrite")
-            .option("partitionOverwriteMode", "dynamic")
-            .partitionBy("epoch_id")
-            .parquet(out)
-        )
-
+    op, read = epoch_parquet_sink(spark, batch_fn)
     with _state_partitions(spark, state_partitions):
-        q = (
-            stream_df.writeStream.foreachBatch(run_batch)
-            .outputMode("append")
-            .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-            .start()
-        )
-    # reuse _ParquetRun with "update"-free flags: keep_epoch=False via a
-    # plain read + drop in a closure-less shape — mode "foreach" reads
-    # the epoch union
-    run = _ParquetRun(q, spark, out, "foreach", None, False, None, False,
-                      None, {"wrote": True}, ckpt)
-    return run
+        return start_foreach(stream_df, op, read)
 
 
 def cleanup(path: str) -> None:

@@ -96,7 +96,8 @@ def test_emb_folds_read_tail_budget():
         "emb_folds grew beyond its budgeted size — re-justify the "
         "read-tail cost (see r12 VERDICT nit) before raising this cap")
     # the two known-heavy read tails, named so a rename resurfaces this
-    assert {"pca_top2", "kmeans_centroids"} <= set(members)
+    assert {"streaming_pca_top2", "streaming_kmeans_centroids"} \
+        <= set(members)
 
 
 def test_doc_folds_membership_budget():
@@ -121,8 +122,8 @@ def test_doc_folds_membership_budget():
         "raising this cap")
     # the known-heavy members, named so a rename resurfaces this note:
     # the elected replay leader and the two LM count-table read tails
-    assert {"bpe_fertility", "lm_counts", "lm_by_source"} \
-        <= set(members)
+    assert {"streaming_bpe_fertility", "streaming_lm_gate",
+            "streaming_lm_by_source"} <= set(members)
 
 
 def test_merge_folds_membership_budget():
@@ -145,8 +146,8 @@ def test_merge_folds_membership_budget():
         "per-entry read-tail rate (r14 VERDICT #7) before raising "
         "this cap")
     # the known-heavy members, named so a rename resurfaces this note
-    assert {"hits_edges", "fuzzy_linkage", "transit_deltas"} \
-        <= set(members)
+    assert {"streaming_hits", "streaming_record_linkage",
+            "streaming_transit_peaks"} <= set(members)
 
 
 def test_bench_summary_line_fits_driver_tail_capture():
@@ -185,28 +186,24 @@ def test_bench_summary_line_fits_driver_tail_capture():
         f"capture — move fields to BENCH_DETAIL.json")
 
 
-def test_cosched_groups_map_is_consistent(spark):
-    """The bench-facing entry->group map (entrymod.cosched_groups) must
-    name real entries and agree in SIZE with every co-scheduled member
-    dict — a member added to a group without a map row would silently
-    report an unexplained ~0 bench time. (spark fixture: some member
-    factories build Column expressions at definition time.)"""
+def test_cosched_groups_map_is_consistent():
+    """The entry->group map (entrymod.cosched_groups) and the group
+    entries' queries() registrations are both derived from the member
+    tables (entrymod._COSCHED_TABLE): the registered group entries and
+    the map's keys are the same set, every entry sits in exactly one
+    member table — the one its map row names — and its registration
+    runs that group for that entry. No Spark session: building the map
+    must not need one (bench.py and perfbench read it before Spark)."""
     groups = entrymod.cosched_groups()
-    assert set(groups) <= set(QUERIES)
-    from collections import Counter
-
-    sizes = Counter(groups.values())
-    assert sizes["attr_modes"] == len(entrymod._ATTR_MEMBERS)
-    assert sizes["ord_events"] == len(entrymod._ord_members())
-    assert sizes["doc_folds"] == len(entrymod._doc_fold_members())
-    assert sizes["event_folds"] == len(entrymod._event_fold_members())
-    assert sizes["emb_folds"] == len(entrymod._emb_fold_members())
-    assert sizes["rs_events"] == len(entrymod._rs_events_members())
-    assert sizes["rs_documents"] == len(entrymod._rs_docs_members())
-    assert sizes["merge_folds"] == len(entrymod._merge_fold_members())
-    assert sizes["dedup_replays"] == len(entrymod._dedup_replay_members())
-    assert sizes["misc_replays"] == len(entrymod._misc_replay_members())
-    assert sum(sizes.values()) == len(groups)
+    group_call = next(iter(entrymod._group_queries().values())).__code__
+    in_queries = {n for n, fn in QUERIES.items()
+                  if getattr(fn, "__code__", None) is group_call}
+    assert in_queries == set(groups)
+    tables = {g: set(fn()) for g, fn in entrymod._COSCHED_TABLE.items()}
+    for name, group in groups.items():
+        assert [g for g, t in tables.items() if name in t] == [group]
+        assert QUERIES[name].__defaults__ == (group, name)
+    assert sum(len(t) for t in tables.values()) == len(groups)
 
 
 def test_batch_families_map_names_real_entries():

@@ -277,7 +277,8 @@ def test_scd2_asof_feed_picks_up_new_versions(spark):
     from spark_streaming_spark.operators.merge import (
         scd2_from_changes, temporal_join)
 
-    feed = E._q_streaming_scd2_asof_feed(spark, SF_DIR).localCheckpoint()
+    feed = E.queries()["streaming_scd2_asof_feed"](
+        spark, SF_DIR).localCheckpoint()
     # (a) versions born after the first cutoff serve later-epoch facts
     picked_new = feed.filter(
         (F.col("epoch") >= 1)

@@ -956,9 +956,11 @@ def test_final_epoch_underprediction_returns_true_final_snapshot(spark):
     assert got == {0: 10, 1: 10, 2: 10, 3: 10}
 
 
-def test_run_many_to_parquet_matches_serial(spark):
+def test_run_all_matches_serial(spark):
     """Co-scheduled replays return exactly what serial replays return —
-    the contract _cosched_group's result cache relies on."""
+    the contract the co-scheduled groups' result cache relies on."""
+    import functools
+
     df = spark.range(300).select(
         (F.col("id") % 5).alias("k"), F.lit(1).alias("v"))
     d = replay.chunk_to_dir(df, 3)
@@ -971,23 +973,181 @@ def test_run_many_to_parquet_matches_serial(spark):
     serial = [sorted(tuple(r) for r in replay.run_to_parquet(
         build(m), "complete", state_partitions=4).collect())
         for m in (0, 1, 2)]
-    outs = replay.run_many_to_parquet(
-        [dict(stream_df=build(m), output_mode="complete",
-              state_partitions=4) for m in (0, 1, 2)])
-    co = [sorted(tuple(r) for r in out.collect()) for out in outs]
+    outs = replay.run_all({
+        m: functools.partial(replay.start_to_parquet, build(m), "complete",
+                             state_partitions=4)
+        for m in (0, 1, 2)})
+    co = [sorted(tuple(r) for r in outs[m].collect()) for m in (0, 1, 2)]
     assert serial == co and all(len(s) == 4 for s in serial)
+
+
+def _counting_replay(spark, d):
+    """A started availableNow replay over chunk dir ``d`` (one file per
+    trigger, so it runs several micro-batches)."""
+    return replay.start_to_parquet(
+        replay.stream_from_dir(spark, d).groupBy("k").count(), "complete")
+
+
+def test_run_all_aborts_started_siblings_when_a_start_fails(spark):
+    """A starter that raises after siblings have started: the started
+    queries are stopped (none left on the session, checkpoints gone) and
+    the starter's error re-raises."""
+    import os
+
+    import pytest as _pytest
+
+    d = replay.chunk_to_dir(
+        spark.range(300).select((F.col("id") % 5).alias("k")), 3)
+    started, active_at_failure = [], []
+
+    def start_ok():
+        started.append(_counting_replay(spark, d))
+        return started[-1]
+
+    def start_bad():
+        active_at_failure.append(len(spark.streams.active))
+        raise RuntimeError("starter failed")
+
+    with _pytest.raises(RuntimeError, match="starter failed"):
+        replay.run_all({"a": start_ok, "b": start_ok, "c": start_bad})
+    assert active_at_failure == [2]
+    assert spark.streams.active == []
+    assert not any(os.path.exists(r.ckpt) for r in started)
+
+
+def test_run_all_finishes_every_member_before_raising(spark):
+    """A member whose finish raises does not stop the others from being
+    finished (awaited, read, stopped); the first error surfaces after."""
+    import pytest as _pytest
+
+    d = replay.chunk_to_dir(
+        spark.range(300).select((F.col("id") % 5).alias("k")), 3)
+    reads = []
+
+    def start_timing_out():
+        run = _counting_replay(spark, d)
+        run.budget_s = 0.001  # finish times out at once: no sleep
+        return run
+
+    def start_ok():
+        run = _counting_replay(spark, d)
+        read = run.read
+        run.read = lambda: reads.append(read()) or reads[-1]
+        return run
+
+    with _pytest.raises(TimeoutError, match="did not finish"):
+        replay.run_all({"slow": start_timing_out, "ok": start_ok})
+    assert len(reads) == 1 and reads[0].count() == 5
+    assert spark.streams.active == []
+
+
+def test_merged_replay_budget_scales_with_sinks(spark):
+    """One merged query hosting n sibling sinks awaits n sinks' budget
+    (read off the handle; nothing waits)."""
+    import __spark_entry__ as E
+
+    noop = ((lambda batch_df, epoch_id: None), (lambda: None))
+    subs = {"a": noop, "b": noop, "c": noop}
+    run = E._merged_fold_starter("events", lambda s, d: subs)(spark, SF_DIR)
+    try:
+        assert run.budget_s == 3 * replay.SINK_BUDGET_S
+    finally:
+        run.abort()
+    d = replay.chunk_to_dir(spark.range(3).select(F.col("id").alias("k")), 1)
+    single = _counting_replay(spark, d)
+    try:
+        assert single.budget_s == replay.SINK_BUDGET_S
+    finally:
+        single.abort()
+
+
+def test_state_partitions_restores_confs_across_threads(monkeypatch):
+    """Two threads start replays concurrently (the misc_replays group):
+    A is inside _state_partitions when B tries to enter. Whatever B
+    saves, once both have left every conf is back to its original value.
+    Without the conf lock B saves A's replay values as the "originals"
+    and restores them last, leaving the session at a replay's settings.
+    Driven by events: A leaves as soon as B has either entered (read a
+    conf) or blocked on the lock."""
+    import types
+
+    errors = []
+    a_in, a_out, b_progress = (threading.Event(), threading.Event(),
+                               threading.Event())
+
+    def b_moves():
+        if threading.current_thread() is tb:
+            b_progress.set()
+
+    class _Conf:
+        def __init__(self):
+            self.d = {"spark.sql.shuffle.partitions": "200"}
+
+        def get(self, k):
+            b_moves()
+            return self.d[k]  # KeyError for an unset key, like Spark
+
+        def set(self, k, v):
+            self.d[k] = v
+
+        def unset(self, k):
+            self.d.pop(k, None)
+
+    class _SpyLock:
+        def __init__(self):
+            self.lock = threading.RLock()
+
+        def __enter__(self):
+            b_moves()
+            self.lock.acquire()
+
+        def __exit__(self, *exc):
+            self.lock.release()
+
+    monkeypatch.setattr(replay, "_CONF_LOCK", _SpyLock(), raising=False)
+    session = types.SimpleNamespace(conf=_Conf())
+    original = dict(session.conf.d)
+
+    def run_a():
+        try:
+            with replay._state_partitions(session, 3):
+                a_in.set()
+                assert b_progress.wait(30)
+        except BaseException as e:  # noqa: BLE001 — surfaced below
+            errors.append(e)
+        finally:
+            a_in.set()
+            a_out.set()
+
+    def run_b():
+        try:
+            assert a_in.wait(30)
+            with replay._state_partitions(session, 5):
+                assert a_out.wait(30)
+        except BaseException as e:  # noqa: BLE001 — surfaced below
+            errors.append(e)
+
+    tb = threading.Thread(target=run_b)
+    ta = threading.Thread(target=run_a)
+    tb.start()
+    ta.start()
+    ta.join(60)
+    tb.join(60)
+    assert not errors
+    assert session.conf.d == original
 
 
 def test_cosched_redeem_once_reruns_group(spark):
     """The bench-honesty contract: each member redeems a cached group
     run exactly once; a second invocation of the same member re-runs
-    the whole group (min-of-2 would otherwise report ~0)."""
+    the whole group (min-of-2 would otherwise report ~0). Runs through
+    the one group runner (replay.run_all) with stub handles."""
     import __spark_entry__ as E
 
     calls = {"n": 0}
 
     class _H:
-        def finish(self, timeout_sec=300):
+        def finish(self, timeout_sec=None):
             calls["n"] += 1
             return spark.range(3)
 
