@@ -390,41 +390,35 @@ def _merge_fold_members():
     member keeps its own chunk feed, state dir, and sink — only the
     replays overlap in time (VERDICT r9 #6: these singletons each paid
     a full replay's wall clock)."""
-    import atexit
-    import shutil
-
     from spark_streaming_spark.streaming import replay
     from spark_streaming_spark.streaming.pipelines import (
-        cdc_feed_sink, kmv_sketch_sink, scd1_merge_sink,
+        cdc_feed_sink, counts_fold_sink, kmv_sketch_sink, scd1_merge_sink,
         scd2_asof_enrich_sink, scd2_merge_sink)
 
-    def _scratch(prefix):
-        d = replay.scratch_dir(prefix)
-        atexit.register(shutil.rmtree, d, ignore_errors=True)
-        return d
+    def counts(table, cols, prefix, summarizer, keys, sums):
+        # a counts_fold_sink member; ``summarizer(spark, sf_dir)`` builds
+        # its per-batch summary once per start (static sides load here)
+        return _fold_starter(table, cols, prefix, lambda s, d, sd: (
+            counts_fold_sink(s, summarizer(s, d), keys, sums, sd)))
 
     def scd1_start(spark, sf_dir):
         cust = load_table(spark, sf_dir, "customer")
         chunk_dir = _chunked_table(spark, sf_dir, "scd1_updates3", 3,
                                    df=_scd1_updates(cust))
-        state_dir = _scratch("scd1_state_")
+        sink, read = _state_sink(spark, "scd1_state_", lambda sd: (
+            scd1_merge_sink(spark, cust, "c_custkey", sd)))
         stream = replay.stream_from_dir(spark, chunk_dir,
                                         files_per_trigger=2)
-        return replay.start_foreach(
-            stream,
-            scd1_merge_sink(spark, cust, "c_custkey", state_dir),
-            lambda: _read_current_state(spark, state_dir))
+        return replay.start_foreach(stream, sink, read)
 
     def scd2_start(spark, sf_dir):
         chunk_dir = _ordered_chunked_events_plain(spark, sf_dir)
-        state_dir = _scratch("scd2_state_")
+        sink, read = _state_sink(spark, "scd2_state_", lambda sd: (
+            scd2_merge_sink(spark, "user_id", "ts", ["event_type"], sd)))
         stream = replay.stream_from_dir(spark, chunk_dir,
                                         files_per_trigger=2)
         return replay.start_foreach(
-            stream.select("user_id", "ts", "event_type"),
-            scd2_merge_sink(spark, "user_id", "ts", ["event_type"],
-                            state_dir),
-            lambda: _read_current_state(spark, state_dir))
+            stream.select("user_id", "ts", "event_type"), sink, read)
 
     def cdc_start(spark, sf_dir):
         chunk_dir = _cutoff_chunked_events(spark, sf_dir)
@@ -452,206 +446,37 @@ def _merge_fold_members():
                 state_dir, log_dir),
             lambda: spark.read.parquet(os.path.join(log_dir, "epoch_*")))
 
-    def kmv_start(spark, sf_dir):
-        chunk_dir = _chunked_table(spark, sf_dir, "lineitem", 3)
-        state_dir = _scratch("kmv_state_")
-        stream = replay.stream_from_dir(spark, chunk_dir,
-                                        files_per_trigger=2)
-        return replay.start_foreach(
-            stream.select("l_returnflag", "l_quantity",
-                          "l_orderkey", "l_linenumber"),
-            kmv_sketch_sink(spark, "l_returnflag", "l_quantity",
-                            ["l_orderkey", "l_linenumber"], state_dir),
-            lambda: _read_current_state(spark, state_dir))
-
     def kmv_post(regs, spark, sf_dir):
         return SKC.kmv_quantiles(regs, {
             "p25_qty": 250000, "p50_qty": 500000,
             "p75_qty": 750000, "p95_qty": 950000,
         }).withColumnRenamed("grp", "l_returnflag")
 
-    def benford_start(spark, sf_dir):
-        from spark_streaming_spark.operators import profile as _PF
-        from spark_streaming_spark.streaming.pipelines import (
-            counts_fold_sink)
-
-        chunk_dir = _chunked_table(spark, sf_dir, "orders", 3)
-        state_dir = _scratch("benford_state_")
-        stream = replay.stream_from_dir(spark, chunk_dir,
-                                        files_per_trigger=2)
-        return replay.start_foreach(
-            stream.select("o_totalprice"),
-            counts_fold_sink(
-                spark,
-                lambda b: _PF.benford_digit_counts(b, "o_totalprice"),
-                ["digit"], ["n"], state_dir),
-            lambda: _read_current_state(spark, state_dir))
-
-    def benford_post(counts, spark, sf_dir):
-        from spark_streaming_spark.operators import profile as _PF
-        return _PF.benford_finalize(counts)
-
-    def fkaudit_start(spark, sf_dir):
-        from spark_streaming_spark.operators import profile as _PF
-        from spark_streaming_spark.streaming.pipelines import (
-            counts_fold_sink)
-
-        chunk_dir = _chunked_table(spark, sf_dir, "orders", 3)
-        state_dir = _scratch("fkaudit_state_")
-        stream = replay.stream_from_dir(spark, chunk_dir,
-                                        files_per_trigger=2)
-        return replay.start_foreach(
-            stream.select("o_custkey"),
-            counts_fold_sink(
-                spark,
-                lambda b: _PF.child_key_counts(b, "o_custkey"),
-                ["k"], ["n_rows"], state_dir),
-            lambda: _read_current_state(spark, state_dir))
-
     def fkaudit_post(ck, spark, sf_dir):
-        from spark_streaming_spark.operators import profile as _PF
-        return _PF.fk_audit_from_child_counts(
+        return PF.fk_audit_from_child_counts(
             "orders.o_custkey->customer", ck,
             load_table(spark, sf_dir, "customer"), "c_custkey")
 
-    def ols_start(spark, sf_dir):
-        from spark_streaming_spark.streaming.pipelines import (
-            counts_fold_sink)
-
-        chunk_dir = _chunked_table(spark, sf_dir, "lineitem", 3)
-        state_dir = _scratch("ols_state_")
-        stream = replay.stream_from_dir(spark, chunk_dir,
-                                        files_per_trigger=2)
-        return replay.start_foreach(
-            stream.select("l_extendedprice", "l_quantity", "l_discount"),
-            counts_fold_sink(
-                spark, RG.ols_moments, ["k"],
-                list(RG._MOMENTS), state_dir),
-            lambda: _read_current_state(spark, state_dir))
-
-    def gini_start(spark, sf_dir):
-        from spark_streaming_spark.streaming.pipelines import (
-            counts_fold_sink)
-
-        chunk_dir = _chunked_table(spark, sf_dir, "orders", 3)
-        state_dir = _scratch("gini_state_")
-        stream = replay.stream_from_dir(spark, chunk_dir,
-                                        files_per_trigger=2)
-        return replay.start_foreach(
-            stream.select("o_custkey", "o_totalprice"),
-            counts_fold_sink(spark, RK.customer_cents, ["cust"],
-                             ["cents"], state_dir),
-            lambda: _read_current_state(spark, state_dir))
-
-    def hhi_start(spark, sf_dir):
-        from spark_streaming_spark.streaming.pipelines import (
-            counts_fold_sink)
-
+    def hhi_cents(spark, sf_dir):
         cust = load_table(spark, sf_dir, "customer")
         nat = load_table(spark, sf_dir, "nation")
-        chunk_dir = _chunked_table(spark, sf_dir, "orders", 3)
-        state_dir = _scratch("hhi_state_")
-        stream = replay.stream_from_dir(spark, chunk_dir,
-                                        files_per_trigger=2)
-        return replay.start_foreach(
-            stream.select("o_custkey", "o_totalprice"),
-            counts_fold_sink(
-                spark, lambda b: A.market_cents(cust, b, nat),
-                ["n_name"], ["cents"], state_dir),
-            lambda: _read_current_state(spark, state_dir))
+        return lambda b: A.market_cents(cust, b, nat)
 
-    def hits_start(spark, sf_dir):
-        from spark_streaming_spark.streaming.pipelines import (
-            counts_fold_sink)
+    def with_orders(fn):
+        # a lineitem summary ``fn(batch, orders)`` over static orders
+        def summarizer(spark, sf_dir):
+            od = load_table(spark, sf_dir, "orders")
+            return lambda b: fn(b, od)
+        return summarizer
 
-        od = load_table(spark, sf_dir, "orders")
-        chunk_dir = _chunked_table(spark, sf_dir, "lineitem", 3)
-        state_dir = _scratch("hits_state_")
-        stream = replay.stream_from_dir(spark, chunk_dir,
-                                        files_per_trigger=2)
-
-        def batch_edges(b):
-            # orders scales with the corpus — no mandatory broadcast
-            # hint; AQE size-dispatches the stream-static join per
-            # micro-batch (r11 verdict).
-            return (b.join(od, b["l_orderkey"] == od["o_orderkey"])
-                    .groupBy(F.col("o_custkey").alias("cust"),
-                             F.col("l_partkey").alias("part"))
-                    .agg(F.count("*").cast("long").alias("w")))
-
-        return replay.start_foreach(
-            stream.select("l_orderkey", "l_partkey"),
-            counts_fold_sink(spark, batch_edges, ["cust", "part"],
-                             ["w"], state_dir),
-            lambda: _read_current_state(spark, state_dir))
-
-    def km_start(spark, sf_dir):
-        from spark_streaming_spark.streaming.pipelines import (
-            counts_fold_sink)
-
-        chunk_dir = _chunked_table(spark, sf_dir, "orders", 3)
-        state_dir = _scratch("km_state_")
-        stream = replay.stream_from_dir(spark, chunk_dir,
-                                        files_per_trigger=2)
-        return replay.start_foreach(
-            stream.select("o_custkey", "o_orderdate"),
-            counts_fold_sink(
-                spark, SV.order_day_pairs, ["cust", "day"], ["cnt"],
-                state_dir),
-            lambda: _read_current_state(spark, state_dir))
-
-    def km_post(pairs, spark, sf_dir):
-        return SV.km_curve_from_subjects(SV.subjects_from_day_pairs(pairs))
-
-    def fuzzy_start(spark, sf_dir):
-        from spark_streaming_spark.streaming.pipelines import (
-            counts_fold_sink)
-
-        chunk_dir = _chunked_table(spark, sf_dir, "customer", 3)
-        state_dir = _scratch("fuzzy_state_")
-        stream = replay.stream_from_dir(spark, chunk_dir,
-                                        files_per_trigger=2)
-        return replay.start_foreach(
-            stream.select("c_name"),
-            counts_fold_sink(
-                spark,
-                lambda b: DD.name_variant_table(b, "c_name")
-                .groupBy("name", "v")
-                .agg(F.count("*").cast("long").alias("cnt")),
-                ["name", "v"], ["cnt"], state_dir),
-            lambda: _read_current_state(spark, state_dir))
-
-    def shiplat_start(spark, sf_dir):
-        from spark_streaming_spark.streaming.pipelines import (
-            counts_fold_sink)
-
-        od = load_table(spark, sf_dir, "orders")
-        chunk_dir = _chunked_table(spark, sf_dir, "lineitem", 3)
-        state_dir = _scratch("shiplat_state_")
-        stream = replay.stream_from_dir(spark, chunk_dir,
-                                        files_per_trigger=2)
-        return replay.start_foreach(
-            stream.select("l_orderkey", "l_shipdate"),
-            counts_fold_sink(
-                spark, lambda b: TS.ship_gap_counts(b, od),
-                ["month", "gap"], ["cnt"], state_dir),
-            lambda: _read_current_state(spark, state_dir))
-
-    def transit_start(spark, sf_dir):
-        from spark_streaming_spark.streaming.pipelines import (
-            counts_fold_sink)
-
-        od = load_table(spark, sf_dir, "orders")
-        chunk_dir = _chunked_table(spark, sf_dir, "lineitem", 3)
-        state_dir = _scratch("transit_state_")
-        stream = replay.stream_from_dir(spark, chunk_dir,
-                                        files_per_trigger=2)
-        return replay.start_foreach(
-            stream.select("l_orderkey", "l_shipdate"),
-            counts_fold_sink(
-                spark, lambda b: TS.transit_daily_deltas(b, od),
-                ["day"], ["delta"], state_dir),
-            lambda: _read_current_state(spark, state_dir))
+    def hits_edges(b, od):
+        # orders scales with the corpus — no mandatory broadcast
+        # hint; AQE size-dispatches the stream-static join per
+        # micro-batch (r11 verdict).
+        return (b.join(od, b["l_orderkey"] == od["o_orderkey"])
+                .groupBy(F.col("o_custkey").alias("cust"),
+                         F.col("l_partkey").alias("part"))
+                .agg(F.count("*").cast("long").alias("w")))
 
     return {
         # The SAME merge maintained CONTINUOUSLY: the update stream arrives
@@ -698,56 +523,90 @@ def _merge_fold_members():
         # is exact, so the final registers — and hence the quantile
         # estimates — equal the one-shot batch sketch: shared oracle with
         # `kmv_quantity_quantiles`.
-        "streaming_kmv_quantiles": (kmv_start, kmv_post),
+        "streaming_kmv_quantiles": (
+            _fold_starter(
+                "lineitem", ["l_returnflag", "l_quantity", "l_orderkey",
+                             "l_linenumber"], "kmv_state_",
+                lambda s, d, sd: kmv_sketch_sink(
+                    s, "l_returnflag", "l_quantity",
+                    ["l_orderkey", "l_linenumber"], sd)),
+            kmv_post),
         # The Benford audit maintained CONTINUOUSLY: per-digit counts are
         # additive under corpus partition, so each micro-batch of orders
         # folds its 9-row digit summary into state (the generic
         # counts_fold_sink) and the conformance ppm table is computed at
         # read — the always-on amount-quality monitor. Fold exact ⇒ shares
         # the batch oracle verbatim.
-        "streaming_benford": (benford_start, benford_post),
+        "streaming_benford": (
+            counts("orders", ["o_totalprice"], "benford_state_",
+                   lambda s, d: lambda b: PF.benford_digit_counts(
+                       b, "o_totalprice"), ["digit"], ["n"]),
+            lambda df, s, d: PF.benford_finalize(df)),
         # FK audit maintained CONTINUOUSLY: child-key counts are
         # additive, the parent side is static — fold counts per batch,
         # audit at read; shares the batch edge's oracle shape
-        "streaming_referential_audit": (fkaudit_start, fkaudit_post),
+        "streaming_referential_audit": (
+            counts("orders", ["o_custkey"], "fkaudit_state_",
+                   lambda s, d: lambda b: PF.child_key_counts(
+                       b, "o_custkey"), ["k"], ["n_rows"]),
+            fkaudit_post),
         # Kaplan-Meier maintained CONTINUOUSLY: the (cust, day) pair
         # set is a union-semilattice (per-batch pair counts fold to the
         # one-shot distinct set), subjects + product-limit tail at
         # read — shares kaplan_meier_repurchase's exact oracle
-        "streaming_kaplan_meier": (km_start, km_post),
+        "streaming_kaplan_meier": (
+            counts("orders", ["o_custkey", "o_orderdate"], "km_state_",
+                   lambda s, d: SV.order_day_pairs, ["cust", "day"],
+                   ["cnt"]),
+            lambda df, s, d: SV.km_curve_from_subjects(
+                SV.subjects_from_day_pairs(df))),
         # the OLS model re-fit CONTINUOUSLY: the 10-cell exact moment
         # row is additive, so each micro-batch folds its moments and
         # the Cramer tail re-solves at read — online training with a
         # constant-size state; shares ols_price_model's exact oracle
         "streaming_ols_refit": (
-            ols_start, lambda df, s, d: RG.ols_from_moments(df)),
+            counts("lineitem",
+                   ["l_extendedprice", "l_quantity", "l_discount"],
+                   "ols_state_", lambda s, d: RG.ols_moments, ["k"],
+                   list(RG._MOMENTS)),
+            lambda df, s, d: RG.ols_from_moments(df)),
         # HITS maintained CONTINUOUSLY: bipartite edge weights are
         # additive counts (stream-static join + fold, the
         # streaming_textrank discipline), iterations at read over the
         # folded totals; shares hits_scores' exact oracle
         "streaming_hits": (
-            hits_start, lambda df, s, d: GRK.hits_from_edges(df)),
+            counts("lineitem", ["l_orderkey", "l_partkey"], "hits_state_",
+                   with_orders(hits_edges), ["cust", "part"], ["w"]),
+            lambda df, s, d: GRK.hits_from_edges(df)),
         # the in-transit concurrency monitor maintained CONTINUOUSLY:
         # sweep-line boundary deltas are additive counts, so per-batch
         # delta tables fold cell-wise to the one-shot table; the spine
         # + running-sum + monthly-peak tail runs at read — shares
         # transit_concurrency_peaks' exact oracle
         "streaming_transit_peaks": (
-            transit_start,
+            counts("lineitem", ["l_orderkey", "l_shipdate"],
+                   "transit_state_", with_orders(TS.transit_daily_deltas),
+                   ["day"], ["delta"]),
             lambda df, s, d: TS.transit_peaks_from_deltas(df)),
         # the latency SLA maintained CONTINUOUSLY: the (month, gap)
         # histogram is additive, rank selection over the folded
         # bounded histogram at read — shares ship_latency_percentiles'
         # exact oracle
         "streaming_ship_latency": (
-            shiplat_start,
+            counts("lineitem", ["l_orderkey", "l_shipdate"],
+                   "shiplat_state_", with_orders(TS.ship_gap_counts),
+                   ["month", "gap"], ["cnt"]),
             lambda df, s, d: TS.ship_latency_from_gap_counts(df)),
         # the SymSpell variant index maintained CONTINUOUSLY:
         # batch-disjoint name sets fold by union to the one-shot
         # deletion-neighborhood index; the candidate join + levenshtein
         # verify run at read — shares fuzzy_customer_pairs' oracle
         "streaming_fuzzy_pairs": (
-            fuzzy_start,
+            counts("customer", ["c_name"], "fuzzy_state_",
+                   lambda s, d: lambda b: DD.name_variant_table(b, "c_name")
+                   .groupBy("name", "v")
+                   .agg(F.count("*").cast("long").alias("cnt")),
+                   ["name", "v"], ["cnt"]),
             lambda df, s, d: DD.fuzzy_pairs_from_variants(
                 df.select("name", "v"))),
         # ALIAS member: linkage decisions read off the SAME folded
@@ -762,12 +621,16 @@ def _merge_fold_members():
         # additive; the global-rank identity tail runs at read — shares
         # the batch gini oracle exactly
         "streaming_gini": (
-            gini_start, lambda df, s, d: RK.gini_from_customer_cents(df)),
+            counts("orders", ["o_custkey", "o_totalprice"], "gini_state_",
+                   lambda s, d: RK.customer_cents, ["cust"], ["cents"]),
+            lambda df, s, d: RK.gini_from_customer_cents(df)),
         # HHI maintained CONTINUOUSLY: per-nation cents are additive
         # (stream-static broadcast dims per batch); cleared-denominator
         # tail at read — shares the batch HHI oracle exactly
         "streaming_hhi": (
-            hhi_start, lambda df, s, d: A.hhi_from_market_cents(df)),
+            counts("orders", ["o_custkey", "o_totalprice"], "hhi_state_",
+                   hhi_cents, ["n_name"], ["cents"]),
+            lambda df, s, d: A.hhi_from_market_cents(df)),
     }
 
 
@@ -982,15 +845,6 @@ def _ordered_chunked_events(spark: SparkSession, sf_dir: str,
     return _ORDERED_CHUNK_CACHE[key]
 
 
-def _read_current_state(spark: SparkSession, state_dir: str) -> DataFrame:
-    """Load the versioned-publish fold sinks' final state (the CURRENT
-    pointer protocol shared by counts_fold_sink / theta_sketch_sink /
-    kmv_sink)."""
-    with open(os.path.join(state_dir, "CURRENT")) as fh:
-        return spark.read.parquet(
-            os.path.join(state_dir, fh.read().strip()))
-
-
 def _merged_fold_starter(table: str, subs_factory):
     """ONE availableNow streaming query hosting EVERY sibling fold /
     per-batch sink of a co-scheduled group (r15, VERDICT r14 "Next
@@ -1045,21 +899,54 @@ def _merged_fold_starter(table: str, subs_factory):
     return start
 
 
-def _sink_sub(spark, sink_factory, prefix, select_fn):
-    """A versioned-publish sink member of a merged replay: own state
-    dir, own publish protocol, same fold as a standalone fold-sink
-    query. ``sink_factory(spark, state_dir)`` builds
-    the foreachBatch fn (counts_fold_sink / theta_sketch_sink / ...)."""
+def _scratch(prefix: str) -> str:
+    """A scratch dir removed at interpreter exit."""
     import atexit
     import shutil
 
     from spark_streaming_spark.streaming import replay
 
-    state_dir = replay.scratch_dir(prefix)
-    atexit.register(shutil.rmtree, state_dir, ignore_errors=True)
-    sink = sink_factory(spark, state_dir)
-    return (lambda b, e: sink(select_fn(b), e),
-            lambda: _read_current_state(spark, state_dir))
+    d = replay.scratch_dir(prefix)
+    atexit.register(shutil.rmtree, d, ignore_errors=True)
+    return d
+
+
+def _state_sink(spark, prefix, make_sink):
+    """``(sink, read)`` of a versioned-state fold sink over its own
+    scratch state dir: ``make_sink(state_dir)`` builds the foreachBatch
+    fn (counts_fold_sink / theta_sketch_sink / ...), and ``read()``
+    loads the state it published (pipelines.VersionedState.current)."""
+    from spark_streaming_spark.streaming.pipelines import VersionedState
+
+    state_dir = _scratch(prefix)
+    return make_sink(state_dir), VersionedState(spark, state_dir).current
+
+
+def _fold_starter(table: str, cols: list[str], prefix: str, make_sink):
+    """Starter of a standalone fold member: its own availableNow query
+    over ``table``'s 3-chunk replay (2 files per trigger), the stream
+    projected to ``cols``, each batch folded by ``make_sink(spark,
+    sf_dir, state_dir)``'s sink; the handle reads back the published
+    state (the :func:`_state_sink` pairing)."""
+    def start(spark: SparkSession, sf_dir: str):
+        from spark_streaming_spark.streaming import replay
+
+        sink, read = _state_sink(spark, prefix,
+                                 lambda sd: make_sink(spark, sf_dir, sd))
+        stream = replay.stream_from_dir(
+            spark, _chunked_table(spark, sf_dir, table, 3),
+            files_per_trigger=2)
+        return replay.start_foreach(stream.select(*cols), sink, read)
+    return start
+
+
+def _sink_sub(spark, make_sink, prefix, select_fn):
+    """A versioned-publish sink member of a merged replay: own state
+    dir, own publish protocol, same fold as a standalone fold-sink
+    query, applied to ``select_fn`` of the shared batch
+    (:func:`_state_sink` builds the sink and its reader)."""
+    sink, read = _state_sink(spark, prefix, make_sink)
+    return lambda b, e: sink(select_fn(b), e), read
 
 
 def _fold_sub(spark, batch_counts, keys, sums, prefix, select_fn,
@@ -1069,8 +956,8 @@ def _fold_sub(spark, batch_counts, keys, sums, prefix, select_fn,
 
     return _sink_sub(
         spark,
-        lambda sp, sd: counts_fold_sink(sp, batch_counts, keys, sums,
-                                        sd, agg_fns=agg_fns),
+        lambda sd: counts_fold_sink(spark, batch_counts, keys, sums, sd,
+                                    agg_fns=agg_fns),
         prefix, select_fn)
 
 
@@ -1260,27 +1147,19 @@ def _ord_members():
         return df.filter(F.col("w_start") <= max_ts)
 
     def transitions_start(spark, sf_dir):
-        import atexit
-        import shutil
-
         from spark_streaming_spark.streaming import replay
         from spark_streaming_spark.streaming.pipelines import (
             transition_fold_sink)
 
         chunk_dir = _ordered_chunked_events(spark, sf_dir)
-        state_dir = replay.scratch_dir("trans_state_")
-        atexit.register(shutil.rmtree, state_dir, ignore_errors=True)
+        sink, read = _state_sink(spark, "trans_state_", lambda sd: (
+            transition_fold_sink(spark, sd)))
         stream = replay.stream_from_dir(spark, chunk_dir,
                                         files_per_trigger=2)
-
-        def read():
-            with open(os.path.join(state_dir, "CURRENT")) as fh:
-                return spark.read.parquet(os.path.join(
-                    state_dir, fh.read().strip(), "pairs"))
         return replay.start_foreach(
             stream.filter(F.col("user_id") >= 0)
             .select("user_id", "ts", "event_id", "event_type"),
-            transition_fold_sink(spark, state_dir), read)
+            sink, lambda: read()["pairs"])
 
     def transitions_post(df, spark, sf_dir):
         totals = df.groupBy("from_type").agg(
@@ -1644,8 +1523,7 @@ def _event_fold_members():
     (they demonstrate the state store, not a foreachBatch fold) and
     still co-schedule alongside."""
     from spark_streaming_spark.streaming import replay
-    from spark_streaming_spark.streaming.pipelines import (
-        counts_fold_sink, theta_sketch_sink)
+    from spark_streaming_spark.streaming.pipelines import theta_sketch_sink
     from spark_streaming_spark.streaming.stateful import (
         running_totals_with_state)
 
@@ -1653,8 +1531,8 @@ def _event_fold_members():
         return {
             "theta": _sink_sub(
                 spark,
-                lambda sp, sd: theta_sketch_sink(sp, "event_type",
-                                                 "akey", sd, k=64),
+                lambda sd: theta_sketch_sink(spark, "event_type", "akey",
+                                             sd, k=64),
                 "theta_state_",
                 lambda st: st.select(
                     "event_type",

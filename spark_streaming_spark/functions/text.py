@@ -23,13 +23,6 @@ def tokens(text: Column | str, sep: str = " ") -> Column:
     return F.split(c, sep)
 
 
-def field_at(text: Column | str, idx: int, sep: str = " ") -> Column:
-    """Positional field extract — reference ``split(" ")[idx]``
-    (``TransformBlacklist.java:43`` uses [1], ``Top3HotProduct.java:46``
-    uses [1],[2])."""
-    return tokens(text, sep).getItem(idx)
-
-
 def token_count(text: Column | str) -> Column:
     """Whitespace token count (BIGINT). DuckDB oracle:
     ``len(string_split(text, ' '))``."""

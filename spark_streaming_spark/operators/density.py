@@ -276,14 +276,6 @@ _KMEANS_CACHE: dict = {}
 _DBSCAN_CACHE: dict = {}
 
 
-def _floor_div(expr: str, den: str) -> str:
-    """Exact floor division for possibly-negative integer SQL
-    expressions (both engines share the C-style truncating %):
-    (x − ((x % n + n) % n)) / n, exactly divisible so trunc == floor."""
-    return (f"CAST(({expr} - ((({expr}) % ({den}) + ({den}))"
-            f" % ({den}))) div ({den}) AS BIGINT)")
-
-
 def kmeans_pca_fit(embeddings: DataFrame, k: int = 4,
                    n_rounds: int = 6,
                    cache_key: str | None = None):

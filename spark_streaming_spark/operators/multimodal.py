@@ -172,39 +172,6 @@ _RESIZE_SCHEMA = StructType([
 ])
 
 
-def resize_image(media: DataFrame, width: int, height: int) -> DataFrame:
-    """Image resize via PIL — STUB (no image libs in this container):
-    raises ``NotImplementedError`` unless PIL imports. Same schema and
-    mapInPandas shape as :func:`fake_resize`, which tests exercise."""
-    if not _HAS_PIL:
-        raise NotImplementedError(
-            "image resize requires PIL; container has no image libs — "
-            "use fake_resize for plumbing tests"
-        )
-
-    def do_resize(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import io
-
-        from PIL import Image as _Image
-        for pdf in batches:
-            rows = []
-            for mid, payload in zip(pdf["media_id"], pdf["payload"]):
-                b = bytes(payload)
-                img = _Image.open(io.BytesIO(b)).resize((width, height))
-                buf = io.BytesIO()
-                img.save(buf, format=img.format or "PNG")
-                out = buf.getvalue()
-                rows.append((mid, out, len(b), len(out)))
-            yield pd.DataFrame(
-                rows,
-                columns=["media_id", "payload_out", "n_bytes_in", "n_bytes_out"],
-            )
-
-    return media.select("media_id", "payload").mapInPandas(
-        do_resize, schema=_RESIZE_SCHEMA
-    )
-
-
 def fake_resize(media: DataFrame, factor: int = 4) -> DataFrame:
     """DETERMINISTIC FAKE resize: keep every ``factor``-th payload byte —
     binary-in/binary-out through the same Arrow mapInPandas path a real

@@ -82,9 +82,3 @@ def has_runtime_bloom_filter(df: DataFrame) -> bool:
     cluster scans; tests lower them to exercise the rule locally)."""
     text = explain_text(df)
     return "might_contain" in text and "bloom_filter_agg" in text
-
-
-def has_whole_stage_codegen(df: DataFrame) -> bool:
-    return "WholeStageCodegen" in explain_text(df, "simple") or "*(" in explain_text(
-        df, "simple"
-    )

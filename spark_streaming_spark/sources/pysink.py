@@ -6,7 +6,7 @@ JDBC inserts and no atomicity; ``/root/reference/README.md:629-681``
 discusses exactly the redeliver-on-failure gap this protocol closes).
 
 Protocol (the standard distributed-commit shape, same discipline as
-``streaming/pipelines.idempotent_parquet_sink``):
+``streaming/replay.epoch_writer``):
 
 * ``write(iterator)`` runs ON EACH EXECUTOR for its partition and
   writes rows to a UNIQUE ``part-<uuid>.jsonl.tmp`` — no coordination,
@@ -31,7 +31,7 @@ Streaming spelling: :func:`foreach_batch_jsonl` gives a ``foreachBatch``
 handler whose per-epoch commit is IDEMPOTENT — epoch files carry an
 ``epoch-<id>-`` prefix and a replayed epoch whose prefix is already in
 the manifest is skipped, so the manifest accumulates each epoch exactly
-once (pairs with ``pipelines.idempotent_parquet_sink``).
+once (pairs with ``replay.epoch_writer``).
 
 At 100 TB this is the object-store writer pattern (task files +
 manifest publish); the local rename stands in for the store's atomic

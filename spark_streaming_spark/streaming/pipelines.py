@@ -27,6 +27,9 @@ Pipeline ↔ reference map:
 
 from __future__ import annotations
 
+import os
+import shutil
+
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
@@ -128,87 +131,128 @@ def dedup_stream_within_watermark(records: DataFrame, keys: list[str],
         keys)
 
 
-def to_console(stream: DataFrame, n_rows: int = 20,
-               output_mode: str = "append"):
-    """Console sink (≡ the reference's ``print()`` on every pipeline,
-    ``WordCount.java:55``): returns the started query. Debug only.
-    Pass ``output_mode="complete"`` (or "update") for aggregation
-    pipelines — append is only legal for stateless/watermarked streams."""
-    return (
-        stream.writeStream.format("console")
-        .option("numRows", str(n_rows))
-        .outputMode(output_mode)
-        .start()
-    )
+class VersionedState:
+    """The one owner of the fold sinks' on-disk state: one ``v{epoch}``
+    parquet directory per published epoch under ``state_dir``, plus a
+    ``CURRENT`` marker file naming the published version. A version is
+    one parquet directory, or a directory of named parquet directories
+    when :meth:`publish` gets a ``{name: frame}`` dict
+    (:func:`transition_fold_sink`'s ``pairs``/``last``); :meth:`before`
+    and :meth:`current` return the shape that was published.
 
+    This is the Structured Streaming spelling of the reference's MySQL
+    running-state upsert (``PersistWordCount.java:76-97``), and the
+    versioned-state-store half of Structured Streaming's exactly-once
+    recipe (SIGMOD 2018: an offset log plus a state store that keeps the
+    last few versions):
 
-def idempotent_parquet_sink(out_dir: str):
-    """foreachBatch sink with exactly-once effect: each epoch overwrites
-    its own partition directory, so replays after failure rewrite the
-    same data instead of duplicating it — the correct version of
-    PersistWordCount's at-least-once row inserts. The same pattern with
-    JDBC is an upsert keyed on (epoch_id, key)."""
+    * publishes are ATOMIC for readers: the new version is written in
+      full before ``CURRENT`` is swapped to it (a temp marker moved over
+      the old one with ``os.replace``);
+    * epoch replay is IDEMPOTENT: a sink folds epoch n into
+      ``before(n)`` — the newest version BELOW n, never CURRENT — so
+      re-running epoch n rewrites v{n} from v{n-1}: same input, same
+      bytes. On a replay CURRENT already points at v{n}; reading it
+      while overwriting the same directory would race the lazy scan
+      against the rewrite (observed FAILED_READ_FILE);
+    * retention is BUILT IN: after each swap only the newest ``KEEP`` =
+      2 versions stay (never CURRENT's target) — enough for a replay of
+      the newest epoch to find its predecessor, the state store's
+      ``minBatchesToRetain`` = 2. Without it a live fold keeps one full
+      table per epoch on disk, without bound;
+    * state between epochs rides the version directories, so a restart
+      resumes from the newest version without replaying the stream.
 
-    def write_batch(batch_df: DataFrame, epoch_id: int) -> None:
-        (
-            batch_df.withColumn("epoch_id", F.lit(epoch_id))
-            .write.mode("overwrite")
-            .option("partitionOverwriteMode", "dynamic")
-            .partitionBy("epoch_id")
-            .parquet(out_dir)
-        )
+    A full rewrite per epoch is the honest cost of a keyed fold on raw
+    parquet — bounded by state size, not stream length; a table
+    format's (Delta/Iceberg) MERGE amortizes it with file-level pruning.
 
-    return write_batch
+    A read of the version this handle last published uses that frame's
+    schema, so the forward fold's predecessor read skips the parquet
+    footer inference, a Spark job per read. Any other version (a fresh
+    handle after a restart, a final-state reader, an epoch replay) is
+    inferred: a fold's schema can change between versions (a decimal
+    SUM widens its precision), so one version's schema must not read
+    another. Parquet reads come back all-nullable either way."""
+
+    KEEP = 2
+
+    def __init__(self, spark, state_dir: str):
+        self.spark = spark
+        self.state_dir = state_dir
+        # (version, {part name: schema}) of the last publish; "" = one frame
+        self._published = (None, {})
+
+    def _versions(self) -> list[int]:
+        if not os.path.isdir(self.state_dir):
+            return []
+        return sorted(int(d[1:]) for d in os.listdir(self.state_dir)
+                      if d.startswith("v") and d[1:].isdigit())
+
+    def _read(self, version: str):
+        vdir = os.path.join(self.state_dir, version)
+        published, schemas = self._published
+        if version != published:
+            parts = [d for d in os.listdir(vdir) if d[0] not in "_."
+                     and os.path.isdir(os.path.join(vdir, d))] or [""]
+            schemas = {
+                p: self.spark.read.parquet(os.path.join(vdir, p)).schema
+                for p in parts}
+        frames = {p: self.spark.read.schema(s).parquet(
+            os.path.join(vdir, p)) for p, s in schemas.items()}
+        return frames[""] if "" in frames else frames
+
+    def before(self, epoch: int):
+        """The newest version below ``epoch``, or ``None`` (first epoch)."""
+        prior = [v for v in self._versions() if v < epoch]
+        return self._read(f"v{max(prior)}") if prior else None
+
+    def publish(self, epoch: int, frames) -> None:
+        """Write ``frames`` (a DataFrame, or ``{name: DataFrame}``) as
+        v{epoch}, swap CURRENT to it, then drop all but the newest
+        ``KEEP`` versions."""
+        parts = frames if isinstance(frames, dict) else {"": frames}
+        version = f"v{epoch}"
+        for p, df in parts.items():
+            df.write.mode("overwrite").parquet(
+                os.path.join(self.state_dir, version, p))
+        self._published = (version, {p: df.schema
+                                     for p, df in parts.items()})
+        tmp = os.path.join(self.state_dir, "CURRENT.tmp")
+        with open(tmp, "w") as fh:
+            fh.write(version)
+        os.replace(tmp, os.path.join(self.state_dir, "CURRENT"))
+        for v in self._versions()[:-self.KEEP]:
+            if v != epoch:
+                shutil.rmtree(os.path.join(self.state_dir, f"v{v}"),
+                              ignore_errors=True)
+
+    def current(self):
+        """The published state: the version CURRENT names."""
+        with open(os.path.join(self.state_dir, "CURRENT")) as fh:
+            return self._read(fh.read().strip())
 
 
 def scd1_merge_sink(spark, base: DataFrame, key: str, state_dir: str):
     """foreachBatch SCD1 merge sink: maintain a keyed TABLE (not a log)
     from a stream of upserts — each micro-batch full-outer-merges into
-    the accumulated state (operators/merge.scd1_merge) and publishes a
-    new state version. This is the Structured Streaming spelling of the
-    reference's MySQL running-count upsert (``PersistWordCount.java:
-    76-97``) generalized to whole-row type-1 merges, and the documented
-    "upsert with foreachBatch" pattern from the Spark guide.
+    the accumulated state (operators/merge.scd1_merge; ``base`` seeds
+    the first epoch) and publishes a new state version. This is the
+    Structured Streaming spelling of the reference's MySQL running-count
+    upsert (``PersistWordCount.java:76-97``) generalized to whole-row
+    type-1 merges, and the documented "upsert with foreachBatch" pattern
+    from the Spark guide. State is published through
+    :class:`VersionedState` — atomic for readers, idempotent under epoch
+    replay, restartable from the newest version; the JDBC twin
+    (jdbc_upsert_sink) pays per-row instead of per-table."""
+    from spark_streaming_spark.operators.merge import scd1_merge
 
-    Versioned directories (``v{epoch}``) + a swap of the CURRENT marker
-    make each publish atomic for readers and the sink idempotent under
-    epoch replay (re-running epoch n rewrites v{n} from v{n-1} — same
-    bytes, exactly-once effect). A full rewrite per batch is the honest
-    cost of keyed merge on raw parquet — bounded by table size, not
-    stream length; a table format's (Delta/Iceberg) MERGE amortizes it
-    with file-level pruning, and the JDBC twin (jdbc_upsert_sink) pays
-    per-row instead. State between epochs rides the version directories,
-    so a restart resumes from CURRENT without replaying the whole
-    stream."""
-    import os
-
-    def state_before(epoch_id: int) -> DataFrame:
-        # the state AS OF the previous epoch, not CURRENT: on an epoch
-        # replay CURRENT already points at v{epoch} — reading it while
-        # overwriting the same directory races the lazy scan against
-        # the rewrite (observed FAILED_READ_FILE), and the merge input
-        # must be the predecessor for the rewrite to be deterministic
-        prior = [
-            int(d[1:]) for d in os.listdir(state_dir)
-            if d.startswith("v") and d[1:].isdigit()
-            and int(d[1:]) < epoch_id
-        ] if os.path.isdir(state_dir) else []
-        if prior:
-            return spark.read.parquet(
-                os.path.join(state_dir, f"v{max(prior)}"))
-        return base
+    state = VersionedState(spark, state_dir)
 
     def write_batch(batch_df: DataFrame, epoch_id: int) -> None:
-        from spark_streaming_spark.operators.merge import scd1_merge
-
-        merged = scd1_merge(state_before(epoch_id), batch_df, key)
-        vdir = f"v{epoch_id}"
-        merged.write.mode("overwrite").parquet(
-            os.path.join(state_dir, vdir))
-        tmp = os.path.join(state_dir, "CURRENT.tmp")
-        with open(tmp, "w") as fh:
-            fh.write(vdir)
-        os.replace(tmp, os.path.join(state_dir, "CURRENT"))
+        prev = state.before(epoch_id)
+        state.publish(epoch_id, scd1_merge(
+            base if prev is None else prev, batch_df, key))
 
     return write_batch
 
@@ -219,42 +263,22 @@ def scd2_merge_sink(spark, key: str, ts_col: str, tracked: list[str],
     stream of change rows — each micro-batch folds into the accumulated
     history via operators/merge.scd2_merge (untouched keys anti-join
     through; affected keys rebuild from compressed-history ∪ batch).
-    Same atomic versioned-publish + CURRENT-marker protocol as
-    :func:`scd1_merge_sink`, so publishes are atomic and epoch replay is
-    idempotent. The stream must be replayed in event-time order
-    (scd2_merge's forward-in-time contract — exactly what a live change
-    feed delivers); a backfill instead rebuilds from the raw log."""
-    import os
+    Published through :class:`VersionedState`, so publishes are atomic
+    and epoch replay is idempotent. The stream must be replayed in
+    event-time order (scd2_merge's forward-in-time contract — exactly
+    what a live change feed delivers); a backfill instead rebuilds from
+    the raw log."""
+    from spark_streaming_spark.operators.merge import (
+        scd2_from_changes, scd2_merge)
 
-    def state_before(epoch_id: int) -> DataFrame | None:
-        # predecessor version, never CURRENT: replay-deterministic and
-        # free of the read-while-overwrite race (scd1_merge_sink note)
-        prior = [
-            int(d[1:]) for d in os.listdir(state_dir)
-            if d.startswith("v") and d[1:].isdigit()
-            and int(d[1:]) < epoch_id
-        ] if os.path.isdir(state_dir) else []
-        if prior:
-            return spark.read.parquet(
-                os.path.join(state_dir, f"v{max(prior)}"))
-        return None
+    state = VersionedState(spark, state_dir)
 
     def write_batch(batch_df: DataFrame, epoch_id: int) -> None:
-        from spark_streaming_spark.operators.merge import (
-            scd2_from_changes, scd2_merge)
-
-        state = state_before(epoch_id)
-        if state is None:
-            merged = scd2_from_changes(batch_df, key, ts_col, tracked)
-        else:
-            merged = scd2_merge(state, batch_df, key, ts_col, tracked)
-        vdir = f"v{epoch_id}"
-        merged.write.mode("overwrite").parquet(
-            os.path.join(state_dir, vdir))
-        tmp = os.path.join(state_dir, "CURRENT.tmp")
-        with open(tmp, "w") as fh:
-            fh.write(vdir)
-        os.replace(tmp, os.path.join(state_dir, "CURRENT"))
+        prev = state.before(epoch_id)
+        state.publish(epoch_id, (
+            scd2_from_changes(batch_df, key, ts_col, tracked)
+            if prev is None
+            else scd2_merge(prev, batch_df, key, ts_col, tracked)))
 
     return write_batch
 
@@ -268,36 +292,19 @@ def kmv_sketch_sink(spark, group_col: str, value_col: str,
     bottom-k of the merged bottom-ks), so the final state equals the
     one-shot sketch over the whole stream — the streamed quantile entry
     shares the batch oracle verbatim. State is min(k, n) rows per group
-    at ANY stream length; the versioned-publish protocol (predecessor
-    read + atomic CURRENT swap) is :func:`scd1_merge_sink`'s —
+    at ANY stream length, published through :class:`VersionedState` —
     replay-idempotent."""
-    import os
-
     from spark_streaming_spark.operators.sketch import (
         kmv_merge, kmv_quantile_registers)
 
-    def _state_before(epoch_id: int):
-        prior = [
-            int(d[1:]) for d in os.listdir(state_dir)
-            if d.startswith("v") and d[1:].isdigit()
-            and int(d[1:]) < epoch_id
-        ] if os.path.isdir(state_dir) else []
-        if prior:
-            return spark.read.parquet(
-                os.path.join(state_dir, f"v{max(prior)}"))
-        return None
+    state = VersionedState(spark, state_dir)
 
     def write_batch(batch_df: DataFrame, epoch_id: int) -> None:
         regs = kmv_quantile_registers(
             batch_df, group_col, value_col, uid_cols, k)
-        prev = _state_before(epoch_id)
-        new = regs if prev is None else kmv_merge(prev, regs, k)
-        new.write.mode("overwrite").parquet(
-            os.path.join(state_dir, f"v{epoch_id}"))
-        tmp = os.path.join(state_dir, "CURRENT.tmp")
-        with open(tmp, "w") as fh:
-            fh.write(f"v{epoch_id}")
-        os.replace(tmp, os.path.join(state_dir, "CURRENT"))
+        prev = state.before(epoch_id)
+        state.publish(epoch_id,
+                      regs if prev is None else kmv_merge(prev, regs, k))
 
     return write_batch
 
@@ -315,25 +322,13 @@ def counts_fold_sink(spark, batch_counts, key_cols: list[str],
     per-column mergeability is exactly what makes the streamed entry
     share the batch oracle verbatim). The stateful-wordcount shape
     generalized: state is O(|keys|) like updateStateByKey, the merge is
-    one partial-agged groupBy over state ∪ batch-summary. Versioned
-    publish (predecessor read + atomic CURRENT swap) as in
-    :func:`scd1_merge_sink` — replay-idempotent."""
-    import os
-
-    def _state_before(epoch_id: int):
-        prior = [
-            int(d[1:]) for d in os.listdir(state_dir)
-            if d.startswith("v") and d[1:].isdigit()
-            and int(d[1:]) < epoch_id
-        ] if os.path.isdir(state_dir) else []
-        if prior:
-            return spark.read.parquet(
-                os.path.join(state_dir, f"v{max(prior)}"))
-        return None
+    one partial-agged groupBy over state ∪ batch-summary. Published
+    through :class:`VersionedState` — replay-idempotent."""
+    state = VersionedState(spark, state_dir)
 
     def write_batch(batch_df: DataFrame, epoch_id: int) -> None:
         new = batch_counts(batch_df)
-        prev = _state_before(epoch_id)
+        prev = state.before(epoch_id)
         if prev is not None:
             new = (
                 prev.unionByName(new)
@@ -341,12 +336,7 @@ def counts_fold_sink(spark, batch_counts, key_cols: list[str],
                 .agg(*[getattr(F, (agg_fns or {}).get(c, "sum"))(c)
                        .alias(c) for c in sum_cols])
             )
-        new.write.mode("overwrite").parquet(
-            os.path.join(state_dir, f"v{epoch_id}"))
-        tmp = os.path.join(state_dir, "CURRENT.tmp")
-        with open(tmp, "w") as fh:
-            fh.write(f"v{epoch_id}")
-        os.replace(tmp, os.path.join(state_dir, "CURRENT"))
+        state.publish(epoch_id, new)
 
     return write_batch
 
@@ -361,35 +351,18 @@ def theta_sketch_sink(spark, group_col: str, key_col: str,
     distinct union), so the final state — and every set-algebra estimate
     derived from it — equals the one-shot batch sketch: the streamed
     entry shares the batch oracle verbatim. State is min(k, n_distinct)
-    rows per group at ANY stream length; the versioned-publish protocol
-    (predecessor read + atomic CURRENT swap) is :func:`scd1_merge_sink`'s
-    — replay-idempotent."""
-    import os
-
+    rows per group at ANY stream length, published through
+    :class:`VersionedState` — replay-idempotent."""
     from spark_streaming_spark.operators.sketch import (
         theta_merge, theta_registers)
 
-    def _state_before(epoch_id: int):
-        prior = [
-            int(d[1:]) for d in os.listdir(state_dir)
-            if d.startswith("v") and d[1:].isdigit()
-            and int(d[1:]) < epoch_id
-        ] if os.path.isdir(state_dir) else []
-        if prior:
-            return spark.read.parquet(
-                os.path.join(state_dir, f"v{max(prior)}"))
-        return None
+    state = VersionedState(spark, state_dir)
 
     def write_batch(batch_df: DataFrame, epoch_id: int) -> None:
         regs = theta_registers(batch_df, group_col, key_col, k)
-        prev = _state_before(epoch_id)
-        new = regs if prev is None else theta_merge(prev, regs, k)
-        new.write.mode("overwrite").parquet(
-            os.path.join(state_dir, f"v{epoch_id}"))
-        tmp = os.path.join(state_dir, "CURRENT.tmp")
-        with open(tmp, "w") as fh:
-            fh.write(f"v{epoch_id}")
-        os.replace(tmp, os.path.join(state_dir, "CURRENT"))
+        prev = state.before(epoch_id)
+        state.publish(epoch_id,
+                      regs if prev is None else theta_merge(prev, regs, k))
 
     return write_batch
 
@@ -406,10 +379,10 @@ def scd2_asof_enrich_sink(spark, key: str, ts_col: str,
     `streaming_events_asof_status` spelling) could never serve.
 
     Exactly-once: the enriched rows land in ``log_dir/epoch_{n}`` with
-    per-epoch overwrite, and the history publish uses the same
-    predecessor-version read + atomic CURRENT swap as
-    :func:`scd1_merge_sink`, so replaying an epoch rewrites both its
-    state version and its log slice to the same bytes.
+    per-epoch overwrite, and the history is published through
+    :class:`VersionedState` (predecessor read + atomic CURRENT swap),
+    so replaying an epoch rewrites both its state version and its log
+    slice to the same bytes.
 
     Oracle-ability: scd2_merge ≡ one-shot rebuild (the
     `streaming_scd2_merge` claim), and a version's interval at any fact
@@ -419,29 +392,18 @@ def scd2_asof_enrich_sink(spark, key: str, ts_col: str,
     as-of join against the full history, with epoch a pure function of
     the fact timestamp. That makes the whole feed — epoch column
     included — hash-checkable by one SQL query."""
-    import os
-
     from spark_streaming_spark.operators.merge import (
         scd2_from_changes, scd2_merge, temporal_join)
 
-    def _state_before(epoch_id: int):
-        prior = [
-            int(d[1:]) for d in os.listdir(state_dir)
-            if d.startswith("v") and d[1:].isdigit()
-            and int(d[1:]) < epoch_id
-        ] if os.path.isdir(state_dir) else []
-        if prior:
-            return spark.read.parquet(
-                os.path.join(state_dir, f"v{max(prior)}"))
-        return None
+    state = VersionedState(spark, state_dir)
 
     def write_batch(batch_df: DataFrame, epoch_id: int) -> None:
         changes = batch_df.select(key, ts_col, *tracked)
-        state = _state_before(epoch_id)
-        if state is None:
+        prev = state.before(epoch_id)
+        if prev is None:
             merged = scd2_from_changes(changes, key, ts_col, tracked)
         else:
-            merged = scd2_merge(state, changes, key, ts_col, tracked)
+            merged = scd2_merge(prev, changes, key, ts_col, tracked)
         merged = merged.localCheckpoint(eager=True)  # one fold, 2 uses
         enriched = temporal_join(
             batch_df.select(*fact_cols),
@@ -449,47 +411,9 @@ def scd2_asof_enrich_sink(spark, key: str, ts_col: str,
         ).withColumn("epoch", F.lit(epoch_id).cast("int"))
         enriched.write.mode("overwrite").parquet(
             os.path.join(log_dir, f"epoch_{epoch_id}"))
-        merged.write.mode("overwrite").parquet(
-            os.path.join(state_dir, f"v{epoch_id}"))
-        tmp = os.path.join(state_dir, "CURRENT.tmp")
-        with open(tmp, "w") as fh:
-            fh.write(f"v{epoch_id}")
-        os.replace(tmp, os.path.join(state_dir, "CURRENT"))
+        state.publish(epoch_id, merged)
 
     return write_batch
-
-
-def vacuum_versions(state_dir: str, keep: int = 2) -> list[str]:
-    """Retention for the versioned-state sinks (scd1/scd2_merge_sink):
-    remove all but the newest ``keep`` version directories, never the
-    one CURRENT points to. Keep ≥ 2 so an epoch replay can still read
-    its predecessor (state_before's contract) after a vacuum. Returns
-    the removed directory names. Unbounded version accumulation is the
-    sink's only unbounded resource — a production fold vacuums on a
-    cadence, exactly like a table format's VACUUM."""
-    import os
-    import shutil
-
-    if keep < 1:
-        raise ValueError("keep must be >= 1")
-    versions = sorted(
-        (int(d[1:]) for d in os.listdir(state_dir)
-         if d.startswith("v") and d[1:].isdigit()),
-        reverse=True,
-    )
-    current = None
-    marker = os.path.join(state_dir, "CURRENT")
-    if os.path.exists(marker):
-        with open(marker) as fh:
-            current = fh.read().strip()
-    removed = []
-    for v in versions[keep:]:
-        name = f"v{v}"
-        if name == current:
-            continue
-        shutil.rmtree(os.path.join(state_dir, name), ignore_errors=True)
-        removed.append(name)
-    return removed
 
 
 def jdbc_upsert_sink(url: str, table: str, properties: dict[str, str]):
@@ -602,19 +526,17 @@ def cdc_feed_sink(spark, state_dir: str, log_dir: str):
     CDF / Debezium-style log), built from operators/merge.snapshot_diff
     applied to consecutive state versions.
 
-    Protocol: same predecessor-version read + atomic CURRENT swap as
-    :func:`scd1_merge_sink` (replay-idempotent: re-running epoch n
-    rewrites v{n} AND its log slice from v{n-1} — same bytes); the log
-    writes to ``log_dir/epoch_{n}`` with per-epoch overwrite, so the
-    accumulated feed is exactly-once under retries. The state fold is
+    Protocol: state is published through :class:`VersionedState`
+    (replay-idempotent: re-running epoch n rewrites v{n} AND its log
+    slice from v{n-1} — same bytes); the log writes to
+    ``log_dir/epoch_{n}`` with per-epoch overwrite, so the accumulated
+    feed is exactly-once under retries. The state fold is
     associative (max of (ts, id)-structs; sum of counts), so folded
     state ≡ one-shot snapshot at each epoch boundary — which is what
     the SQL oracle computes."""
-    import os
-
-    from pyspark.sql import functions as F
-
     from spark_streaming_spark.operators.merge import snapshot_diff
+
+    state = VersionedState(spark, state_dir)
 
     def _compress(df):
         return (
@@ -626,19 +548,9 @@ def cdc_feed_sink(spark, state_dir: str, log_dir: str):
                     F.col("m.event_type").alias("event_type"), "n_events")
         )
 
-    def _state_before(epoch_id: int):
-        prior = [
-            int(d[1:]) for d in os.listdir(state_dir)
-            if d.startswith("v") and d[1:].isdigit() and int(d[1:]) < epoch_id
-        ] if os.path.isdir(state_dir) else []
-        if prior:
-            return spark.read.parquet(
-                os.path.join(state_dir, f"v{max(prior)}"))
-        return None
-
     def write_batch(batch_df, epoch_id: int) -> None:
         bs = _compress(batch_df)
-        prev = _state_before(epoch_id)
+        prev = state.before(epoch_id)
         if prev is None:
             new = bs
             prev_cmp = spark.createDataFrame([], bs.schema)
@@ -665,12 +577,7 @@ def cdc_feed_sink(spark, state_dir: str, log_dir: str):
         )
         diff.write.mode("overwrite").parquet(
             os.path.join(log_dir, f"epoch_{epoch_id}"))
-        new.write.mode("overwrite").parquet(
-            os.path.join(state_dir, f"v{epoch_id}"))
-        tmp = os.path.join(state_dir, "CURRENT.tmp")
-        with open(tmp, "w") as fh:
-            fh.write(f"v{epoch_id}")
-        os.replace(tmp, os.path.join(state_dir, "CURRENT"))
+        state.publish(epoch_id, new)
 
     return write_batch
 
@@ -685,28 +592,17 @@ def transition_fold_sink(spark, state_dir: str):
     min ts >= the prior state's max ts) and ENFORCES it with a loud
     per-epoch guard — on an out-of-order feed the stitch would silently
     undercount, so refusing beats drifting. State is O(|type pairs|) +
-    O(|users|); the versioned CURRENT publish is scd1_merge_sink's —
-    replay-idempotent."""
-    import os
-
+    O(|users|), published through :class:`VersionedState` as two named
+    frames (``pairs``, ``last``) — replay-idempotent."""
     from pyspark.sql.window import Window
 
-    def _state_before(epoch_id: int):
-        prior = [
-            int(d[1:]) for d in os.listdir(state_dir)
-            if d.startswith("v") and d[1:].isdigit()
-            and int(d[1:]) < epoch_id
-        ] if os.path.isdir(state_dir) else []
-        if prior:
-            base = os.path.join(state_dir, f"v{max(prior)}")
-            return (spark.read.parquet(os.path.join(base, "pairs")),
-                    spark.read.parquet(os.path.join(base, "last")))
-        return None, None
+    state = VersionedState(spark, state_dir)
 
     def write_batch(batch_df: DataFrame, epoch_id: int) -> None:
         batch = batch_df.select("user_id", "ts", "event_id", "event_type")
-        prev_pairs, prev_last = _state_before(epoch_id)
-        if prev_last is not None:
+        prev = state.before(epoch_id)
+        if prev is not None:
+            prev_pairs, prev_last = prev["pairs"], prev["last"]
             # guard on the FULL (ts, event_id) order key — the same key
             # the stitch window sorts by. A strict ts-only check would
             # pass a batch event with ts EQUAL to the stored last-event
@@ -739,7 +635,7 @@ def transition_fold_sink(spark, state_dir: str):
             .groupBy("from_type", "to_type")
             .agg(F.count("*").cast("long").alias("n_trans"))
         )
-        pairs = delta if prev_pairs is None else (
+        pairs = delta if prev is None else (
             prev_pairs.unionByName(delta)
             .groupBy("from_type", "to_type")
             .agg(F.sum("n_trans").cast("long").alias("n_trans"))
@@ -749,12 +645,6 @@ def transition_fold_sink(spark, state_dir: str):
             .agg(F.max(F.struct("ts", "event_id", "event_type")).alias("m"))
             .select("user_id", "m.ts", "m.event_id", "m.event_type")
         )
-        base = os.path.join(state_dir, f"v{epoch_id}")
-        pairs.write.mode("overwrite").parquet(os.path.join(base, "pairs"))
-        last.write.mode("overwrite").parquet(os.path.join(base, "last"))
-        tmp = os.path.join(state_dir, "CURRENT.tmp")
-        with open(tmp, "w") as fh:
-            fh.write(f"v{epoch_id}")
-        os.replace(tmp, os.path.join(state_dir, "CURRENT"))
+        state.publish(epoch_id, {"pairs": pairs, "last": last})
 
     return write_batch

@@ -175,8 +175,8 @@ def run_to_parquet(stream_df: DataFrame, output_mode: str = "complete",
     batches) driver traffic — exactly the collect-in-a-loop pattern a
     cluster deployment can't afford); here each epoch's result is written
     by the executors, epochs overwrite (idempotent, replay-safe — the
-    same exactly-once pattern as pipelines.idempotent_parquet_sink), and
-    only parquet footers ever touch the driver.
+    same exactly-once pattern as :func:`epoch_writer`), and only parquet
+    footers ever touch the driver.
 
     * complete/update mode → ``foreachBatch`` + ``mode("overwrite")``:
       the last epoch's full result wins.
@@ -312,11 +312,14 @@ def run_all(starts: dict) -> dict:
     return results
 
 
-def _epoch_writer(out: str, batch_fn=None):
-    """foreachBatch body appending each epoch's ``batch_fn(batch)``
-    under its own ``epoch_id`` partition of ``out`` — a dynamic
-    partition overwrite, so a replayed epoch rewrites only itself
-    (idempotent, no cross-epoch loss)."""
+def epoch_writer(out: str, batch_fn=None):
+    """foreachBatch sink with exactly-once effect: each epoch's
+    ``batch_fn(batch)`` (the batch itself by default) lands under its
+    own ``epoch_id`` partition of ``out`` by a dynamic partition
+    overwrite, so a replayed epoch rewrites only itself — same data,
+    no duplicates, no cross-epoch loss. The correct version of
+    PersistWordCount's at-least-once row inserts; the same pattern with
+    JDBC is an upsert keyed on (epoch_id, key)."""
     def write(batch_df: DataFrame, epoch_id: int) -> None:
         if batch_fn is not None:
             batch_df = batch_fn(batch_df)
@@ -380,7 +383,7 @@ def start_to_parquet(stream_df: DataFrame, output_mode: str = "complete",
                 return result if keep_epoch else result.drop("epoch_id")
 
             return start_foreach(stream_df,
-                                 _epoch_writer(out, batch_transform),
+                                 epoch_writer(out, batch_transform),
                                  read_update, "update")
 
         # ``final_epoch`` (complete mode): when the caller knows the
@@ -492,7 +495,7 @@ def epoch_parquet_sink(spark: SparkSession, batch_fn):
     epochs' results as a batch scan (epoch column dropped)."""
     out = scratch_dir("spark_stream_out_")
     atexit.register(shutil.rmtree, out, ignore_errors=True)
-    return (_epoch_writer(out, batch_fn),
+    return (epoch_writer(out, batch_fn),
             lambda: spark.read.parquet(out).drop("epoch_id"))
 
 

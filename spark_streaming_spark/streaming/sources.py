@@ -115,14 +115,3 @@ def with_processing_time(df: DataFrame, ts_col: str = "proc_ts") -> DataFrame:
     only when arrival-time semantics are the requirement, since results
     are inherently non-reproducible (that's what the reference had)."""
     return df.withColumn(ts_col, F.current_timestamp())
-
-
-def parse_space_log(lines: DataFrame, fields: list[str]) -> DataFrame:
-    """Positional space-split parser — the reference's implicit record
-    format (``TransformBlacklist.java:43``: 'date user', ``Top3HotProduct
-    .java:46``: 'user product category') made explicit and typed once at
-    the boundary."""
-    toks = F.split(F.col("value"), " ")
-    return lines.select(
-        *[toks.getItem(i).alias(name) for i, name in enumerate(fields)]
-    )

@@ -164,29 +164,146 @@ def test_scd2_sink_epoch_replay_idempotent(spark, tmp_path):
         str(tmp_path / "v0")).collect())) == first
 
 
-def test_vacuum_versions_keeps_newest_and_current(spark, tmp_path):
-    """Vacuum drops old version dirs, never the newest `keep` nor the
-    CURRENT target; the folded state survives and replay of the newest
-    epoch can still find its predecessor."""
+def test_fold_sink_keeps_newest_two_versions(spark, tmp_path):
+    """Retention is built into the versioned state: a fold driven
+    through 5 epochs keeps only the newest 2 version dirs, CURRENT names
+    the newest, and replaying the newest epoch still finds its
+    predecessor and rewrites the same rows."""
     import os
 
-    from spark_streaming_spark.streaming.pipelines import (
-        scd2_merge_sink, vacuum_versions)
+    from spark_streaming_spark.streaming.pipelines import counts_fold_sink
 
-    ev = load_table(spark, SF_DIR, "events").select(
-        "user_id", "ts", "event_type").limit(300)
-    sink = scd2_merge_sink(spark, "user_id", "ts", ["event_type"],
-                           str(tmp_path))
-    for epoch in range(4):
-        sink(ev.limit(75 * (epoch + 1)), epoch)
-    removed = vacuum_versions(str(tmp_path), keep=2)
-    assert sorted(removed) == ["v0", "v1"]
-    left = {d for d in os.listdir(str(tmp_path)) if d.startswith("v")}
-    assert left == {"v2", "v3"}
-    with open(os.path.join(str(tmp_path), "CURRENT")) as fh:
-        assert fh.read().strip() == "v3"
-    assert spark.read.parquet(os.path.join(str(tmp_path), "v3")).count() > 0
-    sink(ev, 3)  # replay newest epoch: predecessor v2 still present
+    ev = load_table(spark, SF_DIR, "events")
+
+    def counts(df):
+        return df.groupBy("event_type").agg(F.count("*").alias("n"))
+
+    def epoch_rows(epoch):
+        return ev.filter(F.pmod("event_id", F.lit(5)) == epoch)
+
+    def v4_rows():
+        return sorted(map(tuple, spark.read.parquet(
+            str(tmp_path / "v4")).collect()))
+
+    sink = counts_fold_sink(spark, counts, ["event_type"], ["n"],
+                            str(tmp_path))
+    for epoch in range(5):
+        sink(epoch_rows(epoch), epoch)
+    left = {d for d in os.listdir(tmp_path) if d.startswith("v")}
+    assert left == {"v3", "v4"}
+    with open(tmp_path / "CURRENT") as fh:
+        assert fh.read().strip() == "v4"
+    folded = v4_rows()
+    assert folded == sorted(map(tuple, counts(ev).collect()))
+    sink(epoch_rows(4), 4)  # epoch replay: reads v3, rewrites v4
+    assert v4_rows() == folded
+    assert {d for d in os.listdir(tmp_path) if d.startswith("v")} == left
+
+
+def test_fold_replay_rewrites_same_schema(spark, tmp_path):
+    """A fold's schema can change between versions (a decimal SUM widens
+    its precision by 10 digits each epoch), so replaying epoch 1 must
+    read v0 with v0's own schema, not the schema of the v1 frame the
+    sink last published: the rewritten v1 keeps its type and rows."""
+    from spark_streaming_spark.streaming.pipelines import counts_fold_sink
+
+    ev = load_table(spark, SF_DIR, "events")
+
+    def cents(df):
+        return df.groupBy("event_type").agg(
+            F.sum(F.col("value").cast("decimal(12,2)")).alias("c"))
+
+    def v1():
+        df = spark.read.parquet(str(tmp_path / "v1"))
+        return df.schema, sorted(map(tuple, df.collect()))
+
+    halves = [ev.filter(F.pmod("event_id", F.lit(2)) == i) for i in (0, 1)]
+    sink = counts_fold_sink(spark, cents, ["event_type"], ["c"],
+                            str(tmp_path))
+    sink(halves[0], 0)
+    sink(halves[1], 1)
+    first = v1()
+    sink(halves[1], 1)  # epoch replay
+    assert v1() == first
+
+
+def _format_spellings(path):
+    """(line, what) of every code spelling of the versioned-state format
+    in ``path`` outside pipelines.VersionedState: a CURRENT / CURRENT.tmp
+    marker literal (SQL frames such as CURRENT ROW excluded), a
+    ``startswith("v")`` version listing, or a ``v{…}`` f-string that
+    reaches a call — directly or through a name — as a path or marker."""
+    import ast
+    import re
+
+    tree = ast.parse(path.read_text())
+    docs = {id(n.body[0].value) for n in ast.walk(tree)
+            if isinstance(n, (ast.Module, ast.ClassDef, ast.FunctionDef,
+                              ast.AsyncFunctionDef))
+            and n.body and isinstance(n.body[0], ast.Expr)}
+    owner = set()
+    for n in ast.walk(tree):
+        if isinstance(n, ast.ClassDef) and n.name == "VersionedState":
+            owner |= {id(c) for c in ast.walk(n)}
+    marker = re.compile(r"\bCURRENT\b(?!\s+ROW)")
+
+    def is_version_fstring(n):
+        return (isinstance(n, ast.JoinedStr) and len(n.values) == 2
+                and isinstance(n.values[0], ast.Constant)
+                and n.values[0].value == "v")
+
+    call_args = [a for n in ast.walk(tree) if isinstance(n, ast.Call)
+                 for a in [*n.args, *(k.value for k in n.keywords)]]
+    arg_ids = {id(a) for a in call_args}
+    arg_names = {a.id for a in call_args if isinstance(a, ast.Name)}
+    found = []
+    for n in ast.walk(tree):
+        if id(n) in owner or id(n) in docs:
+            continue
+        if (isinstance(n, ast.Constant) and isinstance(n.value, str)
+                and marker.search(n.value)):
+            found.append((n.lineno, n.value))
+        elif (isinstance(n, ast.Call) and isinstance(n.func, ast.Attribute)
+              and n.func.attr == "startswith"
+              and any(isinstance(a, ast.Constant) and a.value == "v"
+                      for a in n.args)):
+            found.append((n.lineno, 'startswith("v")'))
+        elif is_version_fstring(n) and id(n) in arg_ids:
+            found.append((n.lineno, "v{...}"))
+        elif (isinstance(n, ast.Assign) and is_version_fstring(n.value)
+              and any(isinstance(tg, ast.Name) and tg.id in arg_names
+                      for tg in n.targets)):
+            found.append((n.lineno, "v{...}"))
+    return found
+
+
+def test_state_format_has_one_owner(tmp_path):
+    """The on-disk format of the fold sinks' state (v{epoch} dirs plus
+    the CURRENT marker) is spelled only inside VersionedState, across
+    the package and the driver entry: no second listing, predecessor
+    read, marker swap or final-state reader can creep back in."""
+    import pathlib
+
+    root = pathlib.Path(__file__).resolve().parents[1]
+    files = [root / "__spark_entry__.py",
+             *sorted((root / "spark_streaming_spark").rglob("*.py"))]
+    found = {str(f.relative_to(root)): _format_spellings(f) for f in files}
+    assert {f: s for f, s in found.items() if s} == {}
+    # the check is not vacuous: a pasted reader copy is caught, while a
+    # SQL window frame and a v{k} name that never reaches a call are not
+    copy = tmp_path / "copy.py"
+    copy.write_text(
+        "import os\n"
+        "def read(spark, d, epoch):\n"
+        "    with open(os.path.join(d, 'CURRENT')) as fh:\n"
+        "        fh.read()\n"
+        "    prior = [x for x in os.listdir(d) if x.startswith('v')]\n"
+        "    vdir = f'v{epoch}'\n"
+        "    return spark.read.parquet(os.path.join(d, vdir)), prior\n"
+        "SQL = 'ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW'\n"
+        "cte = f'v{1}'\n")
+    assert sorted(w for _, w in _format_spellings(copy)) == [
+        "CURRENT", 'startswith("v")', "v{...}"]
 
 
 def test_temporal_join_every_fact_matches_exactly_one_version(spark):

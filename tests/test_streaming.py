@@ -18,7 +18,6 @@ from spark_streaming_spark.sources.batch import load_table
 from spark_streaming_spark.streaming import replay
 from spark_streaming_spark.streaming.pipelines import (
     blacklist_stream,
-    idempotent_parquet_sink,
     sliding_hot_words,
     top3_per_window_foreach_batch,
     wordcount_stream,
@@ -109,7 +108,7 @@ def test_idempotent_sink_no_dupes_on_replay(spark, tmp_path):
         for _ in range(2):  # second run simulates a full replay
             q = (
                 replay.stream_from_dir(spark, d)
-                .writeStream.foreachBatch(idempotent_parquet_sink(out))
+                .writeStream.foreachBatch(replay.epoch_writer(out))
                 .option("checkpointLocation", str(tmp_path / f"ckpt_{_}"))
                 .trigger(availableNow=True)
                 .start()
