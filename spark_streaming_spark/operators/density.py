@@ -213,9 +213,11 @@ def dbscan_sql(eps: int = 400_000, min_pts: int = 4,
                scores_sql: str = "") -> str:
     """The NAIVE oracle: all-pairs eps-neighborhoods + recursive
     transitive closure over core-core edges. ``scores_sql`` is the
-    engine-exact PCA scores query (vec_id, score1, score2)."""
+    engine-exact PCA scores query (vec_id, score1, score2), MATERIALIZED
+    like the k-means chain's: DuckDB otherwise inlines the iterated
+    scores CTE at every reference, the recursive step's included."""
     return f"""
-        WITH RECURSIVE sc AS ({scores_sql}),
+        WITH RECURSIVE sc AS MATERIALIZED ({scores_sql}),
         pts AS (
           SELECT vec_id,
                  CAST(ROUND(score1 * {_SCALE}) AS BIGINT) AS s1,

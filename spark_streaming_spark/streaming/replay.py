@@ -56,40 +56,28 @@ _REPLAY_CONFS = {
 }
 
 
-# process-wide: held by _state_partitions from save to restore
-# (re-entrant, so a nested replay start on the same thread is fine)
+# process-wide: held by _scoped_conf from save to restore
+# (re-entrant, so a nested scope on the same thread is fine)
 _CONF_LOCK = threading.RLock()
 
 
 @contextmanager
-def _state_partitions(spark: SparkSession, n: int | None):
-    """Pin the number of state-store partitions (+ the bounded-replay
-    state-store confs above) for a stream about to start. A streaming
-    query fixes its state partitioning from
-    ``spark.sql.shuffle.partitions`` at start time and keeps it for the
-    checkpoint's lifetime — so it must be sized to keyed-state
-    cardinality, NOT to the batch shuffle width. Locally a handful of
-    state stores beats 32 (fewer delta files + maintenance tasks per
-    micro-batch); on a 1000-executor cluster this is where you'd set
-    O(cores) before ``start()``.
-
-    The confs are session-global, and co-scheduled runners start
-    queries from several threads: :data:`_CONF_LOCK` is held from save
-    to restore, so one thread can never save another's replay values
-    as the "original" and restore them for every later query. Callers
-    wrap only the ``start()``, so the queries still overlap their
-    awaits."""
+def _scoped_conf(spark: SparkSession, confs: dict[str, str]):
+    """Set ``confs`` on the session for the block, then restore each
+    key's previous value (unset when it had none). Session confs are
+    global, and co-scheduled runners start queries from several
+    threads: :data:`_CONF_LOCK` is held from save to restore, so one
+    thread can never save another's scoped values as the "original"
+    and restore them for every later query. Callers wrap only a
+    query's ``start()``, so the queries still overlap their awaits."""
     with _CONF_LOCK:
         saved: dict[str, str | None] = {}
-        for k, v in _REPLAY_CONFS.items():
+        for k, v in confs.items():
             try:
                 saved[k] = spark.conf.get(k)
             except Exception:
                 saved[k] = None
             spark.conf.set(k, v)
-        if n is not None:
-            saved[_SHUFFLE_KEY] = spark.conf.get(_SHUFFLE_KEY)
-            spark.conf.set(_SHUFFLE_KEY, str(n))
         try:
             yield
         finally:
@@ -100,14 +88,27 @@ def _state_partitions(spark: SparkSession, n: int | None):
                     spark.conf.set(k, v)
 
 
-def chunk_to_dir(df: DataFrame, n_chunks: int, base_dir: str | None = None) -> str:
+def _state_partitions(spark: SparkSession, n: int | None):
+    """Pin the number of state-store partitions (+ the bounded-replay
+    state-store confs above) for a stream about to start, in a
+    :func:`_scoped_conf`. A streaming query fixes its state
+    partitioning from ``spark.sql.shuffle.partitions`` at start time
+    and keeps it for the checkpoint's lifetime — so it must be sized to
+    keyed-state cardinality, NOT to the batch shuffle width. Locally a
+    handful of state stores beats 32 (fewer delta files + maintenance
+    tasks per micro-batch); on a 1000-executor cluster this is where
+    you'd set O(cores) before ``start()``."""
+    confs = dict(_REPLAY_CONFS)
+    if n is not None:
+        confs[_SHUFFLE_KEY] = str(n)
+    return _scoped_conf(spark, confs)
+
+
+def chunk_to_dir(df: DataFrame, n_chunks: int) -> str:
     """Write ``df`` as ``n_chunks`` parquet files; returns the directory.
     ``repartition(n)`` round-robins rows so chunks are balanced — each
     chunk becomes one micro-batch under ``maxFilesPerTrigger=1``."""
-    out = os.path.join(
-        base_dir or _SCRATCH_BASE or tempfile.gettempdir(),
-        f"spark_replay_{uuid.uuid4().hex}"
-    )
+    out = scratch_dir("spark_replay_")
     df.repartition(n_chunks).write.mode("overwrite").parquet(out)
     return out
 
@@ -514,10 +515,25 @@ def cleanup(path: str) -> None:
     shutil.rmtree(path, ignore_errors=True)
 
 
+def _place_parts(written: str, out: str, first: int) -> int:
+    """Move the ``part-*`` files Spark wrote under ``written`` into
+    ``out`` as ``chunk-{first:05d}.parquet``, ``chunk-{first+1:05d}...``
+    with strictly increasing mtimes — the file source replays in mtime
+    order, and only the order matters — then drop ``written``. Returns
+    the next free chunk index."""
+    base_t = 1_600_000_000
+    parts = sorted(f for f in os.listdir(written) if f.startswith("part-"))
+    for i, name in enumerate(parts, first):
+        dst = os.path.join(out, f"chunk-{i:05d}.parquet")
+        shutil.move(os.path.join(written, name), dst)
+        os.utime(dst, (base_t + i, base_t + i))
+    shutil.rmtree(written, ignore_errors=True)
+    return first + len(parts)
+
+
 def chunk_to_dir_ordered(df: DataFrame, n_chunks: int, order_col: str = "ts",
                          sentinel: DataFrame | None = None,
-                         n_sentinel_chunks: int = 2,
-                         base_dir: str | None = None) -> str:
+                         n_sentinel_chunks: int = 2) -> str:
     """Write ``df`` as ``n_chunks`` parquet files RANGE-PARTITIONED on
     ``order_col``, with strictly increasing file mtimes, so the file
     source replays them in event-time order. That ordering is what makes
@@ -535,44 +551,21 @@ def chunk_to_dir_ordered(df: DataFrame, n_chunks: int, order_col: str = "ts",
     flushes the last pending windows (availableNow does not run a
     trailing no-data micro-batch).
     """
-    out = os.path.join(
-        base_dir or _SCRATCH_BASE or tempfile.gettempdir(),
-        f"spark_replay_{uuid.uuid4().hex}"
-    )
-    tmp = out + "_tmp"
+    out = scratch_dir("spark_replay_")
     df.repartitionByRange(n_chunks, F.col(order_col)).sortWithinPartitions(
         order_col
-    ).write.mode("overwrite").parquet(tmp)
-    os.makedirs(out, exist_ok=True)
-    parts = sorted(
-        f for f in os.listdir(tmp) if f.startswith("part-")
-    )
-    base_t = 1_600_000_000  # any fixed epoch; only the ORDER matters
-    for i, name in enumerate(parts):
-        dst = os.path.join(out, f"chunk-{i:05d}.parquet")
-        shutil.move(os.path.join(tmp, name), dst)
-        os.utime(dst, (base_t + i, base_t + i))
-    shutil.rmtree(tmp, ignore_errors=True)
+    ).write.mode("overwrite").parquet(out + "_tmp")
+    n = _place_parts(out + "_tmp", out, 0)
     if sentinel is not None:
-        stmp = out + "_sentinel"
         sentinel.repartitionByRange(
             n_sentinel_chunks, F.col(order_col)
-        ).write.mode("overwrite").parquet(stmp)
-        sparts = sorted(
-            f for f in os.listdir(stmp) if f.startswith("part-")
-        )
-        for j, name in enumerate(sparts):
-            i = len(parts) + j
-            dst = os.path.join(out, f"chunk-{i:05d}.parquet")
-            shutil.move(os.path.join(stmp, name), dst)
-            os.utime(dst, (base_t + i, base_t + i))
-        shutil.rmtree(stmp, ignore_errors=True)
+        ).write.mode("overwrite").parquet(out + "_sentinel")
+        _place_parts(out + "_sentinel", out, n)
     return out
 
 
 def chunk_to_dir_by_cutoffs(df: DataFrame, cutoffs: list[str],
-                            order_col: str = "ts",
-                            base_dir: str | None = None) -> str:
+                            order_col: str = "ts") -> str:
     """Write ``df`` as ``len(cutoffs)+1`` single-file parquet chunks
     split at FIXED ``order_col`` cutoffs (chunk i = rows in
     [cutoffs[i-1], cutoffs[i])), with strictly increasing mtimes.
@@ -582,13 +575,8 @@ def chunk_to_dir_by_cutoffs(df: DataFrame, cutoffs: list[str],
     — so a SQL oracle can reconstruct exactly which micro-batch every
     row arrived in and verify per-epoch outputs (change feeds, epoch
     logs), not just the final state."""
-    out = os.path.join(
-        base_dir or _SCRATCH_BASE or tempfile.gettempdir(),
-        f"spark_replay_{uuid.uuid4().hex}"
-    )
-    os.makedirs(out, exist_ok=True)
+    out = scratch_dir("spark_replay_")
     bounds = [None, *cutoffs, None]
-    base_t = 1_600_000_000
     for i in range(len(cutoffs) + 1):
         lo, hi = bounds[i], bounds[i + 1]
         part = df
@@ -598,10 +586,5 @@ def chunk_to_dir_by_cutoffs(df: DataFrame, cutoffs: list[str],
             part = part.filter(F.col(order_col) < F.lit(hi).cast("timestamp"))
         tmp = os.path.join(out, f"_tmp{i}")
         part.coalesce(1).write.mode("overwrite").parquet(tmp)
-        src = next(f for f in sorted(os.listdir(tmp))
-                   if f.startswith("part-"))
-        dst = os.path.join(out, f"chunk-{i:05d}.parquet")
-        shutil.move(os.path.join(tmp, src), dst)
-        os.utime(dst, (base_t + i, base_t + i))
-        shutil.rmtree(tmp, ignore_errors=True)
+        _place_parts(tmp, out, i)
     return out

@@ -18,9 +18,9 @@ checkpoint's lifetime — so selection is a context manager around
 
 from __future__ import annotations
 
-from contextlib import contextmanager
-
 from pyspark.sql import SparkSession
+
+from spark_streaming_spark.streaming import replay
 
 _PROVIDER_KEY = "spark.sql.streaming.stateStore.providerClass"
 
@@ -36,22 +36,11 @@ PROVIDERS = {
 }
 
 
-@contextmanager
 def state_store_provider(spark: SparkSession, provider: str = "rocksdb"):
     """Run streaming-query starts under the named state store provider
-    ("rocksdb" | "hdfs", or a fully-qualified provider class). Restores
-    the previous setting on exit; queries already started keep the
+    ("rocksdb" | "hdfs", or a fully-qualified provider class), in the
+    locked save/set/restore of replay._scoped_conf. Restores the
+    previous setting on exit; queries already started keep the
     provider they started with (per-checkpoint property)."""
-    cls = PROVIDERS.get(provider, provider)
-    try:
-        old = spark.conf.get(_PROVIDER_KEY)
-    except Exception:
-        old = None
-    spark.conf.set(_PROVIDER_KEY, cls)
-    try:
-        yield
-    finally:
-        if old is None:
-            spark.conf.unset(_PROVIDER_KEY)
-        else:
-            spark.conf.set(_PROVIDER_KEY, old)
+    return replay._scoped_conf(
+        spark, {_PROVIDER_KEY: PROVIDERS.get(provider, provider)})

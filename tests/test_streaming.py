@@ -9,6 +9,7 @@ import socket
 import threading
 import time
 
+import pytest
 from pyspark.sql import functions as F
 
 from spark_streaming_spark.operators import windows as WIN
@@ -1060,14 +1061,26 @@ def test_merged_replay_budget_scales_with_sinks(spark):
         single.abort()
 
 
-def test_state_partitions_restores_confs_across_threads(monkeypatch):
+def _provider_scope(session, i):
+    from spark_streaming_spark.streaming.statestore import (
+        state_store_provider)
+
+    return state_store_provider(session, ("rocksdb", "hdfs")[i])
+
+
+@pytest.mark.parametrize("scope", [
+    lambda session, i: replay._state_partitions(session, 3 + 2 * i),
+    _provider_scope,
+], ids=["state_partitions", "state_store_provider"])
+def test_state_partitions_restores_confs_across_threads(monkeypatch, scope):
     """Two threads start replays concurrently (the misc_replays group):
-    A is inside _state_partitions when B tries to enter. Whatever B
-    saves, once both have left every conf is back to its original value.
-    Without the conf lock B saves A's replay values as the "originals"
-    and restores them last, leaving the session at a replay's settings.
-    Driven by events: A leaves as soon as B has either entered (read a
-    conf) or blocked on the lock."""
+    A is inside a conf scope (the replay's state partitions, or the
+    RocksDB member's state-store provider) when B tries to enter its
+    own. Whatever B saves, once both have left every conf is back to
+    its original value. Without the conf lock B saves A's scoped values
+    as the "originals" and restores them last, leaving the session at
+    A's settings. Driven by events: A leaves as soon as B has either
+    entered (read a conf) or blocked on the lock."""
     import types
 
     errors = []
@@ -1109,7 +1122,7 @@ def test_state_partitions_restores_confs_across_threads(monkeypatch):
 
     def run_a():
         try:
-            with replay._state_partitions(session, 3):
+            with scope(session, 0):
                 a_in.set()
                 assert b_progress.wait(30)
         except BaseException as e:  # noqa: BLE001 — surfaced below
@@ -1121,7 +1134,7 @@ def test_state_partitions_restores_confs_across_threads(monkeypatch):
     def run_b():
         try:
             assert a_in.wait(30)
-            with replay._state_partitions(session, 5):
+            with scope(session, 1):
                 assert a_out.wait(30)
         except BaseException as e:  # noqa: BLE001 — surfaced below
             errors.append(e)
@@ -1198,3 +1211,120 @@ def test_transition_fold_rejects_out_of_order_replay(spark, tmp_path):
             str(tmp_path / "st" / fh.read().strip() / "pairs")).collect()
     assert {(r["from_type"], r["to_type"], r["n_trans"])
             for r in pairs} == {("click", "buy", 1)}
+
+
+def test_replay_input_cache_memo_disk_and_sentinel_labels(spark, tmp_path,
+                                                          monkeypatch):
+    """The one replay-input cache (__spark_entry__._replay_input): a
+    second call returns the memo, a fresh process (empty memo) reuses
+    the marked disk dir without rebuilding, a dir without its marker (a
+    crashed builder's) is rebuilt, and the ordered layout's sentinel
+    types are part of the label — a stale dir of other sentinel types
+    would leave watermarked outer/session state unevicted."""
+    import os
+
+    import __spark_entry__ as E
+
+    # builds are renamed into the cache: keep both on one file system
+    monkeypatch.setattr(replay, "_SCRATCH_BASE", str(tmp_path))
+    monkeypatch.setattr(E, "_CHUNK_CACHE_BASE", str(tmp_path / "cache"))
+    monkeypatch.setattr(E, "_CHUNK_CACHE", {})
+    builds = []
+
+    def build():
+        d = tmp_path / f"built{len(builds)}"
+        d.mkdir()
+        (d / "chunk-00000.parquet").write_text(str(len(builds)))
+        builds.append(d)
+        return str(d)
+
+    first = E._replay_input("sfX", "rr|t|3", build)
+    assert os.path.exists(os.path.join(first, "_CHUNKS_READY"))
+    assert not builds[0].exists()           # renamed into the cache
+    assert E._replay_input("sfX", "rr|t|3", build) == first
+    assert len(builds) == 1                 # the memo
+    monkeypatch.setattr(E, "_CHUNK_CACHE", {})
+    assert E._replay_input("sfX", "rr|t|3", build) == first
+    assert len(builds) == 1                 # the marked disk dir
+    os.remove(os.path.join(first, "_CHUNKS_READY"))
+    monkeypatch.setattr(E, "_CHUNK_CACHE", {})
+    assert E._replay_input("sfX", "rr|t|3", build) == first
+    assert len(builds) == 2                 # unmarked: rebuilt
+    with open(os.path.join(first, "chunk-00000.parquet")) as fh:
+        assert fh.read() == "1"
+    assert E._replay_input("sfY", "rr|t|3", build) != first
+
+    def sentinel_types(d):
+        return {r.event_type for r in
+                spark.read.parquet(d).filter("user_id < 0").collect()}
+
+    layouts = {st: E._ordered_chunked_events(spark, SF_DIR,
+                                             sentinel_types=st)
+               for st in [("sentinel",), ("click", "purchase"), ()]}
+    assert len(set(layouts.values())) == 3
+    for st, d in layouts.items():
+        assert sentinel_types(d) == set(st)
+
+
+def _replay_cache_spellings(path):
+    """(line, what) of every spelling of the replay-input cache outside
+    ``_replay_input`` in ``path``: its marker, a publish or cache-path
+    helper, or a subscript of the memo dict. Docstrings are prose."""
+    import ast
+
+    tree = ast.parse(path.read_text())
+    docs = {id(n.body[0].value) for n in ast.walk(tree)
+            if isinstance(n, (ast.Module, ast.ClassDef, ast.FunctionDef,
+                              ast.AsyncFunctionDef))
+            and n.body and isinstance(n.body[0], ast.Expr)}
+    owner = set()
+    for n in ast.walk(tree):
+        if isinstance(n, ast.FunctionDef) and n.name == "_replay_input":
+            owner |= {id(c) for c in ast.walk(n)}
+    spelled = {"_CHUNKS_READY", "_persistent_cache_dir", "_publish_chunks"}
+    memos = {"_CHUNK_CACHE", "_ORDERED_CHUNK_CACHE"}
+    found = []
+    for n in ast.walk(tree):
+        if id(n) in owner or id(n) in docs:
+            continue
+        text = (n.value if isinstance(n, ast.Constant)
+                and isinstance(n.value, str) else
+                n.id if isinstance(n, ast.Name) else
+                n.attr if isinstance(n, ast.Attribute) else
+                n.name if isinstance(n, ast.FunctionDef) else None)
+        hit = [w for w in spelled if text and w in text]
+        if hit:
+            found.append((n.lineno, hit[0]))
+        elif (isinstance(n, ast.Subscript) and isinstance(n.value, ast.Name)
+              and n.value.id in memos):
+            found.append((n.lineno, f"{n.value.id}[...]"))
+    return found
+
+
+def test_replay_input_cache_has_one_owner(tmp_path):
+    """Every streamed replay input goes through the one cache: the
+    marker, the publish and the memo are spelled only inside
+    ``__spark_entry__._replay_input``, across the package and the
+    driver entry, so no second hand-written cache can creep back in."""
+    import pathlib
+
+    root = pathlib.Path(__file__).resolve().parents[1]
+    files = [root / "__spark_entry__.py",
+             *sorted((root / "spark_streaming_spark").rglob("*.py"))]
+    found = {str(f.relative_to(root)): _replay_cache_spellings(f)
+             for f in files}
+    assert {f: s for f, s in found.items() if s} == {}
+    # the check is not vacuous: a pasted cache copy is caught
+    copy = tmp_path / "copy.py"
+    copy.write_text(
+        "import os\n"
+        "def _ordered(key, build):\n"
+        "    if key not in _CHUNK_CACHE:\n"
+        "        final = _persistent_cache_dir('ord', key)\n"
+        "        if not os.path.exists(os.path.join(final, '_CHUNKS_READY')):\n"
+        "            _publish_chunks(build(), final)\n"
+        "        _CHUNK_CACHE[key] = final\n"
+        "    return _CHUNK_CACHE[key]\n")
+    assert sorted(w for _, w in _replay_cache_spellings(copy)) == [
+        "_CHUNKS_READY", "_CHUNK_CACHE[...]", "_CHUNK_CACHE[...]",
+        "_persistent_cache_dir", "_publish_chunks"]
