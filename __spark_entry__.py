@@ -142,17 +142,11 @@ def _q_custom_sink_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     so any row the sink loses, duplicates, or text it corrupts through
     JSON escaping flips the driver row red — the write path gets the
     same exact-oracle bar as every read path."""
-    import atexit
-    import shutil
-    import tempfile
-
     from spark_streaming_spark.sources import pysink
 
     docs = load_table(spark, sf_dir, "documents").select(
         "doc_id", "lang", "text")
-    base = "/dev/shm" if os.path.isdir("/dev/shm") else None
-    out = tempfile.mkdtemp(prefix="spark_jsonl_sink_", dir=base)
-    atexit.register(shutil.rmtree, out, ignore_errors=True)
+    out = _scratch("spark_jsonl_sink_")
     pysink.write_jsonl(docs, out)
     files = [os.path.join(out, f) for f in pysink.manifest_files(out)]
     back = spark.read.schema("doc_id bigint, lang string, text string").json(
@@ -169,10 +163,6 @@ def _misc_jsonl_sink(spark: SparkSession, sf_dir: str) -> DataFrame:
     oracle on the ORIGINAL table: a lost epoch, a double-committed
     replay, or JSON corruption flips the row red — the streaming write
     path gets the same bar as the batch one."""
-    import atexit
-    import shutil
-    import tempfile
-
     from spark_streaming_spark.sources import pysink
     from spark_streaming_spark.streaming import replay
 
@@ -183,9 +173,7 @@ def _misc_jsonl_sink(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load_table(spark, sf_dir, "documents").select(
         "doc_id", "lang", "text").filter(F.col("doc_id") % 4 == 0)
     src = _chunked_table(spark, sf_dir, "documents_quarter", 3, df=docs)
-    base = "/dev/shm" if os.path.isdir("/dev/shm") else None
-    out = tempfile.mkdtemp(prefix="spark_jsonl_stream_sink_", dir=base)
-    atexit.register(shutil.rmtree, out, ignore_errors=True)
+    out = _scratch("spark_jsonl_stream_sink_")
     pysink.stream_jsonl(replay.stream_from_dir(spark, src), out)
     files = [os.path.join(out, f) for f in pysink.manifest_files(out)]
     back = spark.read.schema("doc_id bigint, lang string, text string").json(
@@ -626,9 +614,11 @@ def _merge_fold_members():
 _CHUNK_CACHE: dict[tuple[str, str], str] = {}
 # the ordered layouts' former memo; the benchmark harness still clears it
 _ORDERED_CHUNK_CACHE = _CHUNK_CACHE
-# tmpfs when available: replay chunks are re-read once per micro-batch,
-# and the streamed entries' fixed harness cost is IO-bound (see
-# replay._SCRATCH_BASE); falls back to /tmp on tmpfs-less boxes
+# tmpfs when available, /tmp otherwise. The chunks are built once per
+# machine and then only read, so the medium barely matters (see
+# replay._SCRATCH_BASE). It may sit on another file system than
+# replay._SCRATCH_BASE: _replay_input copies a build across before its
+# publish rename.
 _CHUNK_CACHE_BASE = (
     "/dev/shm/spark_graft_chunk_cache"
     if os.path.isdir("/dev/shm") else "/tmp/spark_graft_chunk_cache"
@@ -652,9 +642,14 @@ def _replay_input(sf_dir: str, label: str, build) -> str:
     A dir is reused only once its ``_CHUNKS_READY`` marker exists. A
     fresh build is renamed into place, then marked; if the rename loses
     to a concurrent builder that already marked the dir, theirs is
-    used, and an unmarked dir left by a crashed builder is replaced."""
+    used, and an unmarked dir left by a crashed build is replaced. A
+    build on another file system than the cache (EXDEV) is first copied
+    into a temp dir beside the cache dir, so the publish stays one
+    rename."""
+    import errno
     import hashlib
     import shutil
+    import tempfile
 
     key = (sf_dir, label)
     if key in _CHUNK_CACHE:
@@ -667,10 +662,16 @@ def _replay_input(sf_dir: str, label: str, build) -> str:
     if not os.path.exists(marker):
         built = build()
         os.makedirs(_CHUNK_CACHE_BASE, exist_ok=True)
+        src = built
         for _ in range(3):
             try:
-                os.rename(built, final)
-            except OSError:
+                os.rename(src, final)
+            except OSError as e:
+                if e.errno == errno.EXDEV and src == built:
+                    src = tempfile.mkdtemp(prefix=".stage_",
+                                           dir=_CHUNK_CACHE_BASE)
+                    shutil.copytree(built, src, dirs_exist_ok=True)
+                    continue
                 if os.path.exists(marker):
                     break
                 shutil.rmtree(final, ignore_errors=True)
@@ -689,7 +690,8 @@ def _replay_input(sf_dir: str, label: str, build) -> str:
                 raise RuntimeError(
                     f"chunk cache promote failed and no concurrent "
                     f"builder finished: {final}")
-        shutil.rmtree(built, ignore_errors=True)
+        for d in {built, src}:
+            shutil.rmtree(d, ignore_errors=True)
     _CHUNK_CACHE[key] = final
     return final
 

@@ -1,9 +1,12 @@
 """Per-entry optimization profiler (guide §1): time named queries()
 entries with the noop sink on the bench session settings and write each
-entry's .explain("formatted") to plans/r14/<name>_<tag>.txt.
+entry's .explain("formatted") to PLANS_DIR/<name>_<tag>.txt.
 
 Usage: python scripts/profile_entries.py [--sf SF_DIR] [--reps N]
-           [--tag before|after|none] name...
+           [--tag before|after|none] [--plans-dir PLANS_DIR] name...
+
+--plans-dir is required unless --tag is none (the default); past
+rounds wrote to plans/r14 and plans/r15.
 
 Timing methodology matches bench.py (noop sink, per-entry min over
 reps); plans are captured AFTER the timed runs so AQE/broadcast state
@@ -27,16 +30,18 @@ def main():
         "SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1"))
     ap.add_argument("--reps", type=int, default=2)
     ap.add_argument("--tag", default="none")
+    ap.add_argument("--plans-dir",
+                    help="where the plans go, e.g. plans/r16")
     ap.add_argument("names", nargs="+")
     args = ap.parse_args()
+    if args.tag != "none" and not args.plans_dir:
+        ap.error("--tag writes plans: give --plans-dir")
 
     spark = get_spark("profile")
     spark.sparkContext.setLogLevel("ERROR")
     qs = E.queries()
-    plans_dir = os.path.join(
-        os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
-        "plans", "r15")
-    os.makedirs(plans_dir, exist_ok=True)
+    if args.plans_dir:
+        os.makedirs(args.plans_dir, exist_ok=True)
 
     results = {}
     for rep in range(args.reps):
@@ -56,7 +61,7 @@ def main():
             df = qs[name](spark, args.sf)
             plan = df._sc._jvm.PythonSQLUtils.explainString(
                 df._jdf.queryExecution(), "formatted")
-            with open(os.path.join(plans_dir,
+            with open(os.path.join(args.plans_dir,
                                    f"{name}_{args.tag}.txt"), "w") as fh:
                 fh.write(plan)
     spark.stop()

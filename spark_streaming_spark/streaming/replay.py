@@ -26,18 +26,23 @@ from pyspark.sql import functions as F
 _SHUFFLE_KEY = "spark.sql.shuffle.partitions"
 
 # Bounded-replay scratch (checkpoints, chunk dirs, sink outputs) lives
-# in RAM when the box has a tmpfs: the streaming checkpoint's offset/
-# commit logs are many tiny fsync'd files, and on a disk-backed /tmp
-# that fixed cost dominates short replays (~35 s of the round-3 bench
-# was harness, not query). This is a TEST-HARNESS knob only — a real
-# deployment's checkpoint must be durable shared storage (HDFS/S3),
-# exactly as the reference's WAL/checkpoint discussion requires
-# (/root/reference/README.md:629-681).
+# in RAM when the box has a tmpfs. It is not what makes a short replay's
+# checkpoint commits cheap: they were slow because the default checkpoint
+# file manager spawned a shell process per file (see session.get_spark).
+# On tmpfs, state.commit_ms was still 231 ms per trigger (244-281 on
+# disk; 26-29 once the spawns were gone). With that fixed, the medium
+# barely matters: in 3 perfbench replay_groups pairs
+# (4 vCPUs), tmpfs scratch and chunk cache were not faster than disk
+# (median pass 5.36 vs 4.97 s). Every engine scratch dir comes from
+# scratch_dir, so overriding this one name moves all of them. This is a
+# TEST-HARNESS knob only — a real deployment's checkpoint must be
+# durable shared storage (HDFS/S3), exactly as the reference's
+# WAL/checkpoint discussion requires.
 _SCRATCH_BASE = "/dev/shm" if os.path.isdir("/dev/shm") else None
 
 
 def scratch_dir(prefix: str) -> str:
-    """mkdtemp on the fastest local medium (tmpfs when available)."""
+    """mkdtemp under :data:`_SCRATCH_BASE` (tmpfs when available)."""
     return tempfile.mkdtemp(prefix=prefix, dir=_SCRATCH_BASE)
 
 

@@ -5,6 +5,7 @@ source end-to-end."""
 
 from __future__ import annotations
 
+import os
 import socket
 import threading
 import time
@@ -270,20 +271,47 @@ def test_observed_metrics_on_stream(spark):
         replay.cleanup(ckpt)
 
 
-def test_checkpoint_recovery_exactly_once(spark, tmp_path):
+FS_CHECKPOINT_MANAGER = ("org.apache.spark.sql.execution.streaming."
+                         "checkpointing.FileSystemBasedCheckpointFileManager")
+
+
+def _blacklist_recovery_case(spark):
+    events = load_table(spark, SF_DIR, "events")
+    bl = make_blacklist(load_table(spark, SF_DIR, "customer"))
+    return events, lambda df: blacklist_stream(df, bl)
+
+
+def _dedup_recovery_case(spark):
+    from spark_streaming_spark.streaming.pipelines import dedup_stream
+
+    # a (user, type, day) key recurs in both halves of the input: the
+    # restart must remember the first half's keys from the state store,
+    # or the second half re-emits them
+    keys = ["user_id", "event_type", "day"]
+    events = load_table(spark, SF_DIR, "events").select(
+        "user_id", "event_type", F.to_date("ts").alias("day"))
+    return events, lambda df: dedup_stream(df, keys)
+
+
+@pytest.mark.parametrize("case", [_blacklist_recovery_case,
+                                  _dedup_recovery_case],
+                         ids=["blacklist", "dedup_state"])
+def test_checkpoint_recovery_exactly_once(spark, tmp_path, case):
     """Fault-tolerance parity (SURVEY.md §2.9): kill a stream partway,
     restart from the same checkpoint — already-committed input is not
     reprocessed, new input is, and the sink ends exactly equal to the
     batch answer (no loss, no dupes). This is the reference's
     recover-from-checkpoint-dir semantics with exactly-once instead of
-    at-least-once."""
+    at-least-once. The stateful case also re-reads the state-store
+    deltas that the session's checkpoint file manager wrote."""
     import glob
-    import os
     import shutil
 
-    events = load_table(spark, SF_DIR, "events")
-    bl = make_blacklist(load_table(spark, SF_DIR, "customer"))
-    d = replay.chunk_to_dir(events, 4)
+    assert spark.conf.get(
+        "spark.sql.streaming.checkpointFileManagerClass"
+    ) == FS_CHECKPOINT_MANAGER
+    data, query = case(spark)
+    d = replay.chunk_to_dir(data, 4)
     held_back = str(tmp_path / "held")
     os.makedirs(held_back)
     ckpt = str(tmp_path / "ckpt")
@@ -293,10 +321,14 @@ def test_checkpoint_recovery_exactly_once(spark, tmp_path):
         assert len(parts) == 4
         for p in parts[2:]:  # hold back half the input
             shutil.move(p, held_back)
+        if case is _dedup_recovery_case:
+            first = _as_sets(spark.read.parquet(*parts[:2]))
+            held = _as_sets(spark.read.parquet(held_back))
+            assert first & held, "no key spans the restart"
 
         def run_once():
             q = (
-                blacklist_stream(replay.stream_from_dir(spark, d), bl)
+                query(replay.stream_from_dir(spark, d))
                 .writeStream.format("parquet")
                 .outputMode("append")
                 .option("path", sink)
@@ -314,8 +346,9 @@ def test_checkpoint_recovery_exactly_once(spark, tmp_path):
         run_once()  # recovery: same checkpoint + sink
 
         final = spark.read.parquet(sink)
-        batch = blacklist_stream(events, bl)  # same pure fn, batch input
+        batch = query(data)  # same pure fn, batch input
         assert final.count() > n_first
+        assert final.count() == batch.count(), "recovery duplicated rows"
         assert _as_sets(final) == _as_sets(batch), "recovery lost or duplicated rows"
     finally:
         replay.cleanup(d)
@@ -1264,6 +1297,45 @@ def test_replay_input_cache_memo_disk_and_sentinel_labels(spark, tmp_path,
     assert len(set(layouts.values())) == 3
     for st, d in layouts.items():
         assert sentinel_types(d) == set(st)
+
+
+@pytest.mark.skipif(not os.path.isdir("/dev/shm"), reason="no tmpfs")
+def test_replay_input_cache_publishes_across_file_systems(tmp_path,
+                                                          monkeypatch):
+    """A build on tmpfs scratch is published into a cache dir on another
+    file system, where ``os.rename`` raises EXDEV: the build is copied
+    beside the cache and renamed into place, not retried until the
+    publish gives up."""
+    import __spark_entry__ as E
+
+    cache = tmp_path / "cache"
+    cache.mkdir()
+    if os.stat(cache).st_dev == os.stat("/dev/shm").st_dev:
+        pytest.skip("the temp dir is on the same file system as /dev/shm")
+    monkeypatch.setattr(replay, "_SCRATCH_BASE", "/dev/shm")
+    monkeypatch.setattr(E, "_CHUNK_CACHE_BASE", str(cache))
+    monkeypatch.setattr(E, "_CHUNK_CACHE", {})
+    builds = []
+
+    def build():
+        d = replay.scratch_dir("spark_exdev_test_")
+        with open(os.path.join(d, "chunk-00000.parquet"), "w") as fh:
+            fh.write("rows")
+        builds.append(d)
+        return d
+
+    t0 = time.monotonic()
+    final = E._replay_input("sfX", "rr|t|3", build)
+    assert time.monotonic() - t0 < 5
+    assert os.path.dirname(final) == str(cache)
+    with open(os.path.join(final, "chunk-00000.parquet")) as fh:
+        assert fh.read() == "rows"
+    assert os.path.exists(os.path.join(final, "_CHUNKS_READY"))
+    assert sorted(os.listdir(cache)) == [os.path.basename(final)]
+    assert not os.path.exists(builds[0])      # the tmpfs build is gone
+    monkeypatch.setattr(E, "_CHUNK_CACHE", {})
+    assert E._replay_input("sfX", "rr|t|3", build) == final
+    assert len(builds) == 1                   # the marked disk dir
 
 
 def _replay_cache_spellings(path):
