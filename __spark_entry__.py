@@ -143,10 +143,11 @@ def _q_custom_sink_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     JSON escaping flips the driver row red — the write path gets the
     same exact-oracle bar as every read path."""
     from spark_streaming_spark.sources import pysink
+    from spark_streaming_spark.streaming import replay
 
     docs = load_table(spark, sf_dir, "documents").select(
         "doc_id", "lang", "text")
-    out = _scratch("spark_jsonl_sink_")
+    out = replay.scratch_dir("spark_jsonl_sink_")
     pysink.write_jsonl(docs, out)
     files = [os.path.join(out, f) for f in pysink.manifest_files(out)]
     back = spark.read.schema("doc_id bigint, lang string, text string").json(
@@ -173,7 +174,7 @@ def _misc_jsonl_sink(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load_table(spark, sf_dir, "documents").select(
         "doc_id", "lang", "text").filter(F.col("doc_id") % 4 == 0)
     src = _chunked_table(spark, sf_dir, "documents_quarter", 3, df=docs)
-    out = _scratch("spark_jsonl_stream_sink_")
+    out = replay.scratch_dir("spark_jsonl_stream_sink_")
     pysink.stream_jsonl(replay.stream_from_dir(spark, src), out)
     files = [os.path.join(out, f) for f in pysink.manifest_files(out)]
     back = spark.read.schema("doc_id bigint, lang string, text string").json(
@@ -398,8 +399,8 @@ def _merge_fold_members():
 
     def cdc_start(spark, sf_dir):
         chunk_dir = cutoff_events(spark, sf_dir)
-        state_dir = _scratch("cdc_state_")
-        log_dir = _scratch("cdc_log_")
+        state_dir = replay.scratch_dir("cdc_state_")
+        log_dir = replay.scratch_dir("cdc_log_")
         stream = replay.stream_from_dir(spark, chunk_dir,
                                         files_per_trigger=1)
         return replay.start_foreach(
@@ -409,8 +410,8 @@ def _merge_fold_members():
 
     def scd2_asof_start(spark, sf_dir):
         chunk_dir = cutoff_events(spark, sf_dir)
-        state_dir = _scratch("scd2_asof_state_")
-        log_dir = _scratch("scd2_asof_log_")
+        state_dir = replay.scratch_dir("scd2_asof_state_")
+        log_dir = replay.scratch_dir("scd2_asof_log_")
         stream = replay.stream_from_dir(spark, chunk_dir,
                                         files_per_trigger=1)
         return replay.start_foreach(
@@ -822,26 +823,15 @@ def _merged_fold_starter(table: str, subs_factory):
     return start
 
 
-def _scratch(prefix: str) -> str:
-    """A scratch dir removed at interpreter exit."""
-    import atexit
-    import shutil
-
-    from spark_streaming_spark.streaming import replay
-
-    d = replay.scratch_dir(prefix)
-    atexit.register(shutil.rmtree, d, ignore_errors=True)
-    return d
-
-
 def _state_sink(spark, prefix, make_sink):
     """``(sink, read)`` of a versioned-state fold sink over its own
     scratch state dir: ``make_sink(state_dir)`` builds the foreachBatch
     fn (counts_fold_sink / theta_sketch_sink / ...), and ``read()``
     loads the state it published (pipelines.VersionedState.current)."""
+    from spark_streaming_spark.streaming import replay
     from spark_streaming_spark.streaming.pipelines import VersionedState
 
-    state_dir = _scratch(prefix)
+    state_dir = replay.scratch_dir(prefix)
     return make_sink(state_dir), VersionedState(spark, state_dir).current
 
 
@@ -1928,8 +1918,11 @@ def _dedup_replay_members():
         # in exactly one batch; the corpus side is fixed), so their union
         # equals the one-shot batch-vs-corpus answer — shared oracle. This
         # is the streaming face of daily-production dedup: the corpus index
-        # is the stream-static side, per-trigger cost is O(batch +
-        # collisions).
+        # (LSH bands + per-doc shingle arrays, checkpointed eagerly at
+        # start) is the stream-static side. Each trigger runs one MinHash
+        # aggregation over its batch and broadcasts the small sides into
+        # the two index scans — the corpus is never regrouped, so
+        # per-trigger cost is O(batch + collisions) past those scans.
         "streaming_incremental_dedup": (incr_start, None),
     }
 

@@ -69,23 +69,21 @@ def _shingle_sets(docs: DataFrame, n: int = 3,
     return out
 
 
-def _verify_jaccard(candidates: DataFrame, sh: DataFrame,
+def _verify_jaccard(candidates: DataFrame, arrs: DataFrame,
                     threshold: float) -> DataFrame:
-    """Exact Jaccard over an already-blocked candidate pair set: attach
-    each side's full shingle ARRAY (one groupBy off the shared shingle
-    exchange) via two equi-joins on doc id and intersect in codegen with
-    ``array_intersect``. Never touches non-candidate pairs, and — unlike
-    a candidate×shingle explode-join — never materializes
-    |pair|×|shingles| rows. Columns: doc_a, doc_b, jaccard."""
-    arrs = sh.groupBy("doc_id").agg(F.collect_list("sh").alias("shs"))
-    a = arrs.select(F.col("doc_id").alias("doc_a"), F.col("shs").alias("shs_a"))
-    b = arrs.select(F.col("doc_id").alias("doc_b"), F.col("shs").alias("shs_b"))
-    common = F.size(F.array_intersect("shs_a", "shs_b"))
-    n_a, n_b = F.size("shs_a"), F.size("shs_b")
-    jac = common.cast("double") / (n_a + n_b - common)
+    """Exact Jaccard over an already-blocked candidate pair set
+    (doc_a, doc_b): attach each side's shingle ARRAY from ``arrs``
+    (doc_id, shs — the kernel's output, or any per-doc shingle set) by
+    two equi-joins on doc id and intersect in codegen with
+    ``array_intersect``. Never touches non-candidate pairs, never
+    regroups shingles, and — unlike a candidate×shingle explode-join —
+    never materializes |pair|×|shingles| rows.
+    Columns: doc_a, doc_b, jaccard."""
+    a = arrs.selectExpr("doc_id AS doc_a", "shs AS shs_a")
+    b = arrs.selectExpr("doc_id AS doc_b", "shs AS shs_b")
     return (
         candidates.join(a, "doc_a").join(b, "doc_b")
-        .select("doc_a", "doc_b", jac.alias("jaccard"))
+        .selectExpr("doc_a", "doc_b", _JACCARD_SQL)
         .filter(F.col("jaccard") >= threshold)
     )
 
@@ -210,73 +208,87 @@ def _ngram_jaccard_pairs_naive(docs: DataFrame, threshold: float = 0.8,
                 F.col("b.doc_id").alias("doc_b"))
         .distinct()
     )
-    return _verify_jaccard(candidates, sh, threshold)
+    arrs = sh.groupBy("doc_id").agg(F.collect_set("sh").alias("shs"))
+    return _verify_jaccard(candidates, arrs, threshold)
 
 
 # --- MinHash + LSH ---------------------------------------------------------
 
 N_HASHES = 16
 N_BANDS = 4  # 4 rows per band → s-curve threshold ≈ (1/4)^(1/4) ≈ 0.7
+_ROWS_PER_BAND = N_HASHES // N_BANDS
+
+# The MinHash kernel as SQL text, prepared once at import. One
+# aggregation per doc yields its shingle SET (the verification array)
+# and its signature (min over the doc's shingles of xxhash64(sh, i));
+# one inline(array(named_struct(...))) generator slices the signature
+# into the (band, bh) LSH bucket keys. A DataFrame method applying text
+# is one py4j call, while a plan spelled with Column objects pays a few
+# round trips per F.lit / F.col / getItem / alias term (~2,240 per
+# streamed micro-batch for this plan, against ~170). The shingle text
+# is functions/text.shingles spelled in SQL, so the hashes — and the
+# bands — are bit-identical to the Column spelling's.
+_SHINGLES_SQL = (
+    "transform(sequence(1, greatest(size(split(text, ' ')) - {m}, 1)),"
+    " i -> concat_ws(' ', slice(split(text, ' '), i, {n})))")
+_KERNEL_AGGS = ("collect_set(sh) AS shs",
+                *(f"min(xxhash64(sh, {i})) AS h{i}" for i in range(N_HASHES)))
+_BANDS_SQL = "inline(array({}))".format(", ".join(
+    f"named_struct('band', {b}, 'bh', xxhash64("
+    + ", ".join(f"h{b * _ROWS_PER_BAND + r}" for r in range(_ROWS_PER_BAND))
+    + "))"
+    for b in range(N_BANDS)))
+_JACCARD_SQL = (
+    "CAST(size(array_intersect(shs_a, shs_b)) AS DOUBLE)"
+    " / (size(shs_a) + size(shs_b) - size(array_intersect(shs_a, shs_b)))"
+    " AS jaccard")
 
 
-def minhash_signatures(docs: DataFrame, n: int = 3,
-                       n_hashes: int = N_HASHES,
-                       cache_key: str | None = None) -> DataFrame:
-    """Per-doc MinHash signature: for seed i, min over shingles of
-    xxhash64(shingle, i). One aggregation, no joins; signature is an
-    array<long> column. Columns: doc_id, sig."""
-    sh = _shingle_sets(docs, n, cache_key=cache_key)
-    mins = [
-        F.min(F.xxhash64(F.col("sh"), F.lit(i))).alias(f"h{i}")
-        for i in range(n_hashes)
-    ]
-    agg = sh.groupBy("doc_id").agg(*mins)
-    return agg.select(
-        "doc_id", F.array(*[f"h{i}" for i in range(n_hashes)]).alias("sig")
+def _minhash_kernel(docs: DataFrame, n: int = 3) -> DataFrame:
+    """(doc_id, shs, h0..h15): ONE aggregation per doc over its exploded
+    word n-gram shingles — ``collect_set(sh)`` plus the N_HASHES
+    ``min(xxhash64(sh, i))`` signature rows. The caller decides whether
+    the input is ``widen``-ed: a corpus scan is, a micro-batch of a few
+    dozen docs is not (the repartition would cost a shuffle and a
+    partition probe for no parallelism)."""
+    return (
+        docs.selectExpr(
+            "doc_id",
+            f"explode({_SHINGLES_SQL.format(m=n - 1, n=n)}) AS sh")
+        .groupBy("doc_id").agg(*(F.expr(a) for a in _KERNEL_AGGS))
     )
 
 
-def _sig_bands(sig: DataFrame) -> DataFrame:
-    """Slice signatures into N_BANDS (band, band_hash) rows per doc —
-    the LSH bucket keys. Columns: doc_id, band, bh."""
-    rows_per_band = N_HASHES // N_BANDS
-    return sig.select(
-        "doc_id",
-        F.explode(
-            F.array(*[
-                F.struct(
-                    F.lit(bi).alias("band"),
-                    F.xxhash64(*[
-                        F.col("sig").getItem(bi * rows_per_band + ri)
-                        for ri in range(rows_per_band)
-                    ]).alias("bh"),
-                )
-                for bi in range(N_BANDS)
-            ])
-        ).alias("b"),
-    ).select("doc_id", "b.band", "b.bh")
+def _index_of(kernel: DataFrame) -> tuple[DataFrame, DataFrame]:
+    """The incremental-dedup index over a kernel frame: (bands —
+    doc_id, band, bh; arrays — doc_id, shs)."""
+    return (kernel.selectExpr("doc_id", _BANDS_SQL),
+            kernel.select("doc_id", "shs"))
 
 
 def build_dedup_index(corpus_docs: DataFrame, n: int = 3,
                       cache_key: str | None = None
                       ) -> tuple[DataFrame, DataFrame]:
-    """The PERSISTABLE corpus side of incremental dedup: (bands,
-    shingles), materialized with ``localCheckpoint`` so repeated batch
-    runs (a stream's micro-batches, tomorrow's job) reuse it instead of
-    re-deriving the corpus. In production both frames are parquet tables
-    partitioned by band/doc — appended to as batches graduate into the
-    corpus — and this function is the backfill that builds them.
-    ``cache_key`` (a stable corpus identifier) memoizes the built index
-    across calls — the _PAIRS_CACHE build/serve discipline."""
+    """The PERSISTABLE corpus side of incremental dedup: ``(bands,
+    arrays)`` — bands (doc_id, band, bh) are the LSH bucket keys,
+    arrays (doc_id, shs) each doc's shingle set for exact verification.
+    Both come from ONE kernel pass over the ``widen``-ed corpus and are
+    built EAGERLY: the kernel table (arrays + signatures) and the bands
+    are ``localCheckpoint``-ed before this returns, so the first
+    micro-batch that uses the index finds it materialized and no later
+    batch ever re-aggregates the corpus. In production both are parquet
+    tables partitioned by band/doc — appended to as batches graduate
+    into the corpus — and this function is the backfill that builds
+    them. ``cache_key`` (a stable corpus identifier) memoizes the built
+    index across calls — the _PAIRS_CACHE build/serve discipline."""
     ck = ("dedup_index", cache_key, n,
           corpus_docs.sparkSession.sparkContext.applicationId) \
         if cache_key is not None else None
     if ck is not None and ck in _PAIRS_CACHE:
         return _PAIRS_CACHE[ck]
-    bands = _sig_bands(minhash_signatures(corpus_docs, n)) \
-        .localCheckpoint(eager=False)
-    sh = _shingle_sets(corpus_docs, n).localCheckpoint(eager=False)
-    out = (bands, sh)
+    bands, arrs = _index_of(
+        _minhash_kernel(widen(corpus_docs), n).localCheckpoint(eager=True))
+    out = (bands.localCheckpoint(eager=True), arrs)
     if ck is not None:
         _PAIRS_CACHE[ck] = out
     return out
@@ -289,44 +301,44 @@ def incremental_minhash_dedup(new_docs: DataFrame,
                               corpus_index: tuple[DataFrame, DataFrame]
                               | None = None) -> DataFrame:
     """Dedup an INCOMING BATCH against an EXISTING corpus — the shape
-    production dedup actually runs daily: the corpus side's signatures/
-    bands are a persisted index built once (and appended to), the
-    per-batch work is new-side signatures + a bucket join against the
-    index + exact verification of collisions only. Corpus×corpus pairs
-    are never recomputed and never join — cost is O(|new| + collisions),
-    independent of corpus size beyond the index scan.
+    production dedup actually runs daily: the corpus side's bands and
+    shingle arrays are a persisted index built once (and appended to);
+    the per-batch work is one kernel aggregation over the new docs, a
+    bucket join against the index bands and exact verification of the
+    colliding pairs against the index arrays. Corpus×corpus pairs are
+    never recomputed and the corpus is never regrouped: past the two
+    index scans, cost is O(|new| + collisions).
+
+    Plan per batch: the new side's kernel (no ``widen`` — a micro-batch
+    is a few dozen docs) is BROADCAST into the scan of the index bands;
+    the colliding pairs, deduplicated together with the new side's
+    array (a function of doc_a, so the distinct stays a plain hash
+    aggregate), are broadcast into the scan of the index arrays — no
+    shuffle or aggregate ever sits above the arrays scan.
 
     Pass ``corpus_index`` (from :func:`build_dedup_index`) to reuse a
     materialized corpus side across calls — a stream's micro-batches,
     tomorrow's batch; at 100 TB substitute ``spark.read.parquet`` index
-    tables and nothing else changes. Without it the index is derived
-    from ``corpus_docs`` inline. Columns: new_doc, corpus_doc, jaccard
-    (exact, ≥ threshold)."""
+    tables and nothing else changes. Without it the same index is
+    derived from ``corpus_docs`` inline. Columns: new_doc, corpus_doc,
+    jaccard (exact, ≥ threshold)."""
     if corpus_index is None:
         if corpus_docs is None:
             raise ValueError("need corpus_docs or corpus_index")
-        corpus_index = (
-            _sig_bands(minhash_signatures(corpus_docs, n)),
-            _shingle_sets(corpus_docs, n),
-        )
-    corp_bands, corp_sh = corpus_index
-    new_bands = _sig_bands(minhash_signatures(new_docs, n)).alias("nb")
+        corpus_index = _index_of(_minhash_kernel(widen(corpus_docs), n))
+    corp_bands, corp_arrs = corpus_index
+    new = _minhash_kernel(new_docs, n).selectExpr(
+        "doc_id AS doc_a", "shs AS shs_a", _BANDS_SQL)
     candidates = (
-        new_bands.join(
-            corp_bands.alias("cb"),
-            (F.col("nb.band") == F.col("cb.band"))
-            & (F.col("nb.bh") == F.col("cb.bh")),
-        )
-        .select(F.col("nb.doc_id").alias("doc_a"),
-                F.col("cb.doc_id").alias("doc_b"))
+        corp_bands.join(F.broadcast(new), ["band", "bh"])
+        .selectExpr("doc_a", "doc_id AS doc_b", "shs_a")
         .distinct()
     )
-    sh_union = _shingle_sets(new_docs, n).unionByName(corp_sh)
-    verified = _verify_jaccard(candidates, sh_union, threshold)
-    return verified.select(
-        F.col("doc_a").alias("new_doc"),
-        F.col("doc_b").alias("corpus_doc"),
-        "jaccard",
+    return (
+        corp_arrs.selectExpr("doc_id AS doc_b", "shs AS shs_b")
+        .join(F.broadcast(candidates), "doc_b")
+        .selectExpr("doc_a AS new_doc", "doc_b AS corpus_doc", _JACCARD_SQL)
+        .filter(F.col("jaccard") >= threshold)
     )
 
 
@@ -334,11 +346,13 @@ def minhash_lsh_pairs(docs: DataFrame, threshold: float = 0.8,
                       n: int = 3, cache_key: str | None = None) -> DataFrame:
     """Banded-LSH candidate pairs verified with exact Jaccard.
 
-    Pipeline: signatures → slice into N_BANDS bands → explode (doc, band,
-    band_hash) → self-join within identical (band, band_hash) buckets →
-    distinct candidates → exact-verify ONLY those. Rows-only driver check
-    (xxhash64 has no DuckDB twin); tests/test_dedup.py asserts candidate
-    recall against ngram_jaccard_pairs ground truth.
+    Pipeline: the MinHash kernel (one aggregation per doc: shingle set +
+    signature) → its (doc, band, band_hash) rows → self-join within
+    identical (band, band_hash) buckets → distinct candidates →
+    exact-verify ONLY those against the kernel's own shingle arrays (the
+    same aggregate feeds both, via Catalyst ReuseExchange). Rows-only
+    driver check (xxhash64 has no DuckDB twin); tests/test_dedup.py
+    asserts candidate recall against ngram_jaccard_pairs ground truth.
     Columns: doc_a, doc_b, jaccard.
 
     ``cache_key`` memoizes the VERIFIED pair set (the dedup artifact a
@@ -352,22 +366,20 @@ def minhash_lsh_pairs(docs: DataFrame, threshold: float = 0.8,
         if cache_key is not None else None
     if ck is not None and ck in _PAIRS_CACHE:
         return _PAIRS_CACHE[ck]
-    bands = _sig_bands(minhash_signatures(docs, n))
-    a = bands.alias("a")
-    b = bands.alias("b")
+    kernel = _minhash_kernel(widen(docs), n)
+    bands, _arrs = _index_of(kernel)
     candidates = (
-        a.join(b, (F.col("a.band") == F.col("b.band"))
-               & (F.col("a.bh") == F.col("b.bh"))
-               & (F.col("a.doc_id") < F.col("b.doc_id")))
-        .select(F.col("a.doc_id").alias("doc_a"), F.col("b.doc_id").alias("doc_b"))
+        bands.selectExpr("doc_id AS doc_a", "band", "bh")
+        .join(bands.selectExpr("doc_id AS doc_b", "band", "bh"),
+              ["band", "bh"])
+        .where("doc_a < doc_b")
+        .select("doc_a", "doc_b")
         .distinct()
     )
-    # Exact-verify ONLY the candidates: join each pair back to its two
-    # shingle sets. This is the scale property that matters — the full
-    # all-pairs Jaccard is never computed.
-    out = _verify_jaccard(candidates,
-                          _shingle_sets(docs, n, cache_key=cache_key),
-                          threshold)
+    # Exact-verify ONLY the candidates against the kernel's arrays. This
+    # is the scale property that matters — the full all-pairs Jaccard is
+    # never computed.
+    out = _verify_jaccard(candidates, kernel, threshold)
     if ck is not None:
         out = out.localCheckpoint(eager=False)
         _PAIRS_CACHE[ck] = out

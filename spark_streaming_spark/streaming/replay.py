@@ -42,8 +42,16 @@ _SCRATCH_BASE = "/dev/shm" if os.path.isdir("/dev/shm") else None
 
 
 def scratch_dir(prefix: str) -> str:
-    """mkdtemp under :data:`_SCRATCH_BASE` (tmpfs when available)."""
-    return tempfile.mkdtemp(prefix=prefix, dir=_SCRATCH_BASE)
+    """mkdtemp under :data:`_SCRATCH_BASE` (tmpfs when available),
+    removed at interpreter exit. Every engine scratch dir — chunk dirs,
+    checkpoints, sink outputs — comes from here, so none outlives its
+    process, whether or not its caller cleans up (tmpfs scratch left
+    behind holds RAM until reboot). A chunk build already renamed into
+    the persistent chunk cache is unaffected: its scratch path no
+    longer exists when the removal runs."""
+    d = tempfile.mkdtemp(prefix=prefix, dir=_SCRATCH_BASE)
+    atexit.register(shutil.rmtree, d, ignore_errors=True)
+    return d
 
 
 # Bounded-replay state-store tuning, applied around query start and
@@ -353,7 +361,6 @@ def start_to_parquet(stream_df: DataFrame, output_mode: str = "complete",
     if output_mode == "append" and batch_transform is not None:
         raise ValueError("batch_transform requires complete/update mode")
     out = scratch_dir("spark_stream_out_")
-    atexit.register(shutil.rmtree, out, ignore_errors=True)
     spark = stream_df.sparkSession
     schema = stream_df.schema
 
@@ -452,7 +459,6 @@ def run_polled_to_parquet(stream_df: DataFrame, target_input_rows: int,
 
     out = scratch_dir("spark_stream_out_")
     ckpt = scratch_dir("spark_ckpt_")
-    atexit.register(shutil.rmtree, out, ignore_errors=True)
     spark = stream_df.sparkSession
 
     def overwrite_epoch(batch_df: DataFrame, _epoch_id: int) -> None:
@@ -500,7 +506,6 @@ def epoch_parquet_sink(spark: SparkSession, batch_fn):
     :func:`run_to_parquet`. ``read()`` returns the union of all
     epochs' results as a batch scan (epoch column dropped)."""
     out = scratch_dir("spark_stream_out_")
-    atexit.register(shutil.rmtree, out, ignore_errors=True)
     return (epoch_writer(out, batch_fn),
             lambda: spark.read.parquet(out).drop("epoch_id"))
 
@@ -557,15 +562,19 @@ def chunk_to_dir_ordered(df: DataFrame, n_chunks: int, order_col: str = "ts",
     trailing no-data micro-batch).
     """
     out = scratch_dir("spark_replay_")
+    # staged INSIDE out (an underscore dir the file source skips), so
+    # the scratch dir's exit-time removal covers a failed write too
+    tmp = os.path.join(out, "_tmp")
     df.repartitionByRange(n_chunks, F.col(order_col)).sortWithinPartitions(
         order_col
-    ).write.mode("overwrite").parquet(out + "_tmp")
-    n = _place_parts(out + "_tmp", out, 0)
+    ).write.mode("overwrite").parquet(tmp)
+    n = _place_parts(tmp, out, 0)
     if sentinel is not None:
+        tmp = os.path.join(out, "_sentinel")
         sentinel.repartitionByRange(
             n_sentinel_chunks, F.col(order_col)
-        ).write.mode("overwrite").parquet(out + "_sentinel")
-        _place_parts(out + "_sentinel", out, n)
+        ).write.mode("overwrite").parquet(tmp)
+        _place_parts(tmp, out, n)
     return out
 
 

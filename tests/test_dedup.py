@@ -216,7 +216,9 @@ def test_dedup_keep_best_semantics(spark):
 def test_incremental_dedup_equals_cross_side_pairs(spark):
     """Batch-vs-corpus dedup finds exactly the cross-side subset of the
     full-corpus exact-jaccard pairs (the new x corpus join loses nothing
-    the full pairwise run would find between the two sides)."""
+    the full pairwise run would find between the two sides) — both when
+    the corpus side is derived inline from ``corpus_docs`` and when it
+    comes from a prebuilt :func:`build_dedup_index`."""
     from pyspark.sql import functions as F
 
     from spark_streaming_spark.operators import dedup as DD
@@ -224,10 +226,15 @@ def test_incremental_dedup_equals_cross_side_pairs(spark):
     docs = load_table(spark, SF_DIR, "documents")
     new = docs.filter(F.col("doc_id") % 10 == 0)
     corpus = docs.filter(F.col("doc_id") % 10 != 0)
-    inc = {
-        (r.new_doc, r.corpus_doc, round(r.jaccard, 9))
-        for r in DD.incremental_minhash_dedup(new, corpus).collect()
-    }
+
+    def rows(df):
+        return {(r.new_doc, r.corpus_doc, round(r.jaccard, 9))
+                for r in df.collect()}
+
+    inc = rows(DD.incremental_minhash_dedup(new, corpus))
+    index = DD.build_dedup_index(corpus)
+    assert rows(DD.incremental_minhash_dedup(new, corpus_index=index)) \
+        == inc
     full = {
         (a, b, round(j, 9))
         for a, b, j in (
@@ -348,3 +355,105 @@ def test_containment_blocking_respects_max_df(spark):
     docs = spark.createDataFrame(rows, "doc_id long, text string")
     assert DD.containment_pairs(docs, max_df=0).count() == 0
     assert DD.containment_pairs(docs).count() == 2
+
+
+def _incremental_split(spark):
+    from pyspark.sql import functions as F
+
+    docs = load_table(spark, SF_DIR, "documents")
+    return (docs.filter(F.col("doc_id") % 10 == 0).select("doc_id", "text"),
+            docs.filter(F.col("doc_id") % 10 != 0))
+
+
+def test_index_bands_equal_column_spelling(spark):
+    """The SQL-text MinHash kernel must produce the index bands
+    bit-for-bit as the Column spelling it replaced: per doc, the min
+    over its distinct shingles of ``F.xxhash64(sh, F.lit(i))`` for 16
+    seeds, then per band ``F.xxhash64`` of that band's 4 signature
+    rows, exploded as (doc_id, band, bh)."""
+    from pyspark.sql import functions as F
+
+    from spark_streaming_spark.functions.text import shingles
+
+    _new, corpus = _incremental_split(spark)
+    bands, _arrs = DD.build_dedup_index(corpus)
+    sh = corpus.select(
+        "doc_id", F.explode(shingles("text", 3)).alias("sh")).distinct()
+    sig = sh.groupBy("doc_id").agg(*[
+        F.min(F.xxhash64(F.col("sh"), F.lit(i))).alias(f"h{i}")
+        for i in range(16)
+    ]).select("doc_id", F.array(*[f"h{i}" for i in range(16)]).alias("sig"))
+    ref = sig.select("doc_id", F.explode(F.array(*[
+        F.struct(F.lit(b).alias("band"),
+                 F.xxhash64(*[F.col("sig").getItem(b * 4 + r)
+                              for r in range(4)]).alias("bh"))
+        for b in range(4)
+    ])).alias("b")).select("doc_id", "b.band", "b.bh")
+    assert bands.schema.simpleString() == ref.schema.simpleString()
+    got = sorted(tuple(r) for r in bands.collect())
+    assert got == sorted(tuple(r) for r in ref.collect())
+    assert len(got) == 4 * corpus.count()
+
+
+def test_incremental_dedup_plan_build_py4j_budget(spark):
+    """Building one micro-batch's dedup plan must stay a handful of
+    py4j round trips: the kernel, band generator and Jaccard are SQL
+    text applied by DataFrame methods, not Column trees rebuilt per
+    call (the Column spelling cost ~2,240 round trips per batch)."""
+    from py4j.java_gateway import GatewayClient
+
+    new, corpus = _incremental_split(spark)
+    index = DD.build_dedup_index(corpus)
+    calls = [0]
+    send = GatewayClient.send_command
+
+    def counted(self, *args, **kwargs):
+        calls[0] += 1
+        return send(self, *args, **kwargs)
+
+    GatewayClient.send_command = counted
+    try:
+        DD.incremental_minhash_dedup(new, corpus_index=index)
+    finally:
+        GatewayClient.send_command = send
+    assert 0 < calls[0] <= 300, calls[0]
+
+
+def _ancestors(tree: str, line_no: int) -> list[str]:
+    """Node names on the path from ``line_no`` up to the root of a
+    physical-plan tree string (children sit one ``+- ``/``:- ``
+    marker deeper than their parent)."""
+    import re
+
+    def depth(line):
+        m = re.search(r"[+:]- ", line)
+        return 0 if m is None else m.start() // 3 + 1
+
+    def name(line):
+        return re.sub(r"^[\s:+|-]*(\*\(\d+\) )?", "", line).split(" ")[0]
+
+    lines = tree.splitlines()
+    out, want = [], depth(lines[line_no]) - 1
+    for line in reversed(lines[:line_no]):
+        if want >= 0 and depth(line) == want:
+            out.append(name(line))
+            want -= 1
+    return out
+
+
+def test_incremental_dedup_plan_never_regroups_index_arrays(spark):
+    """Per micro-batch the corpus side is only SCANNED: no Exchange and
+    no aggregate may sit above the index's shingle-array scan (the
+    small colliding-pair side is broadcast into it instead)."""
+    new, corpus = _incremental_split(spark)
+    index = DD.build_dedup_index(corpus)
+    plan = DD.incremental_minhash_dedup(new, corpus_index=index)
+    tree = plan._jdf.queryExecution().executedPlan().treeString()
+    scans = [i for i, line in enumerate(tree.splitlines())
+             if "Scan ExistingRDD" in line and "shs#" in line]
+    assert len(scans) == 1, tree
+    above = _ancestors(tree, scans[0])
+    assert above and above[-1] == "AdaptiveSparkPlan", (above, tree)
+    assert not [n for n in above
+                if "Exchange" in n or "Aggregate" in n], (above, tree)
+    assert any("BroadcastHashJoin" in n for n in above), (above, tree)

@@ -1400,3 +1400,47 @@ def test_replay_input_cache_has_one_owner(tmp_path):
     assert sorted(w for _, w in _replay_cache_spellings(copy)) == [
         "_CHUNKS_READY", "_CHUNK_CACHE[...]", "_CHUNK_CACHE[...]",
         "_persistent_cache_dir", "_publish_chunks"]
+
+
+def test_replay_scratch_dirs_removed_at_exit(tmp_path):
+    """No replay scratch dir outlives its process: a child process
+    builds every chunk layout (round-robin, event-time ordered with
+    sentinels, fixed cutoffs) and a checkpoint dir, then exits without
+    cleaning up — none of them may survive. A build published into the
+    persistent chunk cache must survive, marked ready."""
+    import json
+    import subprocess
+    import sys
+
+    script = r'''
+import json, sys
+import __spark_entry__ as E
+from spark_streaming_spark.session import get_spark
+from spark_streaming_spark.streaming import replay
+
+replay._SCRATCH_BASE, E._CHUNK_CACHE_BASE = sys.argv[1], sys.argv[2]
+spark = get_spark("scratch_exit", master="local[1]", shuffle_partitions=1)
+df = spark.range(40).selectExpr(
+    "id AS event_id", "timestamp_seconds(1704067200 + id * 86400) AS ts")
+made = [
+    replay.chunk_to_dir(df, 2),
+    replay.chunk_to_dir_ordered(df, 2, sentinel=df.limit(2)),
+    replay.chunk_to_dir_by_cutoffs(df, ["2024-01-20"]),
+    replay.scratch_dir("spark_ckpt_"),
+]
+cached = E._chunked_table(spark, "no_sf", "scratch_exit", 2, df=df)
+print(json.dumps({"made": made, "cached": cached}))
+'''
+    scratch, cache = tmp_path / "scratch", tmp_path / "cache"
+    scratch.mkdir()
+    root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    env = dict(os.environ, SPARK_DRIVER_MEMORY="512m", PYTHONPATH=root)
+    proc = subprocess.run(
+        [sys.executable, "-c", script, str(scratch), str(cache)],
+        capture_output=True, text=True, timeout=300, env=env)
+    assert proc.returncode == 0, proc.stderr[-3000:]
+    out = json.loads(proc.stdout.strip().splitlines()[-1])
+    assert all(d.startswith(str(scratch)) for d in out["made"])
+    assert not [d for d in out["made"] if os.path.exists(d)]
+    assert os.listdir(scratch) == []
+    assert os.path.exists(os.path.join(out["cached"], "_CHUNKS_READY"))
